@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def funnel_counts(
@@ -3468,7 +3469,9 @@ def _markov_chain(
     per-round long sum Σ πᵢ·pᵢⱼ is integer (order-free), and
     long→double cast, /1e6, +0.5, floor are the identical IEEE-754
     ops in CPython and the JVM. States with no incoming edge keep a
-    mass-0 row, exactly the old left-join+coalesce re-anchoring.
+    mass-0 row, exactly the oracle's left-join+coalesce re-anchoring;
+    so does the NULL state (an event with a NULL type), because that
+    re-anchoring joins on state and a SQL join never matches NULL.
 
     NOTE: collecting pmat makes this operator EAGER at DataFrame-build
     time (one bounded Spark job over the pair build; the result is
@@ -3512,7 +3515,7 @@ def _markov_chain(
         for frm, to, p in cells:
             acc[to] += pi[frm] * p
         pi = {
-            s: int(math.floor(float(acc[s]) / 1_000_000.0 + 0.5))
+            s: 0 if s is None else int(math.floor(float(acc[s]) / 1_000_000.0 + 0.5))
             for s in states
         }
     return cells, states, pi
@@ -3540,12 +3543,17 @@ def markov_stationary(
     engines replay the identical integer-in/integer-out trajectory,
     the same per-round re-synchronization kmeans_fit uses. Fixed
     ``iterations`` (8 rounds contract a 5-state chain far below the
-    micro grid).
+    micro grid). A NULL event type is a state that receives no mass.
 
-    Scale shape: ONE user-keyed exchange builds the transition pairs
-    (the corpus-sized step); everything after runs on the |types|²
-    metadata matrix — each iteration one k²-row join + k-row agg.
-    Returns ``(state, pi_micro, p_self_micro)`` ordered by state."""
+    EAGER: building the DataFrame runs one Spark job — one user-keyed
+    exchange pairs consecutive events (the corpus-sized step) and the
+    (from_type, to_type, p_micro) transition cells are collected to
+    the driver. That collect is bounded by |types|² rows, so the
+    state column must be low-cardinality. The iterations then run on
+    the driver over exact Python integers, and the result is a small
+    local relation. Nothing is memoized: each call re-runs the job.
+    Returns ``(state, pi_micro, p_self_micro)`` ordered by state; the
+    ``state`` column keeps ``type_col``'s type."""
     cells, states, pi = _markov_chain(
         df, user_col, ts_col, type_col, id_col, iterations
     )
@@ -3555,9 +3563,14 @@ def markov_stationary(
     # nothing broadcasts) — 3 exchanges of overhead for |types| rows
     self_p = {frm: p for frm, to, p in cells if frm == to}
     rows = [(s, pi[s], self_p.get(s, 0)) for s in states]
-    return df.sparkSession.createDataFrame(
-        rows, schema="state string, pi_micro long, p_self_micro long"
-    ).orderBy("state")
+    schema = T.StructType(
+        [
+            T.StructField("state", df.schema[type_col].dataType),
+            T.StructField("pi_micro", T.LongType()),
+            T.StructField("p_self_micro", T.LongType()),
+        ]
+    )
+    return df.sparkSession.createDataFrame(rows, schema).orderBy("state")
 
 
 def hhi_concentration(
@@ -3713,10 +3726,15 @@ def markov_entropy_rate(
     per-state integer sum (the BM25 grid-vs-ulp argument); the rate
     is Σ_i π_i·H_i on exact integers with one final floored division.
 
-    Scale shape: the one user-keyed exchange from the pair build;
-    everything after is |types|²-metadata. Returns one row per state
-    ``(state, pi_micro, h_cond_micro)`` plus the 'RATE' rollup row
-    carrying the chain's entropy rate in h_cond_micro."""
+    EAGER, like markov_stationary: building the DataFrame runs the
+    same Spark job (one user-keyed exchange, then a collect of at
+    most |types|² transition cells), iterates π on the driver, and
+    runs a second small job over those collected cells for the
+    −p·ln(p) terms (JVM ``log``, the value the oracle matches). Returns
+    one row per state ``(state, pi_micro, h_cond_micro)`` plus the
+    'RATE' rollup row carrying the chain's entropy rate in
+    h_cond_micro; because of that row, ``state`` is a string column
+    and ``type_col`` must be one too."""
     import math
 
     cells, states, pi = _markov_chain(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from denormalized_spark.operators._bucketing import (
     bucket_ownership_counts,
+    bucket_pairs,
     capped_bucket_collect,
 )
 
@@ -146,13 +147,6 @@ def shingle_hashes(
         return F.array_distinct(F.when(sz >= n, grams).otherwise(short))
 
     return eval_once(F.transform(toks, token_hash32), _build)
-
-
-def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact deduplication. Hash-groupBy semantics: one survivor per
-    distinct key. One shuffle on the dedup key; at scale prefer
-    pre-partitioning writes by the same key."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
 
 
 def exact_dedup_canonical(
@@ -292,15 +286,8 @@ def lsh_candidate_pairs(
     buckets = capped_bucket_collect(
         banded, ["band", "band_key"], id_col, "_ids", max_bucket_size
     )
-    ids = F.col("_ids")
-    pair_arrays = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.greatest(F.size(ids) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    pair_arrays = bucket_pairs(
+        F.col("_ids"), lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
     )
     return (
         buckets.select(F.explode(pair_arrays).alias("p"))
@@ -1611,15 +1598,8 @@ def winnow_pairs(
     buckets = capped_bucket_collect(
         dh, ["fp_hash"], id_col, "_ids", max_bucket_size
     )
-    ids = F.col("_ids")
-    pair_arrays = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.greatest(F.size(ids) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    pair_arrays = bucket_pairs(
+        F.col("_ids"), lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
     )
     return (
         buckets.select(F.explode(pair_arrays).alias("_p"))
@@ -1673,22 +1653,14 @@ def snm_candidate_pairs(
         F.col("_rn").alias("rn"), F.col("_id").alias("id"), F.col("_k").alias("k")
     )
     buckets = two.groupBy("_blk").agg(F.array_sort(F.collect_list(member)).alias("_ms"))
-    ms = F.col("_ms")
-    pair_arrays = F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.filter(
-                F.transform(
-                    F.slice(ms, i + 2, F.greatest(F.size(ms) - i - 1, F.lit(0))),
-                    lambda y: F.struct(
-                        x["id"].alias("id_a"), y["id"].alias("id_b"),
-                        x["k"].alias("key_a"), y["k"].alias("key_b"),
-                        (y["rn"] - x["rn"]).alias("_d"),
-                    ),
-                ),
-                lambda p: (p["_d"] >= 1) & (p["_d"] <= w1),
-            ),
-        )
+    pair_arrays = bucket_pairs(
+        F.col("_ms"),
+        lambda x, y: F.struct(
+            x["id"].alias("id_a"), y["id"].alias("id_b"),
+            x["k"].alias("key_a"), y["k"].alias("key_b"),
+            (y["rn"] - x["rn"]).alias("_d"),
+        ),
+        keep=lambda p: (p["_d"] >= 1) & (p["_d"] <= w1),
     )
     return (
         buckets.select(F.explode(pair_arrays).alias("_p"))

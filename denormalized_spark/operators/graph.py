@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from denormalized_spark.operators._bucketing import bucket_pairs, capped_bucket_collect
+
 
 def pagerank(
     edges: DataFrame,
@@ -212,21 +214,12 @@ def covisitation_edges(
     as an over-cap LSH bucket; oracles mirror with HAVING BETWEEN).
     Pair fan-out is therefore ≤ cap²/2 per item, never
     corpus-quadratic. Output edges are distinct."""
-    from denormalized_spark.operators._bucketing import capped_bucket_collect
-
     iu = df.select(F.col(item_col).alias("_it"), F.col(user_col).alias("_u")).distinct()
     buckets = capped_bucket_collect(
         iu, ["_it"], F.col("_u"), "_us", max_users_per_item
     )
-    us = F.col("_us")
-    pair_arrays = F.flatten(
-        F.transform(
-            us,
-            lambda x, i: F.transform(
-                F.slice(us, i + 2, F.greatest(F.size(us) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
+    pair_arrays = bucket_pairs(
+        F.col("_us"), lambda x, y: F.struct(x.alias("u"), y.alias("v"))
     )
     return (
         buckets.select(F.explode(pair_arrays).alias("_p"))
@@ -423,8 +416,6 @@ def item_cf_similarity(
     item-keyed; the cosine is one integer co-count over a pinned
     √·√ product, milli-floored. Returns
     ``(item_a, item_b, cocount, n_a, n_b, cosine_milli)``."""
-    from denormalized_spark.operators._bucketing import capped_bucket_collect
-
     iu = df.select(
         F.col(user_col).alias("_u"), F.col(item_col).alias("_it")
     ).distinct()
@@ -432,15 +423,8 @@ def item_cf_similarity(
     buckets = capped_bucket_collect(
         iu, ["_u"], F.col("_it"), "_its", max_items_per_user
     )
-    its = F.col("_its")
-    pair_arrays = F.flatten(
-        F.transform(
-            its,
-            lambda x, i: F.transform(
-                F.slice(its, i + 2, F.greatest(F.size(its) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("item_a"), y.alias("item_b")),
-            ),
-        )
+    pair_arrays = bucket_pairs(
+        F.col("_its"), lambda x, y: F.struct(x.alias("item_a"), y.alias("item_b"))
     )
     pairs = (
         buckets.select(F.explode(pair_arrays).alias("_p"))

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from denormalized_spark.operators._bucketing import bucket_pairs, capped_bucket_collect
+
 IMAGE_META = T.StructType(
     [
         T.StructField("mime", T.StringType()),
@@ -317,29 +319,17 @@ def _hash_band_pairs(
         ).alias("_m"),
         F.posexplode(bands).alias("band", "key"),
     )
-    buckets = (
-        banded.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list("_m")).alias("_ms"))
-        .filter(F.size("_ms") >= 2)
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("_ms") <= max_bucket_size)
-    ms = F.col("_ms")
-    pair_arrays = F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.transform(
-                F.slice(ms, i + 2, F.greatest(F.size(ms) - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x["_i"].alias("id_a"),
-                    y["_i"].alias("id_b"),
-                    (
-                        F.bit_count(x["_hi"].bitwiseXOR(y["_hi"]))
-                        + F.bit_count(x["_lo"].bitwiseXOR(y["_lo"]))
-                    ).alias("hamming"),
-                ),
-            ),
-        )
+    buckets = capped_bucket_collect(banded, ["band", "key"], "_m", "_ms", max_bucket_size)
+    pair_arrays = bucket_pairs(
+        F.col("_ms"),
+        lambda x, y: F.struct(
+            x["_i"].alias("id_a"),
+            y["_i"].alias("id_b"),
+            (
+                F.bit_count(x["_hi"].bitwiseXOR(y["_hi"]))
+                + F.bit_count(x["_lo"].bitwiseXOR(y["_lo"]))
+            ).alias("hamming"),
+        ),
     )
     return (
         buckets.select(F.explode(pair_arrays).alias("p"))

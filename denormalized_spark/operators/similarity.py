@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from denormalized_spark.operators._bucketing import (
+    bucket_pairs,
     bucket_pin_partitions,
     capped_bucket_collect,
 )
@@ -66,72 +67,6 @@ def cosine_topk(
     return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
 
 
-def cosine_topk_arrow(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """:func:`cosine_topk` scored in a vectorized Pandas UDF (numpy
-    matmul over Arrow batches) instead of expression-tree folds.
-
-    The expression path wins at small dims (stays in codegen, zero
-    Python workers); this path wins at wide dims (≥~512) where one
-    BLAS matmul per Arrow batch beats ~dim interpreted HOF ops per
-    row. Same plan shape otherwise: scan → per-batch score →
-    TakeOrderedAndProject. numpy's pairwise summation makes scores
-    differ from the fold path in the last ulps — rank order is stable
-    (unit-tested), but hash-exact oracles should use the expression
-    path."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
-
-    def _kernel(vecs):
-        m = np.asarray(vecs.tolist(), dtype=np.float64)
-        sims = (m @ q) / (np.linalg.norm(m, axis=1) * qn)
-        return pd.Series(sims)
-
-    # `from __future__ import annotations` stringifies hints, which
-    # pandas_udf's signature inspection can't resolve — set real ones
-    _kernel.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    _score = pandas_udf(_kernel, returnType="double")
-
-    scored = df.select(F.col(id_col), _score(F.col(vec_col)).alias("cosine_sim"))
-    return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
-
-
-def cosine_self_join_topk(
-    df: DataFrame,
-    k: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """For every vector, its top-k nearest other vectors (brute force
-    all-pairs). Correctness baseline only: O(n²) — at scale use
-    ``lsh_bucketed_neighbors``. The per-id top-k is a window rank
-    (per-partition heap would need an RDD; rank after AQE-coalesced
-    join is acceptable because the join output, not the rank, is the
-    bottleneck)."""
-    from pyspark.sql import Window
-
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-    pairs = a.join(b, F.col("id_a") != F.col("id_b")).select(
-        "id_a", "id_b", cosine(F.col("v_a"), F.col("v_b")).alias("cosine_sim")
-    )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cosine_sim"), F.asc("id_b"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .drop("rnk")
-    )
-
-
 def hyperplane_components(plane_idx: int, dim: int) -> list[float]:
     """Deterministic pseudo-random hyperplane in [-0.5, 0.5]^dim:
     component j = md5("p<i>:<j>") -> first 15 hex chars -> 60-bit uint
@@ -148,39 +83,23 @@ def hyperplane_components(plane_idx: int, dim: int) -> list[float]:
     return comps
 
 
-def _hyperplane(plane_idx: int, dim: int) -> Column:
-    return F.array(*[F.lit(c) for c in hyperplane_components(plane_idx, dim)])
-
-
-def lsh_signature(
-    vec_col: Column, dim: int, num_planes: int = 8, table: int = 0
-) -> Column:
-    """b-bit random-hyperplane signature as a long. ``table`` offsets
-    the plane indices so multiple independent hash tables (the
-    OR-construction that buys recall) draw disjoint hyperplanes."""
-    return F.element_at(
-        lsh_signature_arrays(vec_col, dim, num_planes, num_tables=1, first_table=table),
-        1,
-    )
-
-
 def lsh_signature_arrays(
     vec_col: Column,
     dim: int,
     num_planes: int = 8,
     num_tables: int = 1,
-    first_table: int = 0,
 ) -> Column:
     """ALL tables' hyperplane signatures as one array<long> — a single
     nested-HOF expression instead of ``num_tables × num_planes``
-    separate fold chains.
+    separate fold chains. Table ``t`` draws planes
+    ``t·num_planes … t·num_planes + num_planes − 1`` of
+    :func:`hyperplane_components`, so tables are independent draws.
 
-    Value-identical to folding :func:`lsh_signature` per table: each
-    plane's dot product is the same sequential zip_with/aggregate fold
-    (identical IEEE op order), the bit is ``1 << i`` exactly
-    (shiftleft), and the per-table bit sum is a sequential integer
-    fold — bit-for-bit the arithmetic the per-plane form (and every
-    oracle's unrolled SQL literal) evaluates.
+    Bit-for-bit the arithmetic every oracle's unrolled SQL literal
+    evaluates: each plane's dot product is a sequential
+    zip_with/aggregate fold (identical IEEE op order), the bit is
+    ``1 << i`` exactly (shiftleft), and the per-table bit sum is a
+    sequential integer fold.
 
     Why this form: Catalyst analysis/optimization walks the expression
     tree per pass, and 32 independent zip_with+aggregate chains (8
@@ -197,9 +116,7 @@ def lsh_signature_arrays(
                     F.array(
                         *[
                             F.lit(c)
-                            for c in hyperplane_components(
-                                (first_table + t) * num_planes + i, dim
-                            )
+                            for c in hyperplane_components(t * num_planes + i, dim)
                         ]
                     )
                     for i in range(num_planes)
@@ -245,7 +162,6 @@ def lsh_bucketed_neighbors(
     vec_col: str = "embedding",
     num_tables: int = 1,
     max_bucket_size: int | None = None,
-    salt_target_pairs: int | None = None,
 ) -> DataFrame:
     """Candidate neighbor pairs sharing an LSH bucket, scored exactly.
 
@@ -265,20 +181,7 @@ def lsh_bucketed_neighbors(
     for under-planed configs and degenerate data (a constant embedding
     region puts a whole corpus in one bucket): oversized buckets are
     dropped before pair generation, bounding memory; pairs inside them
-    can still surface through the other tables.
-
-    ``salt_target_pairs`` (opt-in) splits each bucket's anchor range
-    into contiguous sub-ranges of ≈ that many pairs and redistributes
-    them on (tbl, bucket, range-start) before scoring — guide-§2.5
-    work salting for corpora whose bucket-size skew leaves the
-    quadratic scoring stage straggling (AQE cannot split a single hot
-    key). Output is bit-identical (proven by collected-value equality
-    at 2 SFs + 3 edge configs). Default OFF: at bench scale the extra
-    exchange costs more than the ~2.4× pair skew it recovers
-    (interleaved r15 A/B, 8 alternating runs/arm: sim_lsh_buckets
-    0.69→0.82–0.97 s, dedup_embedding_neardup ≈wash); enable it when
-    the scoring stage is minutes long and straggler-bound, where the
-    one extra exchange amortizes."""
+    can still surface through the other tables."""
     # one nested-HOF expression computes every table's signature (see
     # lsh_signature_arrays: same arithmetic, ~order-of-magnitude less
     # Catalyst work than per-plane fold chains); posexplode's position
@@ -309,104 +212,24 @@ def lsh_bucketed_neighbors(
     # serialize the scoring onto a few partitions (see _bucketing).
     buckets = capped_bucket_collect(
         sig, ["tbl", "bucket"], member, "_ms", max_bucket_size,
-        # when pair-range salting redistributes the scoring (below),
-        # the collect itself is cheap — let AQE coalesce it and let
-        # the salt exchange do the spreading; unsalted, the pin keeps
-        # the quadratic scoring off a handful of AQE-coalesced tasks
-        num_partitions=None if salt_target_pairs else bucket_pin_partitions(sig),
+        num_partitions=bucket_pin_partitions(sig),
     )
     # score INSIDE the pair generation: the dedup shuffle then carries
     # narrow (id_a, id_b, cos) rows, not two 64-float vectors, and the
     # min_cosine filter prunes before the exchange. A pair found in k
     # tables is scored k times (k ≤ num_tables, dupes only) — far
     # cheaper than shuffling vectors.
-    def _pairs_over(arr: Column, n_anchors: Column | None = None) -> Column:
-        """Anchor×suffix pair structs with the exact cosine scored
-        inline; ``n_anchors`` limits anchors to the array's first
-        elements (the salted form) — the pair SET and every score are
-        the expressions of the unsalted full-array form verbatim."""
-        anchors = arr if n_anchors is None else F.slice(arr, 1, n_anchors)
-        return F.flatten(
-            F.transform(
-                anchors,
-                lambda x, i: F.transform(
-                    F.slice(arr, i + 2, F.greatest(F.size(arr) - i - 1, F.lit(0))),
-                    lambda y: F.struct(
-                        x["mid"].alias("id_a"),
-                        y["mid"].alias("id_b"),
-                        (dot(x["mvec"], y["mvec"]) / (x["mnorm"] * y["mnorm"])).alias(
-                            "cosine_sim"
-                        ),
-                    ),
-                ),
-            )
-        )
-
-    ms = F.col("_ms")
-    if salt_target_pairs:
-        # Hot-bucket pair-range salting (guide §2.5): a bucket of n
-        # members costs n(n−1)/2 dot products downstream, so the pinned
-        # (tbl, bucket) shuffle still lands 2–3× more PAIR work on some
-        # partitions than others (hash placement is per bucket; work is
-        # quadratic in bucket size). Split each bucket's ANCHOR range
-        # into contiguous sub-ranges of ≈``salt_target_pairs`` pairs —
-        # boundaries from the inverse of the triangular pair count
-        # (placement-only float math: the ranges partition [0, n−1)
-        # whatever the rounding) — and redistribute on (tbl, bucket,
-        # range-start). Each salt row carries only the member-array
-        # SUFFIX its anchors pair against, so the extra exchange ships
-        # O(split × bucket) bytes, proportional to the pair work being
-        # moved. Pair set and scores are bit-identical: anchors i∈
-        # [lo, hi) pair with members[i+1:], exactly the unsalted
-        # enumeration, and the cap contract is applied before any
-        # splitting. The whole-bucket cap semantics are untouched.
-        n = F.size(ms)
-        npairs = (n * (n - F.lit(1))).cast("double") / F.lit(2.0)
-        sb = F.least(
-            F.greatest(
-                F.ceil(npairs / F.lit(float(salt_target_pairs))).cast("int"),
-                F.lit(1),
-            ),
-            n - F.lit(1),
-        )
-        tn = (n * 2 - F.lit(1)).cast("double")
-
-        def _lo(s: Column) -> Column:
-            # smallest anchor index whose preceding pair count reaches
-            # s/sb of the bucket's total: inverse of i(2n−1−i)/2
-            return F.floor(
-                (
-                    tn
-                    - F.sqrt(
-                        tn * tn
-                        - F.lit(8.0) * npairs * s.cast("double") / sb.cast("double")
-                    )
-                )
-                / F.lit(2.0)
-            ).cast("int")
-
-        ranges = F.transform(
-            F.sequence(F.lit(0), sb - F.lit(1)),
-            lambda s: F.struct(_lo(s).alias("lo"), _lo(s + 1).alias("hi")),
-        )
-        salted = (
-            buckets.select("tbl", "bucket", "_ms", F.explode(ranges).alias("_r"))
-            .select(
-                "tbl",
-                "bucket",
-                F.col("_r.lo").alias("_lo"),
-                (F.col("_r.hi") - F.col("_r.lo")).alias("_na"),
-                F.slice(ms, F.col("_r.lo") + 1, F.size(ms) - F.col("_r.lo")).alias("_sfx"),
-            )
-            .repartition(bucket_pin_partitions(df), "tbl", "bucket", "_lo")
-        )
-        out = salted.select(
-            F.explode(_pairs_over(F.col("_sfx"), F.col("_na"))).alias("p")
-        ).select("p.id_a", "p.id_b", "p.cosine_sim")
-    else:
-        out = buckets.select(F.explode(_pairs_over(ms)).alias("p")).select(
-            "p.id_a", "p.id_b", "p.cosine_sim"
-        )
+    pairs = bucket_pairs(
+        F.col("_ms"),
+        lambda x, y: F.struct(
+            x["mid"].alias("id_a"),
+            y["mid"].alias("id_b"),
+            (dot(x["mvec"], y["mvec"]) / (x["mnorm"] * y["mnorm"])).alias("cosine_sim"),
+        ),
+    )
+    out = buckets.select(F.explode(pairs).alias("p")).select(
+        "p.id_a", "p.id_b", "p.cosine_sim"
+    )
     if min_cosine > 0:
         out = out.filter(F.col("cosine_sim") >= min_cosine)
     return out.dropDuplicates(["id_a", "id_b"])

@@ -14,6 +14,8 @@ with a ``text`` column.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -586,6 +588,50 @@ def bpe_encode_counts(
     )
 
 
+#: Java regex ``\s`` (non-unicode) is exactly this class — Python's
+#: ``\s`` would also split on unicode whitespace and diverge from tokens()
+_WS = re.compile("[ \\t\\n\\x0b\\f\\r]+")
+
+
+def _bpe_words(text: str | None) -> list[str]:
+    """:func:`tokens` in Python, minus words holding the \\x01/\\x02
+    sentinels (:func:`bpe_train`'s vocabulary contract)."""
+    return [
+        w for w in _WS.split(text or "") if w and "\x01" not in w and "\x02" not in w
+    ]
+
+
+def _bpe_word_kernel(merges: list[tuple[str, str]], finish):
+    """The BPE word encoder of the Arrow paths: ``w ↦ finish(pieces)``,
+    where the pieces come from applying ``merges`` in RANK ORDER, each a
+    greedy left-to-right pass — the semantics of
+    :func:`bpe_encode_counts`' fold chain. A merge (a, b) can only fire
+    when a+b is a substring of the word, so that O(len) prefilter skips
+    almost all of a large table. Results are cached per distinct word
+    for the life of the returned function (one partition's batches)."""
+    merge_list = [(a, b, a + b) for a, b in merges]
+    cache = {}
+
+    def encode(w: str):
+        v = cache.get(w)
+        if v is None:
+            syms = list(w)
+            for a, b, ab in merge_list:
+                if ab not in w or len(syms) < 2:
+                    continue
+                out: list[str] = []
+                for s in syms:
+                    if out and out[-1] == a and s == b:
+                        out[-1] = ab
+                    else:
+                        out.append(s)
+                syms = out
+            v = cache[w] = finish(syms)
+        return v
+
+    return encode
+
+
 def bpe_encode_table(
     df: DataFrame,
     merges: list[tuple[str, str]],
@@ -603,23 +649,17 @@ def bpe_encode_table(
     vocabularies; this is the path whose cost does NOT grow the
     expression tree with the vocabulary.
 
-    Why it scales where the chain can't: per word only the merges
-    whose merged string occurs IN the word run (two adjacent symbols
-    are contiguous substrings, so pair (a,b) can only fire if a+b is
-    a substring — an O(len) prefilter skips ~all of a large table),
-    and encodings are cached per DISTINCT word for the worker's
-    lifetime, so per-batch cost is bounded by the batch's new-vocab
-    mass, not its token count (the Zipf head is encoded once per
-    executor). Plan: pure mapInPandas projection — no shuffle, Arrow
-    both ways, embarrassingly parallel at any corpus size.
+    Why it scales where the chain can't: the word kernel
+    (:func:`_bpe_word_kernel`) runs only the merges whose merged
+    string occurs in the word and caches per DISTINCT word, so
+    per-batch cost is bounded by the batch's new-vocab mass, not its
+    token count. Plan: pure mapInPandas projection — no shuffle,
+    Arrow both ways, embarrassingly parallel at any corpus size.
 
     Words containing the \\x01/\\x02 sentinels are excluded, matching
     :func:`bpe_train`'s vocabulary contract."""
-    import re
-
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    merge_list = [(a, b, a + b) for a, b in merges]
     out_schema = StructType(
         [
             df.schema[id_col],
@@ -628,40 +668,14 @@ def bpe_encode_table(
             StructField("n_bpe_tokens", IntegerType(), False),
         ]
     )
-    # Java regex \s (non-unicode) is exactly this class — Python's \s
-    # would also split on unicode whitespace and diverge from tokens()
-    ws = re.compile("[ \\t\\n\\x0b\\f\\r]+")
-
     def _encode_batches(batches):
         import pandas as pd
 
-        cache: dict[str, int] = {}
-
-        def word_tokens(w: str) -> int:
-            n = cache.get(w)
-            if n is None:
-                syms = list(w)
-                for a, b, ab in merge_list:
-                    if ab not in w or len(syms) < 2:
-                        continue
-                    out: list[str] = []
-                    for s in syms:
-                        if out and out[-1] == a and s == b:
-                            out[-1] = ab
-                        else:
-                            out.append(s)
-                    syms = out
-                n = cache[w] = len(syms)
-            return n
-
+        word_tokens = _bpe_word_kernel(merges, len)
         for pdf in batches:
             ids, n_words, n_chars, n_toks = [], [], [], []
             for i, text in zip(pdf[id_col], pdf[text_col]):
-                words = [
-                    w
-                    for w in ws.split(text or "")
-                    if w and "\x01" not in w and "\x02" not in w
-                ]
+                words = _bpe_words(text)
                 ids.append(i)
                 n_words.append(len(words))
                 n_chars.append(sum(len(w) for w in words))
@@ -752,12 +766,9 @@ def bpe_tokenize(
     (sorted alphabet then merge ranks). Characters outside
     ``alphabet`` map to ``unk_id``.
 
-    Same Arrow-batched ``mapInPandas`` kernel shape as
-    :func:`bpe_encode_table` — and the same reasons it scales: per
-    word only merges whose merged string is a substring run, and the
-    piece-id sequence is cached per DISTINCT word for the worker's
-    lifetime, so per-batch cost is bounded by new-vocab mass, not
-    token count. Pure projection: no shuffle, embarrassingly parallel;
+    Same Arrow-batched ``mapInPandas`` shape and word kernel as
+    :func:`bpe_encode_table`, so it scales the same way. Pure
+    projection: no shuffle, embarrassingly parallel;
     the ids column is the only wide output and it is exactly the
     payload a shard writer must move anyway.
 
@@ -765,8 +776,6 @@ def bpe_tokenize(
     :func:`bpe_train`'s vocabulary contract (reference parity: the
     reference has no tokenizer induction at all — this extends its
     text surface per the LLM-pipeline brief)."""
-    import re
-
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,
@@ -774,7 +783,6 @@ def bpe_tokenize(
         StructType,
     )
 
-    merge_list = [(a, b, a + b) for a, b in merges]
     vocab = bpe_vocab(merges, alphabet)
     out_schema = StructType(
         [
@@ -783,37 +791,19 @@ def bpe_tokenize(
             StructField("token_ids", ArrayType(IntegerType(), False), False),
         ]
     )
-    ws = re.compile("[ \\t\\n\\x0b\\f\\r]+")
 
     def _tokenize_batches(batches):
         import pandas as pd
 
-        cache: dict[str, tuple[int, ...]] = {}
-
-        def word_ids(w: str) -> tuple[int, ...]:
-            ids = cache.get(w)
-            if ids is None:
-                syms = list(w)
-                for a, b, ab in merge_list:
-                    if ab not in w or len(syms) < 2:
-                        continue
-                    out: list[str] = []
-                    for s in syms:
-                        if out and out[-1] == a and s == b:
-                            out[-1] = ab
-                        else:
-                            out.append(s)
-                    syms = out
-                ids = cache[w] = tuple(vocab.get(s, unk_id) for s in syms)
-            return ids
-
+        word_ids = _bpe_word_kernel(
+            merges, lambda pieces: tuple(vocab.get(s, unk_id) for s in pieces)
+        )
         for pdf in batches:
             out_ids, n_toks, doc_ids = [], [], []
             for i, text in zip(pdf[id_col], pdf[text_col]):
                 ids: list[int] = []
-                for w in ws.split(text or ""):
-                    if w and "\x01" not in w and "\x02" not in w:
-                        ids.extend(word_ids(w))
+                for w in _bpe_words(text):
+                    ids.extend(word_ids(w))
                 doc_ids.append(i)
                 n_toks.append(len(ids))
                 out_ids.append(ids)

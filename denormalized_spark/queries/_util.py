@@ -2,9 +2,31 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 from denormalized_spark.sources.files import load_table
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLES: dict[str, str] = {}
+
+#: oracle SQL for :func:`~denormalized_spark.operators.text.tokens`:
+#: whitespace split, empties dropped
+_TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), x -> x != '')"
+
+
+def q(name: str, oracle: str | None = None):
+    """Register the decorated ``fn(spark, sf_dir)`` as query ``name``,
+    with its DuckDB ``oracle`` SQL when it has one."""
+
+    def deco(fn):
+        QUERIES[name] = fn
+        if oracle is not None:
+            ORACLES[name] = oracle
+        return fn
+
+    return deco
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -8,20 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from denormalized_spark.operators import analytics, curation
-from denormalized_spark.queries._util import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from denormalized_spark.queries._util import q, t
 
 
 #: funnel over the first 2 days only: over a full month every user

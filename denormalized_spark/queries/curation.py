@@ -16,23 +16,7 @@ from pyspark.sql import functions as F
 
 from denormalized_spark.operators import curation, text
 from denormalized_spark.operators.dedup import SHINGLE_MOD, shingle_params
-from denormalized_spark.queries._util import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-_TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), x -> x != '')"
+from denormalized_spark.queries._util import _TOKS, q, t
 
 
 def _gram_sql(n: int) -> str:

@@ -12,26 +12,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from denormalized_spark.operators import dedup, similarity, text
-from denormalized_spark.queries._util import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from denormalized_spark.queries._util import _TOKS, q, t
 
 
 # ---- shared oracle SQL fragments -----------------------------------------
-
-# tokens: whitespace split, empties dropped (matches operators.text.tokens)
-_TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), x -> x != '')"
 
 
 def _hex15(expr: str) -> str:

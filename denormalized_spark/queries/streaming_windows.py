@@ -17,20 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from denormalized_spark.datastream import DataStream
-from denormalized_spark.queries._util import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from denormalized_spark.queries._util import q, t
 
 
 @q(

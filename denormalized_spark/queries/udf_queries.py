@@ -14,21 +14,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from denormalized_spark.queries._util import t
+from denormalized_spark.queries._util import q, t
 from denormalized_spark.udf import Accumulator, udaf, udf
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _revenue(price: pa.Array, discount: pa.Array) -> pa.Array:

@@ -147,27 +147,6 @@ def decode_avro_payload(
     return decode_avro_python(raw, avro_schema)
 
 
-def read_kafka_avro(
-    spark: SparkSession,
-    topic: str,
-    bootstrap_servers: str,
-    avro_schema: str,
-    *,
-    starting_offsets: str = "latest",
-) -> DataFrame:
-    """Avro-encoded topic (reference AvroDecoder,
-    formats/decoders/avro.rs:17-54): JVM from_avro when the jar is
-    present, else the pure-Python spec codec."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return decode_avro_payload(raw, avro_schema, spark)
-
-
 # -- encoding registry (reference formats/mod.rs: the decoder is
 # -- selected by the topic's declared encoding; json + avro today,
 # -- new encodings register a decode function here) -------------------

@@ -1714,6 +1714,65 @@ def test_markov_stationary_keeps_dangling_states(spark):
     assert out["A"].pi_micro == 1_000_000
 
 
+def test_markov_null_state_matches_duckdb_oracle(spark):
+    """A NULL event type is a state that receives no mass: the oracle
+    re-anchors pi with a join on state, which never matches NULL, and
+    the driver-side iteration must agree row for row."""
+    import datetime
+
+    import duckdb
+    import pandas as pd
+
+    from denormalized_spark.operators.analytics import (
+        markov_entropy_rate,
+        markov_stationary,
+    )
+    from denormalized_spark.queries import ORACLES
+
+    base = datetime.datetime(2024, 1, 1)
+    seqs = {0: ["A", "B", None, "A", "B", "A"], 1: ["B", "A", None], 2: ["A", "A", "B"]}
+    rows = [
+        (u, 10 * u + i, base + datetime.timedelta(minutes=i), s)
+        for u, seq in seqs.items()
+        for i, s in enumerate(seq)
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id long, event_id long, ts timestamp, event_type string"
+    )
+    con = duckdb.connect()
+    con.register(
+        "events", pd.DataFrame(rows, columns=["user_id", "event_id", "ts", "event_type"])
+    )
+    for op, query in (
+        (markov_stationary, "events_markov_stationary"),
+        (markov_entropy_rate, "events_markov_entropy_rate"),
+    ):
+        got = sorted(map(tuple, op(df).collect()), key=repr)
+        want = sorted(con.execute(ORACLES[query]).fetchall(), key=repr)
+        assert got == want, query
+    pi = {r.state: r.pi_micro for r in markov_stationary(df).collect()}
+    assert None in pi and pi[None] == 0
+
+
+def test_markov_stationary_int_coded_states(spark):
+    """The state column keeps the type column's type: int codes in,
+    int states out."""
+    import datetime
+
+    from pyspark.sql.types import IntegerType
+
+    from denormalized_spark.operators.analytics import markov_stationary
+
+    base = datetime.datetime(2024, 1, 1)
+    rows = [(0, i, base + datetime.timedelta(minutes=i), 1 + i % 2) for i in range(20)]
+    df = spark.createDataFrame(
+        rows, "user_id long, event_id long, ts timestamp, event_type int"
+    )
+    out = markov_stationary(df)
+    assert out.schema["state"].dataType == IntegerType()
+    assert [(r.state, r.pi_micro) for r in out.collect()] == [(1, 500_000), (2, 500_000)]
+
+
 def test_holt_winters_additive_matches_python_replay(spark):
     """The quantized HW trajectory equals an integer Python replay
     (trunc-div semantics), and on a perfectly periodic series the

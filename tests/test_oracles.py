@@ -53,3 +53,17 @@ def test_every_oracle_plans_in_duckdb(entry, con):
     finally:
         con.execute("SET disabled_optimizers=''")
     assert not bad, bad
+
+
+def test_oracle_child_retries_only_known_flakes():
+    """The correctness sweep retries an oracle child only when it died
+    of box pressure (signal, OOM, failed fork); a SQL error is
+    deterministic and must fail on its first attempt."""
+    from tools.check_correctness import flake_reason
+
+    assert flake_reason(-9, "") == "killed by signal 9"
+    assert flake_reason(1, "Traceback ...\nMemoryError\n") == "MemoryError"
+    assert flake_reason(1, "duckdb.OutOfMemoryException: bad allocation") == "bad allocation"
+    assert flake_reason(1, "BlockingIOError: fork failed: resource unavailable")
+    assert flake_reason(1, "duckdb.BinderException: Binder Error: column x not found") is None
+    assert flake_reason(1, "duckdb.ParserException: syntax error at or near") is None

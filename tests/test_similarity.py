@@ -241,25 +241,6 @@ class TestQuantization:
         assert r.q_vec == [0, 0]
 
 
-def test_cosine_topk_arrow_matches_expression_path(spark):
-    """The numpy/Arrow scorer and the expression-fold scorer agree on
-    ranking and on values within float tolerance (pairwise vs fold
-    summation differ only in last ulps)."""
-    import random
-
-    from denormalized_spark.operators.similarity import cosine_topk, cosine_topk_arrow
-
-    rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(200)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    q = [rng.uniform(-1, 1) for _ in range(16)]
-    a = cosine_topk(df, q, k=10).collect()
-    b = cosine_topk_arrow(df, q, k=10).collect()
-    assert [r.vec_id for r in a] == [r.vec_id for r in b]
-    for ra, rb in zip(a, b):
-        assert abs(ra.cosine_sim - rb.cosine_sim) < 1e-9
-
-
 def test_outlier_scores_flags_planted_outlier(spark):
     """A vector pointing away from its label's tight cluster scores
     lowest and is flagged; inliers are not."""
@@ -1182,25 +1163,34 @@ def test_bucket_shuffle_pin_inert_and_effective(embeddings, spark):
     assert a == b
 
 
-def test_lsh_pair_range_salting_inert_and_redistributes(embeddings):
-    """The opt-in hot-bucket pair-range salt must emit the EXACT pair
-    set and scores of the unsalted form (the ranges partition the
-    anchor indices; scoring expressions are shared), and its executed
-    plan must carry the salted redistribution key."""
-    plain = similarity.lsh_bucketed_neighbors(
-        embeddings, dim=64, num_planes=2, num_tables=2, max_bucket_size=64
+def test_bucket_pairs_enumerates_each_pair_once(spark):
+    """The shared in-bucket pair enumerator: n members give n(n-1)/2
+    pairs in anchor order (anchor i with members[i+1:]), never a
+    self-pair; the per-anchor ``keep`` filter applies before flattening."""
+    from denormalized_spark.operators._bucketing import bucket_pairs
+
+    df = spark.createDataFrame(
+        [(n, list(range(10, 10 + n))) for n in (0, 1, 2, 5)], "n int, ms array<int>"
     )
-    for tgt in (1, 64, 100_000):
-        salted = similarity.lsh_bucketed_neighbors(
-            embeddings, dim=64, num_planes=2, num_tables=2,
-            max_bucket_size=64, salt_target_pairs=tgt,
-        )
-        a = sorted(map(tuple, plain.collect()))
-        b = sorted(map(tuple, salted.collect()))
-        assert a == b, f"salt_target_pairs={tgt} changed the pair set"
-    salted = similarity.lsh_bucketed_neighbors(
-        embeddings, dim=64, num_planes=2, num_tables=2,
-        max_bucket_size=64, salt_target_pairs=64,
-    )
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(tbl" in plan and "_lo" in plan
+    got = {
+        r.n: [(p.a, p.b) for p in r.pairs]
+        for r in df.select(
+            "n",
+            bucket_pairs(
+                F.col("ms"), lambda x, y: F.struct(x.alias("a"), y.alias("b"))
+            ).alias("pairs"),
+        ).collect()
+    }
+    assert {n: len(ps) for n, ps in got.items()} == {0: 0, 1: 0, 2: 1, 5: 10}
+    for n, ps in got.items():
+        members = list(range(10, 10 + n))
+        assert ps == [(x, y) for i, x in enumerate(members) for y in members[i + 1:]]
+
+    kept = df.filter("n = 5").select(
+        bucket_pairs(
+            F.col("ms"),
+            lambda x, y: F.struct(x.alias("a"), y.alias("b")),
+            keep=lambda p: p["b"] - p["a"] == 1,
+        ).alias("pairs")
+    ).first().pairs
+    assert [(p.a, p.b) for p in kept] == [(10, 11), (11, 12), (12, 13), (13, 14)]

@@ -247,11 +247,11 @@ class TestResample:
         assert got[("b", 1)] == 7.0 and got[("b", 2)] == 7.0
 
     def test_resample_on_timestamp_ntz(self, spark, tmp_path):
-        """Regression (CORRECTNESS_r03): the external driver's session
-        read naive parquet timestamps as TIMESTAMP_NTZ and resample's
-        unix_millis(ts) crashed with DATATYPE_MISMATCH. Reproduce that
-        exact environment — naive parquet + inferTimestampNTZ=true —
-        and assert resample works on the NTZ column."""
+        """Regression: a session that reads naive parquet timestamps
+        as TIMESTAMP_NTZ made resample's unix_millis(ts) crash with
+        DATATYPE_MISMATCH. Reproduce that exact environment — naive
+        parquet + inferTimestampNTZ=true — and assert resample works
+        on the NTZ column."""
         from pyspark.sql import functions as F
         from pyspark.sql.types import TimestampNTZType
 

@@ -23,6 +23,7 @@ targeted runs).
 from __future__ import annotations
 
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -82,21 +83,37 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), ignore_index=True)
 
 
-def run_oracle_subprocess(sql: str, sf_dir: str) -> pd.DataFrame:
+#: stderr signatures of a child that died of box pressure (allocator
+#: OOM, the OOM killer, a failed fork) rather than of its SQL
+_FLAKE = re.compile(
+    r"MemoryError|bad allocation|\bKilled\b"
+    r"|\bfork\b.*(?:fail|error|unavailable)|(?:can't|cannot|unable to) fork",
+    re.IGNORECASE,
+)
+
+
+def flake_reason(returncode: int, stderr: str) -> str | None:
+    """Why a failed oracle child is worth one retry, or None when its
+    failure is deterministic (a SQL error fails the same way twice)."""
+    if returncode < 0:
+        return f"killed by signal {-returncode}"
+    m = _FLAKE.search(stderr)
+    return m.group(0) if m else None
+
+
+def run_oracle_subprocess(name: str, sql: str, sf_dir: str) -> pd.DataFrame:
     """Execute one oracle statement in a fresh child process (own
     address space, 24 GB DuckDB memory cap) and return its DataFrame.
-    Raises RuntimeError with the child's stderr tail on failure."""
+    A child that died of a known flake (see :func:`flake_reason`) is
+    retried once on a fresh child, with a ``RETRY <name>: <reason>``
+    line; any other failure raises RuntimeError at once with the
+    child's stderr tail."""
     import subprocess
     import tempfile
 
     runner = str(Path(__file__).resolve().parent / "_oracle_runner.py")
     last_err = "oracle child died silently"
-    # Retry ONCE on a fresh child: the r11-r15 history of child/oracle
-    # failures under box pressure (allocator OOMs, fork/exec hiccups
-    # mid-sweep) is zero value mismatches — always green on re-run —
-    # and a red row in the external driver's gate is far costlier than
-    # one extra child launch.
-    for _attempt in range(2):
+    for attempt in range(2):
         with tempfile.NamedTemporaryFile(suffix=".pkl") as tmp:
             proc = subprocess.run(
                 [sys.executable, runner, sf_dir, tmp.name],
@@ -108,7 +125,8 @@ def run_oracle_subprocess(sql: str, sf_dir: str) -> pd.DataFrame:
             )
             if proc.returncode == 0:
                 return pd.read_pickle(tmp.name)
-            lines = proc.stderr.decode(errors="replace").strip().splitlines()
+            stderr = proc.stderr.decode(errors="replace")
+            lines = stderr.strip().splitlines()
             # prefer the last line that looks like an actual error over
             # trailing interpreter/env boilerplate (an r15 child death
             # surfaced as '...your python interpreter from there.')
@@ -118,6 +136,10 @@ def run_oracle_subprocess(sql: str, sf_dir: str) -> pd.DataFrame:
                                          "Killed", "MemoryError"))
             ]
             last_err = (errlines or lines or [last_err])[-1]
+            reason = flake_reason(proc.returncode, stderr)
+            if reason is None or attempt:
+                break
+            print(f"RETRY {name}: {reason}", flush=True)
     raise RuntimeError(last_err)
 
 
@@ -181,7 +203,7 @@ def main() -> int:
             continue
         try:
             if con is None:
-                odf = run_oracle_subprocess(oracles[name], SF_DIR)
+                odf = run_oracle_subprocess(name, oracles[name], SF_DIR)
             else:
                 odf = con.execute(oracles[name]).df()
         except Exception as e:
