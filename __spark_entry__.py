@@ -27,14 +27,20 @@ def _configure(spark: SparkSession) -> SparkSession:
     truth shared with session.get_spark, so tests and driver see the
     same semantics — in particular the parquet timestamp confs
     (inferTimestampNTZ=false), without which the driver's session reads
-    events.ts as TIMESTAMP_NTZ while the test suite sees TIMESTAMP."""
-    from denormalized_spark.session import RUNTIME_CONF
+    events.ts as TIMESTAMP_NTZ while the test suite sees TIMESTAMP.
+    The shuffle/state partition count is derived from this session's
+    cores by the same function get_spark uses."""
+    from denormalized_spark.session import (
+        RUNTIME_CONF,
+        apply_default_shuffle_partitions,
+    )
 
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf already fixed; defaults are acceptable
+    apply_default_shuffle_partitions(spark)
     return spark
 
 

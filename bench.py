@@ -543,15 +543,6 @@ def _image_phash_throughput(spark) -> tuple[int, list[float]]:
     return n, _noop_runs(multimodal.image_phash(imgs, "payload"))
 
 
-# State-store partition count for the streaming drains. The count is
-# checkpoint-pinned at first batch and each partition costs a fixed
-# per-batch commit + Python-worker channel; at the bench's key spaces
-# (5 event types / 1.5k users) 8 partitions beats 32 by ~4x on pure
-# fixed cost (see session.state_partition_scope). On a production
-# cluster this would be 2-3x total executor cores instead.
-STREAM_STATE_PARTITIONS = 8
-
-
 def _drain(build, spark, prefix: str, sink_fn=None) -> list[float]:
     """Start the stream from ``build()`` on a FRESH checkpoint, drain
     it (availableNow), n=3 times: the first drain pays plan codegen +
@@ -561,19 +552,16 @@ def _drain(build, spark, prefix: str, sink_fn=None) -> list[float]:
     (each drain gets a fresh one via the zero-arg factory)."""
     import tempfile
 
-    from denormalized_spark.session import state_partition_scope
-
     walls = []
     for _ in range(3):
-        with state_partition_scope(spark, STREAM_STATE_PARTITIONS):
-            sink_counts = []
-            fn = sink_fn() if sink_fn else (
-                lambda df: sink_counts.append(df.count())
-            )
-            t0 = time.time()
-            q = build().sink(fn, checkpoint=tempfile.mkdtemp(prefix=prefix))
-            q.awaitTermination(600)
-            walls.append(time.time() - t0)
+        sink_counts = []
+        fn = sink_fn() if sink_fn else (
+            lambda df: sink_counts.append(df.count())
+        )
+        t0 = time.time()
+        q = build().sink(fn, checkpoint=tempfile.mkdtemp(prefix=prefix))
+        q.awaitTermination(600)
+        walls.append(time.time() - t0)
     return walls
 
 

@@ -16,6 +16,7 @@ entry point (SURVEY §3.3).
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Callable, Sequence
 from typing import Any
 
@@ -808,20 +809,15 @@ class DataStream:
         degenerate single-batch stream — so tests and batch backfills
         share sink code with live streams.
         """
+        takes_epoch = len(inspect.signature(func).parameters) != 1
         if not self._df.isStreaming:
-            import inspect
-
-            sig = inspect.signature(func)
-            return func(self._df) if len(sig.parameters) == 1 else func(self._df, 0)
+            return func(self._df, 0) if takes_epoch else func(self._df)
 
         def _call(batch_df: DataFrame, epoch: int):
-            import inspect
-
-            sig = inspect.signature(func)
-            if len(sig.parameters) == 1:
-                func(batch_df)
-            else:
+            if takes_epoch:
                 func(batch_df, epoch)
+            else:
+                func(batch_df)
 
         writer = self._df.writeStream.foreachBatch(_call)
         if query_name:

@@ -11,9 +11,14 @@ cluster. These defaults are chosen so the same code runs on
   skewed joins, and converts sort-merge joins to broadcast when the
   runtime size allows — this is what makes one static config survive
   a 100× scale-up.
-- ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound;
-  AQE coalesces it down. On a real cluster, set it to 2-3× total
-  cores via ``extra_conf``.
+- ``spark.sql.shuffle.partitions`` defaults to the session's
+  ``defaultParallelism`` (N on ``local[N]``, total executor cores on a
+  cluster; :func:`apply_default_shuffle_partitions`). In batch plans
+  it is the pre-AQE upper bound that AQE coalesces down. Spark turns
+  AQE off for stateful streams, so there it is the number of
+  state-store instances every micro-batch loads, updates and commits,
+  and the checkpoint pins it for the life of the query. Pass a
+  different value via ``extra_conf`` to override it session-wide.
 - UTC session timezone: parquet/DuckDB timestamps are UTC-naive;
   pinning the session TZ makes event-time arithmetic deterministic.
 - Arrow enabled: every Python-boundary crossing (pandas UDFs,
@@ -36,9 +41,6 @@ RUNTIME_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Pre-AQE shuffle parallelism. Local default: ~cores. Cluster:
-    # override to 2-3x total executor cores.
-    "spark.sql.shuffle.partitions": "32",
     # Keep scan partitions big enough to amortize task overhead but
     # small enough to fit in executor memory at 100 TB inputs.
     "spark.sql.files.maxPartitionBytes": "134217728",  # 128 MiB
@@ -67,35 +69,47 @@ _DEFAULTS = {
 }
 
 
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def apply_default_shuffle_partitions(spark: SparkSession) -> None:
+    """Set ``spark.sql.shuffle.partitions`` to the session's
+    ``defaultParallelism``: one state store per core.
+
+    Stateful streams run without AQE, so every shuffle partition is a
+    state-store instance whose per-batch load, update and commit is
+    fixed cost; more instances than cores only queue behind each
+    other. Batch plans keep AQE, which coalesces from this bound.
+    Both :func:`get_spark` and the driver contract's ``_configure``
+    call this, so the two surfaces plan with the same count."""
+    spark.conf.set(SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
+
+
 from contextlib import contextmanager
 
 
 @contextmanager
 def state_partition_scope(spark: SparkSession, n: int):
-    """Pin the state-store partition count for streaming queries
-    started (and first-batch-planned) inside this scope.
+    """Pin one streaming query's state-store partition count away from
+    the session default (:func:`apply_default_shuffle_partitions`).
 
     Spark captures ``spark.sql.shuffle.partitions`` into the streaming
     checkpoint at the first micro-batch and every stateful operator
-    gets one state-store instance per partition, FOREVER (restarts
-    reuse the checkpointed count). Each instance costs a per-batch
-    commit + Python-worker channel, so the count should track the
-    workload: 2-3x total executor cores on a production cluster,
-    but near the distinct-key/core balance point for small key spaces
-    (measured on local[32]: an applyInPandasWithState drain of 100k
-    rows / 1.5k keys runs 4x faster at 8 partitions than at 32 —
-    pure per-partition fixed cost).
+    gets one state-store instance per partition for the life of the
+    checkpoint (restarts reuse the checkpointed count, whatever the
+    session says then). Use this only when one query needs a
+    different count, e.g. a wider key space on a cluster that will
+    grow.
 
     Keep the query's first ``awaitTermination`` inside the scope: the
     first batch is planned asynchronously after ``start()``.
     """
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    prev = spark.conf.get(SHUFFLE_PARTITIONS)
+    spark.conf.set(SHUFFLE_PARTITIONS, str(n))
     try:
         yield spark
     finally:
-        spark.conf.set(key, prev)
+        spark.conf.set(SHUFFLE_PARTITIONS, prev)
 
 
 def get_spark(
@@ -108,7 +122,10 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when unset and
     no cluster manager is configured, so tests and bench share one
     code path with production (where ``master`` comes from
-    spark-submit and this argument stays None).
+    spark-submit and this argument stays None). The shuffle/state
+    partition count is derived from the built session
+    (:func:`apply_default_shuffle_partitions`) unless ``extra_conf``
+    sets ``spark.sql.shuffle.partitions``.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
@@ -124,4 +141,6 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if SHUFFLE_PARTITIONS not in conf:
+        apply_default_shuffle_partitions(spark)
     return spark

@@ -1,6 +1,7 @@
-"""Shared fixtures. One session-scoped SparkSession (local[4], small
-shuffle parallelism) keeps the suite fast; tests that need different
-static conf must not — everything here is runtime-settable."""
+"""Shared fixtures. One session-scoped SparkSession (local[4], library
+defaults, so shuffle/state partitions = 4 cores) keeps the suite fast;
+tests that need different static conf must not — everything here is
+runtime-settable."""
 
 from __future__ import annotations
 
@@ -22,7 +23,6 @@ def spark():
     s = get_spark(
         "tests",
         master=os.environ.get("SPARK_GRAFT_TEST_MASTER", "local[4]"),
-        extra_conf={"spark.sql.shuffle.partitions": "4"},
     )
     yield s
 

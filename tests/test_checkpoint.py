@@ -42,7 +42,9 @@ def _write_file(spark, tmp_path, stream_dir, rows, name, age_s):
     os.utime(dest, (t, t))
 
 
-def _run(spark, stream_dir, schema, ckpt, timeout=180):
+def _start(spark, stream_dir, schema, ckpt, keys=(), timeout=180):
+    """Drain the directory through an hourly window count by ``keys``;
+    returns (emitted rows, the finished query)."""
     sdf = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -50,10 +52,14 @@ def _run(spark, stream_dir, schema, ckpt, timeout=180):
     )
     rows = []
     q = DataStream(sdf, event_time="ts").window(
-        [], [F.count("*").alias("n")], 3600_000
+        list(keys), [F.count("*").alias("n")], 3600_000
     ).sink(lambda df: rows.extend(df.collect()), checkpoint=ckpt)
     q.awaitTermination(timeout)
-    return rows
+    return rows, q
+
+
+def _run(spark, stream_dir, schema, ckpt):
+    return _start(spark, stream_dir, schema, ckpt)[0]
 
 
 def test_kill_restart_resumes_offsets_and_state(spark, tmp_path):
@@ -127,6 +133,55 @@ def test_fresh_checkpoint_reprocesses_everything(spark, tmp_path):
     rows = _run(spark, stream_dir, schema, checkpoint_dir(str(tmp_path), "fresh"))
     emitted = {r["window_start_time"].hour: r["n"] for r in rows}
     assert emitted == {0: 1, 1: 1}  # hour-2 window held (wm = 02:10)
+
+
+def _state_partitions(q) -> set[int]:
+    return {
+        op["numShufflePartitions"]
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    }
+
+
+def test_restart_keeps_checkpointed_state_partitions(spark, tmp_path):
+    """A window query started at 32 state partitions and restarted on
+    the same checkpoint under the session default (one per core) keeps
+    its 32 state stores — Spark pins the count in the offset log — and
+    the windows emitted across the two runs equal one uninterrupted
+    run's."""
+    from denormalized_spark.session import SHUFFLE_PARTITIONS, state_partition_scope
+
+    stream_dir = tmp_path / "parts_stream"
+    stream_dir.mkdir()
+    hours = [("00:10:00", 1), ("00:20:00", 2), ("00:50:00", 3), ("01:10:00", 1),
+             ("01:20:00", 4)]
+    later = [("01:40:00", 2), ("02:10:00", 1), ("02:20:00", 5), ("03:05:00", 3)]
+    _write_file(spark, tmp_path, stream_dir,
+                [Row(ts_str=BASE + t, v=v) for t, v in hours], "a.parquet", age_s=100)
+    schema = spark.read.parquet(str(stream_dir)).schema
+    ckpt = checkpoint_dir(str(tmp_path), "parts")
+
+    def windows(rows):
+        out = [(r["window_start_time"].hour, r["v"], r["n"]) for r in rows]
+        assert len(out) == len(set(out)), f"duplicate emission in {out}"
+        return set(out)
+
+    with state_partition_scope(spark, 32):
+        rows1, q1 = _start(spark, stream_dir, schema, ckpt, keys=["v"])
+    assert _state_partitions(q1) == {32}
+
+    _write_file(spark, tmp_path, stream_dir,
+                [Row(ts_str=BASE + t, v=v) for t, v in later], "b.parquet", age_s=0)
+    assert spark.conf.get(SHUFFLE_PARTITIONS) != "32"
+    rows2, q2 = _start(spark, stream_dir, schema, ckpt, keys=["v"])
+    assert _state_partitions(q2) == {32}
+
+    whole, q = _start(spark, stream_dir, schema,
+                      checkpoint_dir(str(tmp_path), "parts_whole"), keys=["v"])
+    assert _state_partitions(q) == {spark.sparkContext.defaultParallelism}
+    assert windows(rows1) | windows(rows2) == windows(whole)
+    assert not windows(rows1) & windows(rows2)
+    assert {h for h, _, _ in windows(whole)} == {0, 1, 2}
 
 
 def test_context_with_checkpointing_builder(spark, tmp_path, sf_dir):
