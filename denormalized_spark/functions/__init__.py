@@ -7,8 +7,11 @@ semantics on top of ``pyspark.sql.functions`` — same-named where
 Spark has them, thin compositions where names differ, and documented
 recipes for the handful with no 1:1 equivalent.
 
-Everything returns a pyspark Column and stays JVM-side (codegen) —
-no Python UDFs in this module.
+Everything returns a pyspark Column and stays JVM-side — no Python
+UDFs in this module. Scalar expressions compile with whole-stage
+codegen; aggregates with an object buffer (the ``collect_list``-based
+ones such as ``median``) run in ObjectHashAggregate, which is not
+whole-stage codegen'd.
 
 Usage::
 
@@ -75,8 +78,31 @@ def avg(expr, filter=None):  # noqa: A002
 mean = avg
 
 
-def median(expr, filter=None):  # noqa: A002
-    return F.median(_filtered(_c(expr), filter))
+def median(expr, distinct=False, filter=None):  # noqa: A002
+    """Exact median as one expression over the group's sorted values
+    (the reference's DataFusion median keeps the same value list).
+
+    Bit-identical to ``F.median`` (Spark's ``Percentile`` at 0.5),
+    result type double: the middle value, or ``0.5·lo + 0.5·hi`` for
+    an even count — Percentile's own interpolation form, so ±1.7e308
+    do not overflow; NULL for a group with no non-NULL value.
+    ``distinct=True`` takes the median of the distinct values.
+
+    The buffer holds every non-NULL value, O(values) per group, as in
+    the reference and DuckDB; a streaming window's state stores it as
+    a plain array (8 bytes a value). Spark's percentile map is
+    O(distinct values) instead, so for a huge group with few distinct
+    values call pyspark's ``F.median`` (as ``agg_stats`` does)."""
+    x = _filtered(_c(expr), filter)
+    # distinct dedups the raw values, before the cast can merge them
+    a = F.sort_array(
+        F.collect_set(x).cast("array<double>") if distinct
+        else F.collect_list(x.cast("double"))
+    )
+    n = F.size(a)
+    lo = F.element_at(a, F.floor((n - 1) / 2).cast("int") + 1)
+    hi = F.element_at(a, F.ceil((n - 1) / 2).cast("int") + 1)
+    return F.when(n > 0, F.when(lo == hi, lo).otherwise(lo * 0.5 + hi * 0.5))
 
 
 def approx_distinct(expr, filter=None):  # noqa: A002

@@ -21,6 +21,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from denormalized_spark import functions as f
 from denormalized_spark.datastream import DataStream
 from denormalized_spark.streaming.checkpoint import (
     checkpoint_dir,
@@ -43,8 +44,8 @@ def _write_file(spark, tmp_path, stream_dir, rows, name, age_s):
 
 
 def _start(spark, stream_dir, schema, ckpt, keys=(), timeout=180):
-    """Drain the directory through an hourly window count by ``keys``;
-    returns (emitted rows, the finished query)."""
+    """Drain the directory through an hourly window count and median of
+    ``v`` by ``keys``; returns (emitted rows, the finished query)."""
     sdf = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -52,7 +53,7 @@ def _start(spark, stream_dir, schema, ckpt, keys=(), timeout=180):
     )
     rows = []
     q = DataStream(sdf, event_time="ts").window(
-        list(keys), [F.count("*").alias("n")], 3600_000
+        list(keys), [F.count("*").alias("n"), f.median("v").alias("med")], 3600_000
     ).sink(lambda df: rows.extend(df.collect()), checkpoint=ckpt)
     q.awaitTermination(timeout)
     return rows, q
@@ -68,6 +69,7 @@ def test_kill_restart_resumes_offsets_and_state(spark, tmp_path):
     ckpt = checkpoint_dir(str(tmp_path), "winq")
 
     # hour 0: 3 rows; hour 1: 2 rows (still open at first shutdown)
+    # plus 1 row in the second file, merged into the restored state
     _write_file(
         spark,
         tmp_path,
@@ -76,8 +78,8 @@ def test_kill_restart_resumes_offsets_and_state(spark, tmp_path):
             Row(ts_str=BASE + "00:10:00", v=1),
             Row(ts_str=BASE + "00:20:00", v=1),
             Row(ts_str=BASE + "00:50:00", v=1),
-            Row(ts_str=BASE + "01:10:00", v=1),
-            Row(ts_str=BASE + "01:20:00", v=1),
+            Row(ts_str=BASE + "01:10:00", v=3),
+            Row(ts_str=BASE + "01:20:00", v=8),
         ],
         "a.parquet",
         age_s=100,
@@ -96,18 +98,18 @@ def test_kill_restart_resumes_offsets_and_state(spark, tmp_path):
             spark,
             tmp_path,
             stream_dir,
-            [Row(ts_str=BASE + "02:10:00", v=1), Row(ts_str=BASE + "02:20:00", v=1),
-             Row(ts_str=BASE + "03:05:00", v=1)],
+            [Row(ts_str=BASE + "01:30:00", v=4), Row(ts_str=BASE + "02:10:00", v=1),
+             Row(ts_str=BASE + "02:20:00", v=1), Row(ts_str=BASE + "03:05:00", v=1)],
             "b.parquet",
             age_s=0,
         )
 
         # run 2, same checkpoint: must NOT reprocess file A (offset
-        # resume), must emit hour-1 from RESTORED state and hour-2
-        # from new data, must NOT re-emit hour 0.
+        # resume), must emit hour-1 from RESTORED state merged with its
+        # new row and hour-2 from new data, must NOT re-emit hour 0.
         rows2 = _run(spark, stream_dir, schema, ckpt)
-        emitted2 = {r["window_start_time"].hour: r["n"] for r in rows2}
-        assert emitted2 == {1: 2, 2: 2}, rows2
+        emitted2 = {r["window_start_time"].hour: (r["n"], r["med"]) for r in rows2}
+        assert emitted2 == {1: (3, 4.0), 2: (2, 1.0)}, rows2
     finally:
         use_default_state_store(spark)
 
@@ -147,22 +149,24 @@ def test_restart_keeps_checkpointed_state_partitions(spark, tmp_path):
     """A window query started at 32 state partitions and restarted on
     the same checkpoint under the session default (one per core) keeps
     its 32 state stores — Spark pins the count in the offset log — and
-    the windows emitted across the two runs equal one uninterrupted
-    run's."""
+    the windows emitted across the two runs (counts and medians, the
+    (01:00, v=4) window's from restored state plus a new row) equal one
+    uninterrupted run's."""
     from denormalized_spark.session import SHUFFLE_PARTITIONS, state_partition_scope
 
     stream_dir = tmp_path / "parts_stream"
     stream_dir.mkdir()
     hours = [("00:10:00", 1), ("00:20:00", 2), ("00:50:00", 3), ("01:10:00", 1),
              ("01:20:00", 4)]
-    later = [("01:40:00", 2), ("02:10:00", 1), ("02:20:00", 5), ("03:05:00", 3)]
+    later = [("01:40:00", 2), ("01:50:00", 4), ("02:10:00", 1), ("02:20:00", 5),
+             ("03:05:00", 3)]
     _write_file(spark, tmp_path, stream_dir,
                 [Row(ts_str=BASE + t, v=v) for t, v in hours], "a.parquet", age_s=100)
     schema = spark.read.parquet(str(stream_dir)).schema
     ckpt = checkpoint_dir(str(tmp_path), "parts")
 
     def windows(rows):
-        out = [(r["window_start_time"].hour, r["v"], r["n"]) for r in rows]
+        out = [(r["window_start_time"].hour, r["v"], r["n"], r["med"]) for r in rows]
         assert len(out) == len(set(out)), f"duplicate emission in {out}"
         return set(out)
 
@@ -181,7 +185,8 @@ def test_restart_keeps_checkpointed_state_partitions(spark, tmp_path):
     assert _state_partitions(q) == {spark.sparkContext.defaultParallelism}
     assert windows(rows1) | windows(rows2) == windows(whole)
     assert not windows(rows1) & windows(rows2)
-    assert {h for h, _, _ in windows(whole)} == {0, 1, 2}
+    assert {h for h, *_ in windows(whole)} == {0, 1, 2}
+    assert (1, 4, 2, 4.0) in windows(rows2)
 
 
 def test_context_with_checkpointing_builder(spark, tmp_path, sf_dir):

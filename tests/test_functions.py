@@ -80,6 +80,73 @@ def test_agg_filter_rewrite(spark):
     assert (got["s"], got["c"], got["a"]) == (50, 2, 10.0)
 
 
+def _median_groups(seed=5, groups=300):
+    """Random groups of 1-12 values: odd and even sizes, NULL, NaN,
+    ±1e308, ±inf, ±0.0, ties; group 0 is all-NULL, groups -1 and -2
+    have middle pairs whose sum overflows a double."""
+    import random
+
+    rng = random.Random(seed)
+    special = [None, float("nan"), 1e308, -1e308, 1.7e308, -1.7e308,
+               float("inf"), float("-inf"), 0.0, -0.0]
+    rows = [(0, None, None, True), (0, None, None, False)]
+    rows += [(-1, 1e308, 1, True), (-1, 1.7e308, 2, True),
+             (-2, -1e308, 3, True), (-2, -1.7e308, 4, True)]
+    for g in range(1, groups):
+        for _ in range(rng.randint(1, 12)):
+            r = rng.random()
+            v = (rng.choice(special) if r < 0.15
+                 else float(rng.randint(-5, 5)) if r < 0.5
+                 else rng.uniform(-1e6, 1e6))
+            rows.append((g, v, rng.randint(-50, 50), rng.random() < 0.7))
+    return rows
+
+
+def test_median_bit_identical_to_spark_percentile(spark):
+    """f.median (a sorted value list) returns exactly what F.median
+    (Spark's Percentile) returns — no tolerance — over double, int and
+    decimal inputs, with and without filter=; its plan aggregates with
+    collect_list, not percentile."""
+    df = spark.createDataFrame(
+        _median_groups(), "g int, v double, i int, keep boolean"
+    ).withColumn("d", (F.col("i") * F.lit(1.234567)).cast("decimal(38,6)"))
+    aggs = []
+    for c in ("v", "i", "d"):
+        aggs += [dnf.median(c).alias(f"{c}_a"), F.median(c).alias(f"{c}_b"),
+                 dnf.median(c, filter=F.col("keep")).alias(f"{c}_fa"),
+                 F.median(F.when(F.col("keep"), F.col(c))).alias(f"{c}_fb")]
+    out = df.groupBy("g").agg(*aggs).cache()
+    for c in ("v", "i", "d"):
+        for a, b in ((f"{c}_a", f"{c}_b"), (f"{c}_fa", f"{c}_fb")):
+            assert out.schema[a].dataType == out.schema[b].dataType
+            bad = out.filter(~F.col(a).eqNullSafe(F.col(b))).select("g", a, b).collect()
+            assert not bad, bad
+    got = out.filter("g = 0").first()
+    assert got["v_a"] is None and got["d_a"] is None
+    assert math.isfinite(out.filter("g = -1").first()["v_a"])
+    assert out.filter(F.isnan("v_a")).count() > 0
+    out.unpersist()
+
+    plan = (df.groupBy("g").agg(dnf.median("v"))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "collect_list" in plan and "percentile(" not in plan
+
+
+def test_median_distinct_matches_pandas(spark):
+    """median(DISTINCT x): the median of the unique non-NULL values."""
+    rows = [(g, None if v is None else i % 7, k) for g, v, i, k in _median_groups(seed=9)]
+    df = spark.createDataFrame(rows, "g int, i int, keep boolean")
+    got = dict(df.groupBy("g").agg(dnf.median("i", distinct=True)).collect())
+    pdf = df.toPandas()
+    want = pdf.groupby("g")["i"].agg(lambda s: s.dropna().drop_duplicates().median())
+    assert len(got) == len(want)
+    for g, m in want.items():
+        assert (got[g] is None) if math.isnan(m) else got[g] == m, (g, got[g], m)
+    filtered = df.agg(dnf.median("i", distinct=True, filter=F.col("keep"))).first()[0]
+    kept = pdf.loc[pdf["keep"], "i"].dropna().drop_duplicates().median()
+    assert filtered == kept
+
+
 def test_first_last_value_ordered(spark):
     df = spark.createDataFrame([(3, "c"), (1, "a"), (2, "b")], ["o", "v"])
     got = df.agg(
