@@ -127,17 +127,11 @@ class Context:
     # -- batch sources ------------------------------------------------------
 
     def from_parquet(self, path: str, event_time: str | None = None) -> DataStream:
-        import os
+        """Batch parquet file or dataset, read with its cached schema
+        (:func:`~denormalized_spark.sources.files.read_parquet`)."""
+        from denormalized_spark.sources.files import read_parquet
 
-        from denormalized_spark.sources.files import load_table
-
-        sf_dir, fname = os.path.split(path.rstrip("/"))
-        if fname.endswith(".parquet") and sf_dir:
-            return DataStream(
-                load_table(self.spark, sf_dir, fname[: -len(".parquet")]),
-                event_time=event_time,
-            )
-        return DataStream(self.spark.read.parquet(path), event_time=event_time)
+        return DataStream(read_parquet(self.spark, path), event_time=event_time)
 
     def from_csv(
         self,

@@ -414,14 +414,6 @@ def iszero(expr):
 isnan = F.isnan
 
 
-def gcd(a, b):
-    return F.expr(f"gcd({a}, {b})") if isinstance(a, str) else F.gcd(a, b)
-
-
-def lcm(a, b):
-    return F.expr(f"lcm({a}, {b})") if isinstance(a, str) else F.lcm(a, b)
-
-
 # ---- string
 ascii = F.ascii  # noqa: A001
 bit_length = F.bit_length
@@ -539,6 +531,8 @@ def regexp_match(e, pattern: str):
 
 
 def regexp_replace(e, pattern: str, replacement: str):
+    """Replaces every match, as DataFusion's ``regexp_replace`` with
+    the ``'g'`` flag."""
     return F.regexp_replace(_c(e), pattern, replacement)
 
 
@@ -716,10 +710,6 @@ when = F.when  # searched CASE: F.when already chains .when().otherwise()
 
 def between(e, low, high):
     return _c(e).between(low, high)
-
-
-def arrow_typeof(e):
-    return F.typeof(_c(e))
 
 
 def alias(e, name: str):

@@ -3447,6 +3447,24 @@ def theil_index(
     ).orderBy("grp")
 
 
+#: Most transition cells the markov operators collect to the driver
+#: (256 fully connected states). A larger chain raises ValueError.
+MARKOV_MAX_CELLS = 1 << 16
+
+
+def _collect_bounded(df: DataFrame, bound: int, what: str) -> list:
+    """``df.collect()`` of at most ``bound`` rows: collects
+    ``limit(bound + 1)`` and raises ValueError when the extra row shows
+    the input is over the bound."""
+    rows = df.limit(bound + 1).collect()
+    if len(rows) > bound:
+        raise ValueError(
+            f"{what}: more than {bound} rows to collect to the driver; "
+            "reduce the cardinality of the input first"
+        )
+    return rows
+
+
 def _markov_chain(
     df: DataFrame,
     user_col: str,
@@ -3475,8 +3493,9 @@ def _markov_chain(
 
     NOTE: collecting pmat makes this operator EAGER at DataFrame-build
     time (one bounded Spark job over the pair build; the result is
-    ≤|types|² rows of longs). Each call recomputes from the input —
-    nothing is memoized across invocations."""
+    ≤|types|² rows of longs, at most :data:`MARKOV_MAX_CELLS`, else
+    ValueError). Each call recomputes from the input — nothing is
+    memoized across invocations."""
     import math
 
     from pyspark.sql import Window
@@ -3502,7 +3521,9 @@ def _markov_chain(
     )
     cells = [
         (r["from_type"], r["to_type"], int(r["p_micro"]))
-        for r in pmat_dist.collect()
+        for r in _collect_bounded(
+            pmat_dist, MARKOV_MAX_CELLS, f"markov chain over {type_col!r} transitions"
+        )
     ]
     states = sorted(
         {c[0] for c in cells} | {c[1] for c in cells},
@@ -3549,8 +3570,10 @@ def markov_stationary(
     exchange pairs consecutive events (the corpus-sized step) and the
     (from_type, to_type, p_micro) transition cells are collected to
     the driver. That collect is bounded by |types|² rows, so the
-    state column must be low-cardinality. The iterations then run on
-    the driver over exact Python integers, and the result is a small
+    state column must be low-cardinality: more than
+    :data:`MARKOV_MAX_CELLS` transition cells raise ValueError. The
+    iterations then run on the driver over exact Python integers, and
+    the result is a small
     local relation. Nothing is memoized: each call re-runs the job.
     Returns ``(state, pi_micro, p_self_micro)`` ordered by state; the
     ``state`` column keeps ``type_col``'s type."""
@@ -3728,9 +3751,11 @@ def markov_entropy_rate(
 
     EAGER, like markov_stationary: building the DataFrame runs the
     same Spark job (one user-keyed exchange, then a collect of at
-    most |types|² transition cells), iterates π on the driver, and
-    runs a second small job over those collected cells for the
-    −p·ln(p) terms (JVM ``log``, the value the oracle matches). Returns
+    most |types|² transition cells — more than
+    :data:`MARKOV_MAX_CELLS` raise ValueError), iterates π on the
+    driver, and runs a second small job over those collected cells for
+    the −p·ln(p) terms (JVM ``log``, the value the oracle matches); it
+    collects one row per state, so it stays within the same bound. Returns
     one row per state ``(state, pi_micro, h_cond_micro)`` plus the
     'RATE' rollup row carrying the chain's entropy rate in
     h_cond_micro; because of that row, ``state`` is a string column
@@ -3760,9 +3785,13 @@ def markov_entropy_rate(
     ).cast("long")
     hcond = {
         r["state"]: int(r["h_cond_micro"])
-        for r in cell.groupBy(F.col("from_type").alias("state"))
-        .agg(F.sum(term).cast("long").alias("h_cond_micro"))
-        .collect()
+        for r in _collect_bounded(
+            cell.groupBy(F.col("from_type").alias("state")).agg(
+                F.sum(term).cast("long").alias("h_cond_micro")
+            ),
+            MARKOV_MAX_CELLS,
+            "markov entropy terms",
+        )
     }
     per_state = [(s, pi[s], hcond.get(s, 0)) for s in states]
     # empty-input fidelity: the old per_state.agg(F.sum(...)) produced

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from denormalized_spark.operators._memo import memo_column
 from denormalized_spark.operators.dedup import shingle_hashes
 from denormalized_spark.operators.text import tokens
 
@@ -332,6 +333,7 @@ def redact_pii(text: Column | str, patterns=PII_PATTERNS) -> Column:
     return c
 
 
+@memo_column
 def sample_fraction(id_col: Column | str, seed: str = "s0") -> Column:
     """Deterministic per-row uniform fraction in [0, 1): the first 8
     md5 hex chars of ``seed || id`` scaled by 2^-32. Reproducible
@@ -437,13 +439,18 @@ def mixture_sample(
     the same ids keeps the same rows, so incremental pipeline runs
     stay consistent.
     """
-    rate_map = F.create_map(
-        *[x for k, v in rates.items() for x in (F.lit(k), F.lit(float(v)))]
-    )
-    rate = F.coalesce(
-        rate_map[F.col(strata_col)], F.lit(float(default_rate))
-    )
+    rate = _stratum_rate(strata_col, tuple(rates.items()), float(default_rate))
     return df.filter(sample_fraction(id_col, seed) < rate)
+
+
+@memo_column
+def _stratum_rate(strata_col: str, rates: tuple, default_rate: float) -> Column:
+    """:func:`mixture_sample`'s per-row rate: a MAP literal of
+    ``rates`` (``(stratum, rate)`` pairs) looked up by stratum."""
+    rate_map = F.create_map(
+        *[x for k, v in rates for x in (F.lit(k), F.lit(float(v)))]
+    )
+    return F.coalesce(rate_map[F.col(strata_col)], F.lit(default_rate))
 
 
 def sample_n_per_group(

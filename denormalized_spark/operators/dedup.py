@@ -27,7 +27,7 @@ from denormalized_spark.operators._bucketing import (
     bucket_pairs,
     capped_bucket_collect,
 )
-
+from denormalized_spark.operators._memo import memo_column
 from denormalized_spark.operators.text import tokens
 
 
@@ -85,6 +85,7 @@ def eval_once(col: Column, build) -> Column:
     return F.element_at(F.transform(F.array(col), build), 1)
 
 
+@memo_column
 def shingle_hashes(
     text: Column | str, n: int = 3, unit: str = "word"
 ) -> Column:
@@ -186,6 +187,7 @@ def minhash_params(i: int) -> tuple[int, int]:
     return a, b
 
 
+@memo_column
 def minhash_signature(
     text: Column | str,
     num_hashes: int = 16,
@@ -1049,6 +1051,7 @@ def connected_components(
     return labels
 
 
+@memo_column
 def band_structs(minhash_col: Column | str, num_hashes: int, bands: int) -> Column:
     """LSH banding of a minhash signature → array<struct<band int,
     band_key string>> (band key = md5 of the band's signature slice).

@@ -31,6 +31,7 @@ from denormalized_spark.operators._bucketing import (
     bucket_pin_partitions,
     capped_bucket_collect,
 )
+from denormalized_spark.operators._memo import memo_column
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -48,7 +49,11 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
+@memo_column
+def cosine(a: Column | str, b: Column | str) -> Column:
+    """Cosine similarity of two array columns (or column names)."""
+    a = F.col(a) if isinstance(a, str) else a
+    b = F.col(b) if isinstance(b, str) else b
     return dot(a, b) / (norm(a) * norm(b))
 
 

@@ -19,12 +19,15 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from denormalized_spark.operators._memo import memo_column
+
 #: Minimal English stopword list used by the quality / language-ID
 #: heuristics. Deliberately small and frozen: it is part of the
 #: operator's contract (the DuckDB oracle embeds the same list).
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 
+@memo_column
 def tokens(text: Column | str, pattern: str = r"\s+") -> Column:
     """Whitespace tokenization; drops empty tokens so leading/trailing
     whitespace doesn't produce phantom tokens."""

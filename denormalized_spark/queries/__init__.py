@@ -32,4 +32,4 @@ from denormalized_spark.queries import (  # noqa: F401  (each module registers i
     temporal,
     udf_queries,
 )
-from denormalized_spark.queries._util import ORACLES, QUERIES  # noqa: F401
+from denormalized_spark.queries._util import EAGER, ORACLES, QUERIES  # noqa: F401

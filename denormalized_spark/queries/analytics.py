@@ -446,6 +446,7 @@ def _pr_iter_sql(i: int) -> str:
     {_pr_iter_sql(2)}
     SELECT node, rank FROM r2
     """,
+    eager=True,
 )
 def graph_pagerank_events(spark: SparkSession, sf: str) -> DataFrame:
     """PageRank (Page et al. 1999) over the event-type transition
@@ -510,6 +511,7 @@ def _prw_iter_sql(i: int) -> str:
     {_prw_iter_sql(2)}
     SELECT node, rank FROM wr2
     """,
+    eager=True,
 )
 def graph_pagerank_weighted(spark: SparkSession, sf: str) -> DataFrame:
     """WEIGHTED PageRank over the event-type transition graph: each
@@ -564,6 +566,7 @@ def graph_pagerank_weighted(spark: SparkSession, sf: str) -> DataFrame:
            FROM nodes n LEFT JOIN h2r r ON n.node = r.k)
     SELECT h2.node, h2.hub, a2.auth FROM h2 JOIN a2 USING (node)
     """,
+    eager=True,
 )
 def graph_hits_events(spark: SparkSession, sf: str) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over the event-type
@@ -1010,6 +1013,7 @@ def agg_gini_spend(spark: SparkSession, sf: str) -> DataFrame:
             CROSS JOIN nb
     ORDER BY lift_micro DESC, item_a, item_b LIMIT 20
     """,
+    eager=True,
 )
 def agg_basket_lift(spark: SparkSession, sf: str) -> DataFrame:
     """Market-basket pair lift over orders (operators/analytics.
@@ -1943,7 +1947,7 @@ def _kcore_oracle() -> str:
     """
 
 
-@q("graph_kcore_parts", _kcore_oracle())
+@q("graph_kcore_parts", _kcore_oracle(), eager=True)
 def graph_kcore_parts(spark: SparkSession, sf: str) -> DataFrame:
     """{k}-core of the part co-purchase graph (parts edge when bought
     in the same order, the covisitation bucket-cap contract):
@@ -2334,7 +2338,7 @@ def _lpa_oracle() -> str:
     """
 
 
-@q("graph_label_propagation", _lpa_oracle())
+@q("graph_label_propagation", _lpa_oracle(), eager=True)
 def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     """Community detection on the part co-purchase graph by
     synchronous label propagation (operators/graph.label_propagation,
@@ -3286,7 +3290,7 @@ def _markov_oracle(iterations: int = 8, tail: str | None = None) -> str:
     ){its}{final}"""
 
 
-@q("events_markov_stationary", _markov_oracle())
+@q("events_markov_stationary", _markov_oracle(), eager=True)
 def events_markov_stationary(spark: SparkSession, sf: str) -> DataFrame:
     """Stationary distribution of the event-type Markov chain
     (operators/analytics.markov_stationary) by quantized power
@@ -3385,6 +3389,7 @@ def events_qini_uplift(spark: SparkSession, sf: str) -> DataFrame:
       FROM ps
     ) ORDER BY state
     """),
+    eager=True,
 )
 def events_markov_entropy_rate(spark: SparkSession, sf: str) -> DataFrame:
     """Entropy rate of the event-type Markov chain (operators/

@@ -366,6 +366,7 @@ def dedup_minhash_estimate(spark: SparkSession, sf: str) -> DataFrame:
     )
     SELECT id AS doc_id, min(label) AS canonical_id FROM reach GROUP BY id
     """,
+    eager=True,
 )
 def dedup_connected_components(spark: SparkSession, sf: str) -> DataFrame:
     """TRANSITIVE near-dup dedup: LSH-gated Jaccard pairs → connected
@@ -877,9 +878,7 @@ def sim_topk_query0(spark: SparkSession, sf: str) -> DataFrame:
     return (
         scored.select(
             "vec_id",
-            F.round(similarity.cosine(F.col("embedding"), F.col("qvec")), 6).alias(
-                "cosine_sim"
-            ),
+            F.round(similarity.cosine("embedding", "qvec"), 6).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
         .limit(10)
@@ -1232,6 +1231,7 @@ _SD_TAU, _SD_CAP = 0.3, 1024  # cap ≈ 5× the largest test-SF cluster
     SELECT a.vec_id, a.cluster FROM a0 a
     WHERE a.vec_id NOT IN (SELECT dup_id FROM dups)
     """,
+    eager=True,
 )
 def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): coarse-quantize the corpus
@@ -1424,7 +1424,7 @@ def curation_semantic_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
 _KC_K = 6
 
 
-@q("sim_kcenter_select", _kcenter_oracle(_KC_K))
+@q("sim_kcenter_select", _kcenter_oracle(_KC_K), eager=True)
 def sim_kcenter_select(spark: SparkSession, sf: str) -> DataFrame:
     """Greedy k-center / farthest-point coreset selection (Gonzalez
     1985; Sener & Savarese 2018): pick the 6 most mutually distant
@@ -1500,6 +1500,7 @@ def sketch_cm_cells(spark: SparkSession, sf: str) -> DataFrame:
     SELECT tok, cm_count, exact_count FROM est
     WHERE cm_count >= CAST(ceil((SELECT count(*) FROM tok) / 50.0) AS BIGINT)
     """,
+    eager=True,
 )
 def sketch_cm_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     """Heavy hitters via the Count-Min sketch: tokens whose estimate
@@ -2237,6 +2238,7 @@ def multimodal_audio_neardup(spark: SparkSession, sf: str) -> DataFrame:
     )
     SELECT id, min(label) AS label FROM reach GROUP BY id
     """,
+    eager=True,
 )
 def multimodal_image_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """Image dedup END TO END: the perceptual-hash near-dup pairs of
@@ -2443,7 +2445,7 @@ def _linear_trainer_oracle(dim: int = 8, iters: int = 3, lr_bits: int = 25) -> s
     return "WITH " + ",\n".join(ctes) + "\n" + finals
 
 
-@q("text_train_linear_langid", _linear_trainer_oracle())
+@q("text_train_linear_langid", _linear_trainer_oracle(), eager=True)
 def text_train_linear_langid(spark: SparkSession, sf: str) -> DataFrame:
     """TRAIN a hashed-feature linear language gate by batch gradient
     descent (operators/text.train_linear_classifier): label = lang='en',
@@ -2828,6 +2830,7 @@ _QUALITY_SQL = f"""(
            count(*) AS n_members
     FROM ranked GROUP BY cluster
     """.replace("{toks}", _TOKS),
+    eager=True,
 )
 def dedup_cluster_representatives(spark: SparkSession, sf: str) -> DataFrame:
     """Quality-aware survivor selection: near-dup connected components
@@ -3034,7 +3037,7 @@ def _bpe_oracle(
     return "".join(parts) + "\n    " + selects
 
 
-@q("text_bpe_train", _bpe_oracle(num_merges=6, max_vocab=2000))
+@q("text_bpe_train", _bpe_oracle(num_merges=6, max_vocab=2000), eager=True)
 def text_bpe_train(spark: SparkSession, sf: str) -> DataFrame:
     """The BPE tokenizer-training loop itself (operators/text.
     bpe_train): 6 merge rounds over the top-2000-word vocabulary.
@@ -3146,6 +3149,7 @@ _SPLIT_FRAC = (
            CAST(sum(CASE WHEN grp_cross THEN 1 ELSE 0 END) AS BIGINT)
     FROM pc
     """,
+    eager=True,
 )
 def curation_split_leakage(spark: SparkSession, sf: str) -> DataFrame:
     """Train/val leakage audit — the invariant the group-aware split
@@ -3404,7 +3408,7 @@ def _bpe_pack_oracle(num_merges: int, max_vocab: int, seq_len: int) -> str:
     )
 
 
-@q("text_bpe_pack_sequences", _bpe_pack_oracle(6, 2000, 128))
+@q("text_bpe_pack_sequences", _bpe_pack_oracle(6, 2000, 128), eager=True)
 def text_bpe_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     """The shard MATERIALIZER (operators/text.pack_token_sequences):
     the tokenized corpus laid end to end in doc order and chopped
@@ -3430,7 +3434,7 @@ def text_bpe_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@q("text_bpe_tokenize_ids", _bpe_tokenize_oracle(num_merges=6, max_vocab=2000))
+@q("text_bpe_tokenize_ids", _bpe_tokenize_oracle(num_merges=6, max_vocab=2000), eager=True)
 def text_bpe_tokenize_ids(spark: SparkSession, sf: str) -> DataFrame:
     """The training-shard write-out step (operators/text.bpe_tokenize):
     the learned merge table applied to every document, emitting the
@@ -3457,7 +3461,7 @@ def text_bpe_tokenize_ids(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@q("text_bpe_encode", _bpe_encode_oracle(num_merges=6, max_vocab=2000))
+@q("text_bpe_encode", _bpe_encode_oracle(num_merges=6, max_vocab=2000), eager=True)
 def text_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
     """The encode half of the tokenizer loop (operators/text.
     bpe_encode_counts): train the 6-merge table, bake it into the
@@ -3477,7 +3481,7 @@ def text_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@q("text_bpe_encode_full", _bpe_encode_oracle(num_merges=6, max_vocab=2000))
+@q("text_bpe_encode_full", _bpe_encode_oracle(num_merges=6, max_vocab=2000), eager=True)
 def text_bpe_encode_full(spark: SparkSession, sf: str) -> DataFrame:
     """The PRODUCTION encode path (operators/text.bpe_encode_table):
     the same trained merge table applied through the Arrow-batched
@@ -3846,7 +3850,7 @@ def _pq_distortion_oracle(m: int = 4, dim: int = 64) -> str:
     """
 
 
-@q("sim_pq_distortion", _pq_distortion_oracle())
+@q("sim_pq_distortion", _pq_distortion_oracle(), eager=True)
 def sim_pq_distortion(spark: SparkSession, sf: str) -> DataFrame:
     """Per-subquantizer PQ reconstruction MSE (operators/similarity.
     pq_distortion; the distortion of Jégou et al. 2011 §2) over the
@@ -3919,7 +3923,7 @@ def _ivf_pq_oracle(
     )
 
 
-@q("sim_ivf_pq_topk", _ivf_pq_oracle())
+@q("sim_ivf_pq_topk", _ivf_pq_oracle(), eager=True)
 def sim_ivf_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     """The COMPOSED production retrieval path
     (operators/similarity.ivf_pq_topk): the stored index carries each
@@ -3943,7 +3947,7 @@ def sim_ivf_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@q("sim_pq_topk", _pq_topk_oracle())
+@q("sim_pq_topk", _pq_topk_oracle(), eager=True)
 def sim_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     """PRODUCT-QUANTIZED ANN with asymmetric-distance scoring
     (operators/similarity.pq_encode / pq_topk): vectors become m=4
@@ -4024,7 +4028,7 @@ def _pq_train_oracle(m: int = 4, k: int = 8, sub: int = 16) -> str:
     """
 
 
-@q("sim_pq_train", _pq_train_oracle())
+@q("sim_pq_train", _pq_train_oracle(), eager=True)
 def sim_pq_train(spark: SparkSession, sf: str) -> DataFrame:
     """The k-means PQ codebook TRAINER itself, value-checked
     cross-engine (operators/similarity.pq_codebooks_kmeans): m=4
@@ -4866,6 +4870,7 @@ def _pca_power_sql(iters: int = 3) -> str:
            CAST(sum(q.v[w.i] * w.v) AS BIGINT) AS pc1_e7
     FROM xq q, v3 w GROUP BY q.vec_id
     """,
+    eager=True,
 )
 def sim_pca_project(spark: SparkSession, sf: str) -> DataFrame:
     """Distributed PCA, end to end: one-pass integer moment summary →
@@ -5358,6 +5363,7 @@ def _td_q_sql(q: float) -> str:
     SELECT * FROM {_td_q_sql(0.01)} a, {_td_q_sql(0.25)} b, {_td_q_sql(0.5)} c2,
                   {_td_q_sql(0.75)} d, {_td_q_sql(0.99)} e
     """,
+    eager=True,
 )
 def sketch_tdigest_quantiles(spark: SparkSession, sf: str) -> DataFrame:
     """p1/p25/p50/p75/p99 of extended price from the t-digest: the
@@ -6141,7 +6147,7 @@ def _wordpiece_oracle(num_merges: int, max_vocab: int) -> str:
     return "".join(parts) + f" SELECT * FROM ({selects}) ORDER BY rank"
 
 
-@q("text_wordpiece_train", _wordpiece_oracle(num_merges=6, max_vocab=2000))
+@q("text_wordpiece_train", _wordpiece_oracle(num_merges=6, max_vocab=2000), eager=True)
 def text_wordpiece_train(spark: SparkSession, sf: str) -> DataFrame:
     """WordPiece tokenizer induction (operators/text.wordpiece_train;
     Schuster & Nakajima 2012 — the BERT tokenizer's training rule)
@@ -6342,7 +6348,7 @@ def _mmr_oracle(k: int = 8) -> str:
     return "".join(parts) + f" SELECT * FROM ({sel}) ORDER BY round"
 
 
-@q("sim_mmr_rerank", _mmr_oracle())
+@q("sim_mmr_rerank", _mmr_oracle(), eager=True)
 def sim_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
     """Maximal-Marginal-Relevance diversified top-8 for query vector 0
     (operators/similarity.mmr_select; Carbonell & Goldstein 1998,
@@ -6553,7 +6559,7 @@ def _nprobe_curve_oracle(ps=(1, 2, 4, 8), k: int = 10, qid: int = 0) -> str:
     """
 
 
-@q("sim_nprobe_curve", _nprobe_curve_oracle())
+@q("sim_nprobe_curve", _nprobe_curve_oracle(), eager=True)
 def sim_nprobe_curve(spark: SparkSession, sf: str) -> DataFrame:
     """Recall@10 vs nprobe ∈ {1,2,4,8} — the OTHER axis of the ANN
     tuning plane beside sim_recall_curve's k sweep: how many IVF
@@ -7034,6 +7040,7 @@ def dedup_eval_pairs(spark: SparkSession, sf: str) -> DataFrame:
                 ELSE 0 END)::BIGINT AS bcubed_f1_micro
     FROM roll
     """,
+    eager=True,
 )
 def dedup_eval_bcubed(spark: SparkSession, sf: str) -> DataFrame:
     """B-cubed CLUSTER-level evaluation of the production dedup
@@ -7300,6 +7307,7 @@ def _textrank_iter_sql(i: int) -> str:
     SELECT node AS word, rank FROM tr3
     ORDER BY rank DESC, word ASC LIMIT 20
     """,
+    eager=True,
 )
 def text_textrank_keywords(spark: SparkSession, sf: str) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau 2004): weighted
@@ -7665,6 +7673,7 @@ def dedup_fastcdc_maxclamp(spark: SparkSession, sf: str) -> DataFrame:
                 AS BIGINT) AS keep_ratio_milli
     FROM wts GROUP BY source ORDER BY source
     """,
+    eager=True,
 )
 def curation_softdedup_weights(spark: SparkSession, sf: str) -> DataFrame:
     """Soft deduplication rollup (operators/curation.softdedup_weights):
@@ -7763,7 +7772,7 @@ def _pca_oracle(dim: int = 8, iterations: int = 8) -> str:
     """
 
 
-@q("sim_pca_top_component", _pca_oracle())
+@q("sim_pca_top_component", _pca_oracle(), eager=True)
 def sim_pca_top_component(spark: SparkSession, sf: str) -> DataFrame:
     """Top principal component of the first 8 embedding coordinates
     (operators/similarity.pca_power_top_component; von Mises power

@@ -1685,6 +1685,7 @@ def agg_hhi_concentration(spark: SparkSession, sf: str) -> DataFrame:
            sum(cents)::BIGINT AS revenue_cents
     FROM gated GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    eager=True,
 )
 def join_bloom_semi_revenue(spark: SparkSession, sf: str) -> DataFrame:
     """Bloom-gated semi join (operators/joins.bloom_semi_join; the

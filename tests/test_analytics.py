@@ -1660,6 +1660,28 @@ def test_markov_entropy_rate_deterministic_and_uniform(spark):
     assert abs(out2["RATE"].h_cond_micro - ln2_micro_terms) < 0.02 * ln2_micro_terms
 
 
+@pytest.mark.parametrize("op", ["markov_stationary", "markov_entropy_rate"])
+def test_markov_collect_bound_guard(spark, monkeypatch, op):
+    """The build-time collect of transition cells is bounded: a chain
+    with more cells than MARKOV_MAX_CELLS raises ValueError instead of
+    pulling |types|² rows to the driver; exactly at the bound it runs."""
+    import datetime
+
+    from denormalized_spark.operators import analytics
+
+    base = datetime.datetime(2024, 1, 1)
+    seq = ["A", "A", "B", "B", "A"]  # cells A->A, A->B, B->B, B->A
+    df = spark.createDataFrame(
+        [(0, i, base + datetime.timedelta(minutes=i), s) for i, s in enumerate(seq)],
+        "user_id long, event_id long, ts timestamp, event_type string",
+    )
+    monkeypatch.setattr(analytics, "MARKOV_MAX_CELLS", 3)
+    with pytest.raises(ValueError, match="more than 3 rows"):
+        getattr(analytics, op)(df)
+    monkeypatch.setattr(analytics, "MARKOV_MAX_CELLS", 4)
+    assert {"A", "B"} <= {r.state for r in getattr(analytics, op)(df).collect()}
+
+
 def test_qini_uplift_clamps_out_of_range_scores(spark):
     """Uncalibrated scores outside [0,1] land in the edge buckets
     instead of minting negative bucket ids (r13 advisor edge)."""

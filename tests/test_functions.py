@@ -871,3 +871,193 @@ class TestPackTokenSequences:
         )
         plan = packed._jdf.queryExecution().analyzed().toString()
         assert " div " in plan, "pack must keep integer div seq-id arithmetic"
+
+
+# ---- reference-compat wrappers vs DuckDB -----------------------------------
+#
+# One row table, the same values in both engines. Each case is a Spark
+# column built through ``dnf`` and its oracle: DuckDB SQL over the same
+# table, or a Python function of the row where DuckDB lacks the
+# function.
+
+_COMPAT_ROWS = [
+    (1, "hello,world", 12, 18, 1.0, 2.0, True, [1, 2, 3], [3, 4], 1000),
+    (2, "abc", 4, 6, 2.0, 3.5, True, [2, 2, 5], [7], 1_700_000_000_123),
+    (3, "a,b,c", 0, 5, 3.0, 3.9, False, [4], [4], 0),
+    (4, "lol", 7, 3, 4.0, 6.1, True, [1, 2], [2, 1], 86_400_000),
+    (5, "xyz", 9, 27, 5.0, 5.5, True, [5, 6, 7], [8, 6], 59_999),
+]
+_COMPAT_COLS = "id s i j x y b arr needles ms".split()
+_COMPAT_SCHEMA = (
+    "id int, s string, i int, j int, x double, y double, b boolean, "
+    "arr array<int>, needles array<int>, ms long"
+)
+
+
+def _sha(bits):
+    import hashlib
+
+    return lambda r: hashlib.new(f"sha{bits}", r["s"].encode()).hexdigest()
+
+
+_SCALAR_CASES = {
+    "iszero": (lambda: dnf.iszero("i"), "i = 0"),
+    "char_length": (lambda: dnf.char_length("s"), "length(s)"),
+    "ends_with": (lambda: dnf.ends_with("s", "c"), "ends_with(s, 'c')"),
+    "starts_with": (lambda: dnf.starts_with("s", "a"), "starts_with(s, 'a')"),
+    "find_in_set": (
+        lambda: dnf.find_in_set("s", "abc,lol,xyz"),
+        lambda r: (["abc", "lol", "xyz"].index(r["s"]) + 1) if r["s"] in ("abc", "lol", "xyz") else 0,
+    ),
+    "instr": (lambda: dnf.instr("s", "l"), "instr(s, 'l')"),
+    "strpos": (lambda: dnf.strpos("s", "l"), "strpos(s, 'l')"),
+    "replace": (lambda: dnf.replace("s", "l", "L"), "replace(s, 'l', 'L')"),
+    "split_part": (lambda: dnf.split_part("s", ",", 2), "split_part(s, ',', 2)"),
+    "substr_index": (
+        lambda: dnf.substr_index("s", ",", 2),
+        lambda r: ",".join(r["s"].split(",")[:2]),
+    ),
+    "to_hex": (lambda: dnf.to_hex("j"), "lower(to_hex(j))"),
+    "regexp_like": (lambda: dnf.regexp_like("s", "l+o"), "regexp_matches(s, 'l+o')"),
+    # every match, as DataFusion's regexp_replace with the 'g' flag
+    "regexp_replace": (
+        lambda: dnf.regexp_replace("s", "l+", "L"),
+        "regexp_replace(s, 'l+', 'L', 'g')",
+    ),
+    "sha224": (lambda: dnf.sha224("s"), _sha(224)),
+    "sha384": (lambda: dnf.sha384("s"), _sha(384)),
+    "sha512": (lambda: dnf.sha512("s"), _sha(512)),
+    # timestamps compared as epoch micros: no local-timezone conversion
+    "to_timestamp_millis": (
+        lambda: F.unix_micros(dnf.to_timestamp_millis("ms")),
+        "epoch_us(epoch_ms(ms))",
+    ),
+    "to_timestamp_micros": (
+        lambda: F.unix_micros(dnf.to_timestamp_micros("ms")),
+        "epoch_us(make_timestamp(ms))",
+    ),
+    "to_timestamp_seconds": (
+        lambda: F.unix_micros(dnf.to_timestamp_seconds("j")),
+        "epoch_us(make_timestamp(j * 1000000))",
+    ),
+    "to_unixtime": (
+        lambda: dnf.to_unixtime(dnf.to_timestamp_millis("ms")),
+        "CAST(floor(ms / 1000) AS BIGINT)",
+    ),
+    "make_array": (lambda: dnf.make_array("i", "j"), "[i, j]"),
+    "array_append": (lambda: dnf.array_append("arr", 9), "list_append(arr, 9)"),
+    "array_concat": (lambda: dnf.array_concat("arr", "needles"), "list_concat(arr, needles)"),
+    "array_dims": (lambda: dnf.array_dims("arr"), lambda r: [len(r["arr"])]),
+    "array_element": (lambda: dnf.array_element("arr", 2), "arr[2]"),
+    "array_has": (lambda: dnf.array_has("arr", 2), "list_contains(arr, 2)"),
+    "array_has_all": (lambda: dnf.array_has_all("arr", "needles"), "list_has_all(arr, needles)"),
+    "array_has_any": (lambda: dnf.array_has_any("arr", "needles"), "list_has_any(arr, needles)"),
+    "array_join": (lambda: dnf.array_join("arr", "-"), "array_to_string(arr, '-')"),
+    "array_length": (lambda: dnf.array_length("arr"), "len(arr)"),
+    "array_ndims": (lambda: dnf.array_ndims("arr"), lambda r: 1),
+    "array_pop_back": (lambda: dnf.array_pop_back("arr"), lambda r: r["arr"][:-1]),
+    "array_pop_front": (lambda: dnf.array_pop_front("arr"), lambda r: r["arr"][1:]),
+    "array_position": (lambda: dnf.array_position("arr", 2), "list_position(arr, 2)"),
+    "array_positions": (
+        lambda: dnf.array_positions("arr", 2),
+        lambda r: [k + 1 for k, v in enumerate(r["arr"]) if v == 2],
+    ),
+    "array_prepend": (lambda: dnf.array_prepend(0, "arr"), "list_prepend(0, arr)"),
+    "array_repeat": (lambda: dnf.array_repeat(F.col("i"), 3), lambda r: [r["i"]] * 3),
+}
+
+_AGG_CASES = {
+    "count_star": (lambda: dnf.count_star(), "count(*)"),
+    "approx_median": (lambda: dnf.approx_median("x"), "quantile_disc(x, 0.5)"),
+    "approx_percentile_cont": (
+        lambda: dnf.approx_percentile_cont("x", 0.25),
+        "quantile_disc(x, 0.25)",
+    ),
+    "array_agg": (lambda: F.array_sort(dnf.array_agg("i")), "list_sort(list(i))"),
+    "covar_pop": (lambda: dnf.covar_pop("y", "x"), "covar_pop(y, x)"),
+    "covar_samp": (lambda: dnf.covar_samp("y", "x"), "covar_samp(y, x)"),
+    "stddev_pop": (lambda: dnf.stddev_pop("y"), "stddev_pop(y)"),
+    "var_pop": (lambda: dnf.var_pop("y"), "var_pop(y)"),
+    "bit_and": (lambda: dnf.bit_and("j"), "bit_and(j)"),
+    "bit_or": (lambda: dnf.bit_or("j"), "bit_or(j)"),
+    "bit_xor": (lambda: dnf.bit_xor("j"), "bit_xor(j)"),
+    "bool_and": (lambda: dnf.bool_and("b"), "bool_and(b)"),
+    "bool_or": (lambda: dnf.bool_or("b"), "bool_or(b)"),
+    **{
+        f"regr_{k}": (lambda k=k: getattr(dnf, f"regr_{k}")("y", "x"), f"regr_{k}(y, x)")
+        for k in ("avgx", "avgy", "count", "intercept", "r2", "slope", "sxx", "sxy", "syy")
+    },
+}
+
+
+def _same(got, want) -> bool:
+    if isinstance(want, float) or isinstance(got, float):
+        return got is not None and want is not None and math.isclose(got, want, rel_tol=1e-9, abs_tol=1e-12)
+    return (list(got) if isinstance(got, (list, tuple)) else got) == want
+
+
+@pytest.fixture(scope="module")
+def compat_results(spark):
+    """(Spark row, DuckDB row, source row) per case, from one Spark job
+    and one DuckDB query for the scalar cases and likewise for the
+    aggregate cases."""
+    import duckdb
+    import pandas as pd
+
+    df = spark.createDataFrame(_COMPAT_ROWS, _COMPAT_SCHEMA)
+    con = duckdb.connect()
+    con.register("src", pd.DataFrame(_COMPAT_ROWS, columns=_COMPAT_COLS))
+    con.execute("CREATE TABLE t AS SELECT id::INT AS id, s, i::INT AS i, j::INT AS j, x, y, b, "
+                "arr::INT[] AS arr, needles::INT[] AS needles, ms::BIGINT AS ms FROM src")
+    duck_sql = {k: o for k, (_, o) in _SCALAR_CASES.items() if isinstance(o, str)}
+    got = df.select("id", *[b().alias(k) for k, (b, _) in _SCALAR_CASES.items()]).orderBy("id").collect()
+    want = con.execute(
+        "SELECT " + ", ".join(f"{o} AS {k}" for k, o in duck_sql.items()) + " FROM t ORDER BY id"
+    ).fetchall()
+    src = [dict(zip(_COMPAT_COLS, r)) for r in _COMPAT_ROWS]
+    out = {}
+    for k, (_, o) in _SCALAR_CASES.items():
+        exp = [w[list(duck_sql).index(k)] for w in want] if k in duck_sql else [o(r) for r in src]
+        out[k] = ([r[k] for r in got], exp)
+    agg = df.agg(*[b().alias(k) for k, (b, _) in _AGG_CASES.items()]).collect()[0]
+    agg_want = con.execute(
+        "SELECT " + ", ".join(f"{o} AS {k}" for k, (_, o) in _AGG_CASES.items()) + " FROM t"
+    ).fetchall()[0]
+    for n, k in enumerate(_AGG_CASES):
+        out[k] = ([agg[k]], [agg_want[n]])
+    con.close()
+    return out
+
+
+@pytest.mark.parametrize("name", sorted(_SCALAR_CASES) + sorted(_AGG_CASES))
+def test_reference_wrapper_matches_oracle(compat_results, name):
+    got, want = compat_results[name]
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert _same(g, w), (name, got, want)
+
+
+def test_nth_value_matches_duckdb(spark):
+    import duckdb
+    from pyspark.sql import Window
+
+    df = spark.createDataFrame(_COMPAT_ROWS, _COMPAT_SCHEMA)
+    got = [r["v"] for r in df.select(
+        "id", dnf.nth_value("x", 2).over(Window.orderBy("id")).alias("v")
+    ).orderBy("id").collect()]
+    xs = ", ".join(f"({r[0]}, {r[4]})" for r in _COMPAT_ROWS)
+    want = [r[0] for r in duckdb.sql(
+        f"SELECT nth_value(x, 2) OVER (ORDER BY id) FROM (VALUES {xs}) t(id, x) ORDER BY id"
+    ).fetchall()]
+    assert got == want
+
+
+def test_current_time_is_wall_clock_hms(spark):
+    import datetime
+
+    got = one(spark, dnf.current_time())
+    now = datetime.datetime.now(datetime.timezone.utc)
+    parsed = datetime.datetime.strptime(got, "%H:%M:%S").replace(
+        year=now.year, month=now.month, day=now.day, tzinfo=datetime.timezone.utc
+    )
+    assert abs((now - parsed).total_seconds()) < 120 or abs((now - parsed).total_seconds()) > 86_280
