@@ -28,19 +28,17 @@ def _configure(spark: SparkSession) -> SparkSession:
     same semantics — in particular the parquet timestamp confs
     (inferTimestampNTZ=false), without which the driver's session reads
     events.ts as TIMESTAMP_NTZ while the test suite sees TIMESTAMP.
-    The shuffle/state partition count is derived from this session's
-    cores by the same function get_spark uses."""
-    from denormalized_spark.session import (
-        RUNTIME_CONF,
-        apply_default_shuffle_partitions,
-    )
+    The shuffle/state partition count and the checkpoint file manager
+    are derived from this session by the same function get_spark
+    uses."""
+    from denormalized_spark.session import RUNTIME_CONF, apply_session_defaults
 
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf already fixed; defaults are acceptable
-    apply_default_shuffle_partitions(spark)
+    apply_session_defaults(spark)
     return spark
 
 

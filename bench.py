@@ -121,8 +121,9 @@ def main() -> None:
     # warm re-execution: repeated .collect() on the same DataFrame
     # reuses its QueryExecution (no re-analysis, cached codegen),
     # whereas each noop write above builds a fresh one and re-pays
-    # Catalyst analysis+optimization — tools/profile_stages.py measured
-    # that fixed cost at 89-95% of these lanes' walls at sf0.1.
+    # Catalyst analysis+optimization — r14 runs of the since-deleted
+    # tools/profile_stages.py measured that fixed cost at 89-95% of
+    # these lanes' walls at sf0.1.
     # `queries_warm_exec` is the part that scales with data. Caveat
     # (documented since r14): a warm re-collect reuses AQE's already-
     # materialized shuffle stages, so it UNDERSTATES multi-stage
@@ -223,7 +224,8 @@ def main() -> None:
         "queries_cold": cold,
         # truly-warm re-execution (same QueryExecution, no re-analysis)
         # for the r13 weak-by-record lanes — the data-scaling share of
-        # their walls; see tools/profile_stages.py for the full split
+        # their walls; r14 runs of the since-deleted tools/profile_stages.py
+        # gave the full split
         "queries_warm_exec": warm_exec,
         "oracle_sec": oracle_sec,
         "oracle_total": round(sum(v for v in oracle_sec.values() if v), 3),

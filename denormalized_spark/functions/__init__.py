@@ -99,10 +99,14 @@ def median(expr, distinct=False, filter=None):  # noqa: A002
         F.collect_set(x).cast("array<double>") if distinct
         else F.collect_list(x.cast("double"))
     )
+    # No guard on the group size: ``get`` is NULL past either end of
+    # the array, so an empty group gives NULL, and both middle values
+    # sit in the (always evaluated) condition, which makes the sort a
+    # common subexpression that codegen evaluates once per group.
     n = F.size(a)
-    lo = F.element_at(a, F.floor((n - 1) / 2).cast("int") + 1)
-    hi = F.element_at(a, F.ceil((n - 1) / 2).cast("int") + 1)
-    return F.when(n > 0, F.when(lo == hi, lo).otherwise(lo * 0.5 + hi * 0.5))
+    lo = F.get(a, F.floor((n - 1) / 2).cast("int"))
+    hi = F.get(a, F.floor(n / 2).cast("int"))
+    return F.when(lo == hi, lo).otherwise(lo * 0.5 + hi * 0.5)
 
 
 def approx_distinct(expr, filter=None):  # noqa: A002

@@ -620,7 +620,8 @@ def curation_full_funnel(spark: SparkSession, sf: str) -> DataFrame:
     idle-box bench is back to 1.51 s (~2.0× own-oracle, near the r10
     1.6×). Plan unchanged.
 
-    Stage split (r14 post-optimization, tools/profile_stages.py,
+    Stage split (r14 post-optimization runs of the since-deleted
+    tools/profile_stages.py,
     idle box, sf0.1, min-of-3): cold 1.53 s, WARM RE-EXECUTION
     0.089 s → compile share 94%. Cumulative stage walls:
     quality_filter 0.75 s, +fingerprint_dedup 0.03 s, +decontaminate
@@ -704,7 +705,8 @@ def curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     because contention inflates Spark's task-scheduling walls far
     more than DuckDB's embedded execution.
 
-    Stage split (r14 post-optimization, tools/profile_stages.py,
+    Stage split (r14 post-optimization runs of the since-deleted
+    tools/profile_stages.py,
     idle box, sf0.1, min-of-3): cold 1.01 s, WARM RE-EXECUTION
     0.071 s → compile share 93%. Cumulative stage walls:
     decontaminate 0.78 s, +mixture_sample 0.06 s, +token agg 0.32 s

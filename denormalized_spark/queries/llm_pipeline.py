@@ -572,7 +572,8 @@ def text_unigram_quality(spark: SparkSession, sf: str) -> DataFrame:
     idle-box bench is back to 0.55 s (~3× own-oracle, the r10
     level). Plan unchanged (test_plans-verified).
 
-    Stage split (r14 post-optimization, tools/profile_stages.py,
+    Stage split (r14 post-optimization runs of the since-deleted
+    tools/profile_stages.py,
     idle box, sf0.1, min-of-3): cold 1.61-0.76 s across host states,
     WARM RE-EXECUTION 0.09-0.15 s → compile share ~90%. Cumulative
     stage walls: tokenize 0.20 s, +vocab agg 0.53 s, full score agg

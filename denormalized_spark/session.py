@@ -11,14 +11,31 @@ cluster. These defaults are chosen so the same code runs on
   skewed joins, and converts sort-merge joins to broadcast when the
   runtime size allows — this is what makes one static config survive
   a 100× scale-up.
-- ``spark.sql.shuffle.partitions`` defaults to the session's
-  ``defaultParallelism`` (N on ``local[N]``, total executor cores on a
-  cluster; :func:`apply_default_shuffle_partitions`). In batch plans
-  it is the pre-AQE upper bound that AQE coalesces down. Spark turns
-  AQE off for stateful streams, so there it is the number of
-  state-store instances every micro-batch loads, updates and commits,
-  and the checkpoint pins it for the life of the query. Pass a
-  different value via ``extra_conf`` to override it session-wide.
+- Two settings are derived from the built session by
+  :func:`apply_session_defaults`; pass either via ``extra_conf`` to
+  override it session-wide.
+
+  - ``spark.sql.shuffle.partitions`` is the session's
+    ``defaultParallelism`` (N on ``local[N]``, total executor cores on
+    a cluster). In batch plans it is the pre-AQE upper bound that AQE
+    coalesces down. Spark turns AQE off for stateful streams, so there
+    it is the number of state-store instances every micro-batch
+    loads, updates and commits, and the checkpoint pins it for the
+    life of the query.
+  - ``spark.sql.streaming.checkpointFileManagerClass`` is Spark's
+    ``FileSystemBasedCheckpointFileManager`` when the default
+    filesystem is ``file:``. Spark's default FileContext manager asks
+    Hadoop, on every checkpoint-file rename, whether the temp file is
+    a symlink; without Hadoop's native library (absent from the pip
+    build) that check starts a ``readlink`` child process, 7-9 ms
+    each. A 3-file ``window_drain`` on 4 cores started ~370 of them
+    per drain, one per state-store delta and log file. Both managers
+    check that the target is absent, rename with POSIX ``rename(2)``
+    and write Hadoop's ``.crc`` sidecars, and Spark's checkpoint
+    checksums wrap either one. Any other default filesystem (``hdfs``,
+    ``s3a``, ...) keeps Spark's default manager. One ``chmod`` child
+    per created file remains: Hadoop sets local file permissions
+    through a process when its native IO is missing.
 - UTC session timezone: parquet/DuckDB timestamps are UTC-naive;
   pinning the session TZ makes event-time arithmetic deterministic.
 - Arrow enabled: every Python-boundary crossing (pandas UDFs,
@@ -70,19 +87,33 @@ _DEFAULTS = {
 
 
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+CHECKPOINT_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FILESYSTEM_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
-def apply_default_shuffle_partitions(spark: SparkSession) -> None:
-    """Set ``spark.sql.shuffle.partitions`` to the session's
-    ``defaultParallelism``: one state store per core.
-
-    Stateful streams run without AQE, so every shuffle partition is a
-    state-store instance whose per-batch load, update and commit is
-    fixed cost; more instances than cores only queue behind each
-    other. Batch plans keep AQE, which coalesces from this bound.
-    Both :func:`get_spark` and the driver contract's ``_configure``
-    call this, so the two surfaces plan with the same count."""
-    spark.conf.set(SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
+def apply_session_defaults(spark: SparkSession, keep=()) -> None:
+    """Set the confs derived from the session rather than fixed in
+    :data:`RUNTIME_CONF` (the module docstring says why): one
+    shuffle/state partition per core, and the FileSystem-API checkpoint
+    manager when the default filesystem of the session's Hadoop conf is
+    ``file:``. Keys in ``keep`` (the caller's explicit settings) are
+    left alone. Both :func:`get_spark` and the driver contract's
+    ``_configure`` call this, so the two surfaces plan with the same
+    partition count and commit checkpoints through the same manager."""
+    derived = {SHUFFLE_PARTITIONS: str(spark.sparkContext.defaultParallelism)}
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    # One lookup by the full class name: walking the package chain
+    # costs a reflection round trip per segment (~1.6 ms per call).
+    file_system = getattr(spark._jvm, "org.apache.hadoop.fs.FileSystem")
+    default_fs = file_system.getDefaultUri(hadoop_conf)
+    if default_fs.getScheme() == "file":
+        derived[CHECKPOINT_FILE_MANAGER] = FILESYSTEM_CHECKPOINT_MANAGER
+    for key, value in derived.items():
+        if key not in keep:
+            spark.conf.set(key, value)
 
 
 from contextlib import contextmanager
@@ -91,7 +122,7 @@ from contextlib import contextmanager
 @contextmanager
 def state_partition_scope(spark: SparkSession, n: int):
     """Pin one streaming query's state-store partition count away from
-    the session default (:func:`apply_default_shuffle_partitions`).
+    the session default (:func:`apply_session_defaults`).
 
     Spark captures ``spark.sql.shuffle.partitions`` into the streaming
     checkpoint at the first micro-batch and every stateful operator
@@ -123,9 +154,9 @@ def get_spark(
     no cluster manager is configured, so tests and bench share one
     code path with production (where ``master`` comes from
     spark-submit and this argument stays None). The shuffle/state
-    partition count is derived from the built session
-    (:func:`apply_default_shuffle_partitions`) unless ``extra_conf``
-    sets ``spark.sql.shuffle.partitions``.
+    partition count and the checkpoint file manager are derived from
+    the built session (:func:`apply_session_defaults`) unless
+    ``extra_conf`` sets them.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
@@ -141,6 +172,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if SHUFFLE_PARTITIONS not in conf:
-        apply_default_shuffle_partitions(spark)
+    apply_session_defaults(spark, keep=extra_conf or ())
     return spark

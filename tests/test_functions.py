@@ -132,6 +132,48 @@ def test_median_bit_identical_to_spark_percentile(spark):
     assert "collect_list" in plan and "percentile(" not in plan
 
 
+def _result_projection_code(df) -> str:
+    """The Java source Spark generates for the result projection of
+    ``df``'s final aggregate (an ObjectHashAggregate for collect_list,
+    outside whole-stage codegen, so ``debugCodegen`` does not show it),
+    with subexpression elimination on, as the aggregate builds it."""
+    jvm = df.sparkSession._jvm
+    ex = jvm.org.apache.spark.sql.catalyst.expressions
+    agg = df._jdf.queryExecution().sparkPlan()
+    grouping, buffers = agg.groupingExpressions(), agg.aggregateAttributes()
+    inputs = [grouping.apply(i).toAttribute() for i in range(grouping.size())]
+    inputs += [buffers.apply(i) for i in range(buffers.size())]
+    inputs = getattr(ex, "package$AttributeSeq")(jvm.PythonUtils.toSeq(inputs))
+    out = agg.resultExpressions()
+    bound = [ex.BindReferences.bindReference(out.apply(i), inputs, False)
+             for i in range(out.size())]
+    ctx = ex.codegen.CodegenContext()
+    ev = ex.codegen.GenerateUnsafeProjection.createCode(
+        ctx, jvm.PythonUtils.toSeq(bound), True
+    )
+    return ctx.declareAddedFunctions() + ev.code().toString()
+
+
+def test_median_sorts_each_group_once(spark):
+    """The median's plan sorts each group's value list once: the sort is
+    a common subexpression of the result projection, which therefore
+    holds exactly the sort code of one bare ``sort_array`` (a
+    ``when(n > 0, ...)`` guard around the middle values made codegen
+    skip it, and the sort ran 11 times per group)."""
+    import re
+
+    df = spark.range(10).selectExpr("id % 3 AS g", "CAST(id AS double) AS v")
+    one_sort = _result_projection_code(
+        df.groupBy("g").agg(F.sort_array(F.collect_list("v")))
+    )
+    for distinct in (False, True):
+        code = _result_projection_code(
+            df.groupBy("g").agg(dnf.median("v", distinct=distinct))
+        )
+        assert set(re.findall(r"SortArray_\d+", code)) == {"SortArray_0"}
+        assert code.count("parallelSort") == one_sort.count("parallelSort") > 0
+
+
 def test_median_distinct_matches_pandas(spark):
     """median(DISTINCT x): the median of the unique non-NULL values."""
     rows = [(g, None if v is None else i % 7, k) for g, v, i, k in _median_groups(seed=9)]

@@ -1,5 +1,5 @@
 """The shuffle/state partition count: derived from the session's cores
-(``session.apply_default_shuffle_partitions``), applied by both
+(``session.apply_session_defaults``), applied by both
 ``get_spark`` and the driver contract's ``_configure``, overridable per
 session (``extra_conf``) and per query (``state_partition_scope``) —
 and results that do not depend on it.
@@ -26,7 +26,7 @@ from denormalized_spark.operators.windows import window_aggregate
 from denormalized_spark.session import (
     RUNTIME_CONF,
     SHUFFLE_PARTITIONS,
-    apply_default_shuffle_partitions,
+    apply_session_defaults,
     get_spark,
     state_partition_scope,
 )
@@ -56,7 +56,7 @@ def test_extra_conf_partitions_win_over_default(spark):
         s = get_spark("tests", extra_conf={SHUFFLE_PARTITIONS: "7"})
         assert s.conf.get(SHUFFLE_PARTITIONS) == "7"
     finally:
-        apply_default_shuffle_partitions(spark)
+        apply_session_defaults(spark)
     assert spark.conf.get(SHUFFLE_PARTITIONS) == _cores(spark)
 
 
@@ -68,7 +68,7 @@ def test_driver_configure_applies_derived_partitions(spark):
         __spark_entry__._configure(spark)
         assert spark.conf.get(SHUFFLE_PARTITIONS) == _cores(spark)
     finally:
-        apply_default_shuffle_partitions(spark)
+        apply_session_defaults(spark)
 
 
 def _write_json_files(directory, files):
