@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import inspect
 from collections.abc import Callable, Sequence
+from functools import partial
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -531,6 +532,30 @@ class DataStream:
         )
         return DataStream(out, event_time=None, watermark=self.watermark)
 
+    def _near_gate(
+        self,
+        caller: str,
+        stream_gate: Callable[..., DataFrame],
+        batch_gate: Callable[..., DataFrame],
+        cols: tuple,
+        emit_window_ms: int,
+        /,
+        **kwargs: Any,
+    ) -> DataFrame:
+        """The stream-or-batch dispatch shared by the near-dup gates:
+        the online gate (watermark-TTL'd bucket state, closed by an
+        ``emit_window_ms`` window) on a stream, its deterministic
+        earliest-(event_time, id) twin on a batch. Bucket ownership is
+        temporal, so both need the event-time column."""
+        if self.event_time is None:
+            raise ValueError(f"{caller}() requires an event-time column")
+        if self._df.isStreaming:
+            return stream_gate(
+                self._df, *cols, self.event_time, watermark=self.watermark,
+                emit_window_ms=emit_window_ms, **kwargs,
+            )
+        return batch_gate(self._df, *cols, self.event_time, **kwargs)
+
     def near_dedup(
         self,
         id_col: str = "doc_id",
@@ -563,8 +588,6 @@ class DataStream:
             near_dedup_stream,
         )
 
-        if self.event_time is None:
-            raise ValueError("near_dedup() requires an event-time column")
         # validate HERE, not inside one leg: the batch twin must reject
         # exactly what the streaming path rejects (a typo'd ts_mode
         # silently meaning "exact" on batch would pass tests and then
@@ -573,34 +596,24 @@ class DataStream:
             raise ValueError(
                 f"ts_mode must be exact|window_time, got {ts_mode!r}"
             )
-        kwargs = dict(
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_n=shingle_n,
+        out = self._near_gate(
+            "near_dedup", partial(near_dedup_stream, ts_mode=ts_mode),
+            near_dedup_batch, (id_col, text_col), emit_window_ms,
+            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
             payload_cols=tuple(payload_cols),
         )
-        if self._df.isStreaming:
-            out = near_dedup_stream(
-                self._df, id_col, text_col, self.event_time,
-                watermark=self.watermark, emit_window_ms=emit_window_ms,
-                ts_mode=ts_mode, **kwargs,
+        if ts_mode == "window_time" and not self._df.isStreaming:
+            # same value the stream emits: the doc's emit-window
+            # end − 1 µs (its band rows all carry its exact ts)
+            out = out.withColumn(
+                self.event_time,
+                F.window_time(
+                    F.window(
+                        F.col(self.event_time),
+                        f"{emit_window_ms} milliseconds",
+                    )
+                ),
             )
-        else:
-            out = near_dedup_batch(
-                self._df, id_col, text_col, self.event_time, **kwargs
-            )
-            if ts_mode == "window_time":
-                # same value the stream emits: the doc's emit-window
-                # end − 1 µs (its band rows all carry its exact ts)
-                out = out.withColumn(
-                    self.event_time,
-                    F.window_time(
-                        F.window(
-                            F.col(self.event_time),
-                            f"{emit_window_ms} milliseconds",
-                        )
-                    ),
-                )
         chain_et = self.event_time if ts_mode == "window_time" else None
         return DataStream(
             out,
@@ -631,20 +644,11 @@ class DataStream:
             image_near_gate_batch,
         )
 
-        if self.event_time is None:
-            raise ValueError("near_dedup_images() requires an event-time column")
-        if self._df.isStreaming:
-            out = image_near_gate(
-                self._df, id_col, binary_col, self.event_time,
-                method=method, watermark=self.watermark,
-                emit_window_ms=emit_window_ms,
-                payload_cols=tuple(payload_cols),
-            )
-        else:
-            out = image_near_gate_batch(
-                self._df, id_col, binary_col, self.event_time,
-                method=method, payload_cols=tuple(payload_cols),
-            )
+        out = self._near_gate(
+            "near_dedup_images", image_near_gate, image_near_gate_batch,
+            (id_col, binary_col), emit_window_ms,
+            method=method, payload_cols=tuple(payload_cols),
+        )
         return DataStream(out, event_time=None, watermark=self.watermark)
 
     def near_dedup_audio(
@@ -670,20 +674,11 @@ class DataStream:
             audio_near_gate_batch,
         )
 
-        if self.event_time is None:
-            raise ValueError("near_dedup_audio() requires an event-time column")
-        if self._df.isStreaming:
-            out = audio_near_gate(
-                self._df, id_col, binary_col, self.event_time,
-                n_frames=n_frames, watermark=self.watermark,
-                emit_window_ms=emit_window_ms,
-                payload_cols=tuple(payload_cols),
-            )
-        else:
-            out = audio_near_gate_batch(
-                self._df, id_col, binary_col, self.event_time,
-                n_frames=n_frames, payload_cols=tuple(payload_cols),
-            )
+        out = self._near_gate(
+            "near_dedup_audio", audio_near_gate, audio_near_gate_batch,
+            (id_col, binary_col), emit_window_ms,
+            n_frames=n_frames, payload_cols=tuple(payload_cols),
+        )
         return DataStream(out, event_time=None, watermark=self.watermark)
 
     def funnel(

@@ -1,10 +1,11 @@
 """The repo-wide bucket-cap contract for LSH-style candidate generation.
 
 Every candidate generator (MinHash-LSH banding, hyperplane-LSH ANN,
-semantic decontamination, the incremental/streaming dedup gates) keys
-work by bucket and bounds degenerate skew with ``max_bucket_size``.
-This module is the ONE implementation of that idiom so operator and
-oracle semantics cannot drift (r9 verdict item 7). The contract:
+semantic decontamination) and every near-dup gate keys work by bucket
+and bounds degenerate skew with ``max_bucket_size``. This module is
+the ONE implementation of that idiom, so operator and oracle
+semantics cannot drift: an oracle that replays one cap rule must see
+the same rule in every operator. The contract:
 
 1. **Caps drop whole buckets, never truncate them.** A bucket larger
    than the cap contributes NO candidate pairs (pair-generation form)
@@ -19,15 +20,25 @@ oracle semantics cannot drift (r9 verdict item 7). The contract:
    any partitioning.
 3. **Ownership ties break by ``min(struct(*order_cols))``** — the
    order columns are an explicit per-operator contract (plain dedup
-   orders by id; the streaming gate by (event_time, id)) and must be
+   orders by id; the event-time gates by (event_time, id)) and must be
    stated at the call site, never defaulted.
+
+The ownership form — "a doc survives iff it is the earliest claimant
+of every LSH bucket it lands in" — has one batch core
+(:func:`band_owners`: the text gate ``near_dedup_batch``, the
+incremental gate ``near_dedup_incremental``, the durable-index
+``streaming.lsh.LSHDedupMaintainer`` and the image/audio
+``*_near_gate_batch`` twins) and one stream core
+(:func:`band_owners_stream`: ``near_dedup_stream``, ``image_near_gate``
+and ``audio_near_gate``). Each takes ``(band, band_key)`` rows, so one
+core serves every modality and band count.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -152,3 +163,107 @@ def bucket_ownership_counts(
             ).alias("_n_owned"),
         )
     )
+
+
+def band_owners(
+    banded: DataFrame,
+    id_col: str,
+    order_cols: list[str],
+    bands: int,
+    carry: tuple = (),
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Batch first-claimant gate over ``(band, band_key)`` rows: each
+    bucket is owned by its ``order_cols``-first member (contract #3),
+    and a doc survives iff it owns all ``bands`` of its buckets. One
+    row per survivor: ``id_col``, then each order column other than
+    the id as its per-doc min, then each ``carry`` column as its
+    per-doc first value (every band row of a doc holds the same
+    values).
+
+    Uncapped, one band-key window keeps each bucket's first row
+    (``row_number() == 1``, which Spark plans as a WindowGroupLimit so
+    a degenerate bucket is not materialized past its first row; its
+    rows still land on ONE task — monitor with
+    ``dedup.lsh_bucket_histogram``). With ``max_bucket_size`` the
+    contest runs on :func:`bucket_ownership_counts` instead: map-side
+    combine shrinks even a corpus-sized bucket to one row per map
+    partition, and an over-cap bucket is owned by every member
+    (contract #1, the recall-loss direction)."""
+    per_doc = [F.min(c).alias(c) for c in order_cols if c != id_col]
+    per_doc += [F.first(c).alias(c) for c in carry]
+    out_cols = [c for c in order_cols if c != id_col] + list(carry)
+    if max_bucket_size is None:
+        w = Window.partitionBy("band", "band_key").orderBy(*order_cols)
+        return (
+            banded.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .groupBy(id_col)
+            .agg(F.count("*").alias("_n_owned"), *per_doc)
+            .filter(F.col("_n_owned") == F.lit(bands))
+            .select(id_col, *out_cols)
+        )
+    owners = (
+        bucket_ownership_counts(banded, id_col, order_cols, max_bucket_size)
+        .filter(F.col("_n_owned") == F.lit(bands))
+        .select(id_col)
+    )
+    if not per_doc:
+        return owners
+    return (
+        banded.groupBy(id_col)
+        .agg(*per_doc)
+        .join(owners, id_col)
+        .select(id_col, *out_cols)
+    )
+
+
+def band_owners_stream(
+    banded: DataFrame,
+    id_col: str,
+    event_time: str,
+    bands: int,
+    watermark: str,
+    emit_window_ms: int,
+    carry: tuple = (),
+    ts_mode: str = "exact",
+) -> DataFrame:
+    """Streaming first-claimant gate over ``(band, band_key)`` rows —
+    two chained stateful operators in append mode:
+
+    1. the watermark is declared on the band rows themselves (an
+       upstream ``mapInPandas`` re-creates attributes and would strip
+       an event-time tag declared before it);
+    2. ``dropDuplicatesWithinWatermark`` on ``(band, band_key)``: state
+       is one row per distinct bucket, TTL'd by the watermark, and the
+       first claimant owns the bucket (within one micro-batch the
+       owner is arbitrary);
+    3. a per-doc count over an ``emit_window_ms`` window: a doc that
+       owns all ``bands`` buckets survives. The window only gives
+       append mode a close point; all of a doc's band rows share its
+       exact event time, so no doc straddles windows.
+
+    Output: ``id_col``, ``event_time``, then each ``carry`` column.
+    ``ts_mode="exact"`` emits the doc's own event time (an aggregate
+    output, so it loses its event-time tag); ``"window_time"`` emits
+    the emit window's ``window_time``, which keeps the tag so a
+    further windowed aggregation can follow in the same query."""
+    if ts_mode not in ("exact", "window_time"):
+        raise ValueError(f"ts_mode must be exact|window_time, got {ts_mode!r}")
+    owned = banded.withWatermark(event_time, watermark).dropDuplicatesWithinWatermark(
+        ["band", "band_key"]
+    )
+    # millisecond interval string: integer-dividing to seconds would make
+    # sub-second windows the invalid '0 seconds' and silently truncate others
+    win = F.window(event_time, f"{emit_window_ms} milliseconds")
+    surv = (
+        owned.groupBy(win.alias("_w"), F.col(id_col))
+        .agg(
+            F.count("*").alias("_n_owned"),
+            F.min(event_time).alias("_ts"),
+            *[F.first(c).alias(c) for c in carry],
+        )
+        .filter(F.col("_n_owned") == bands)
+    )
+    ts_out = F.col("_ts") if ts_mode == "exact" else F.window_time("_w")
+    return surv.select(id_col, ts_out.alias(event_time), *carry)

@@ -23,7 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from denormalized_spark.operators._bucketing import (
-    bucket_ownership_counts,
+    band_owners,
+    band_owners_stream,
     bucket_pairs,
     capped_bucket_collect,
 )
@@ -272,13 +273,9 @@ def lsh_candidate_pairs(
     executor OOM. Docs in a dropped bucket can still pair through
     their other bands (and exact dedup catches full duplicates first).
     """
-    sig = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_n, shingle_unit
+    banded = _lsh_band_rows(
+        df, text_col, [id_col], num_hashes, bands, shingle_n, shingle_unit
     )
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(band_structs("minhash", num_hashes, bands)).alias("bk"),
-    ).select(id_col, "bk.band", "bk.band_key")
     # bucket-collect instead of self-join: the signature subtree would
     # otherwise be evaluated once per join side (no exchange to
     # reuse). One aggregation collects each bucket's ids; pairs are
@@ -350,27 +347,10 @@ def lsh_bucket_histogram(
     ops signal for resizing bands/planes before pair generation
     explodes (docs/SCALING.md). Returns (bucket_size, n_buckets,
     n_pairs) where n_pairs = n_buckets · size(size−1)/2."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_n, shingle_unit
+    banded = _lsh_band_rows(
+        df, text_col, [id_col], num_hashes, bands, shingle_n, shingle_unit
     )
-    banded = sig.select(
-        F.col(id_col),
-        *[
-            F.md5(
-                F.array_join(
-                    F.slice(F.col("minhash"), b * rows_per_band + 1, rows_per_band), ","
-                )
-            ).alias(f"bk{b}")
-            for b in range(bands)
-        ],
-    )
-    stacked = banded.selectExpr(
-        f"stack({bands}, "
-        + ", ".join(f"{b}, bk{b}" for b in range(bands))
-        + ") as (band, band_key)"
-    )
-    sizes = stacked.groupBy("band", "band_key").agg(F.count("*").alias("bucket_size"))
+    sizes = banded.groupBy("band", "band_key").agg(F.count("*").alias("bucket_size"))
     return (
         sizes.groupBy("bucket_size")
         .agg(F.count("*").alias("n_buckets"))
@@ -631,12 +611,7 @@ def band_index(
     tomorrow's increment dedups against all of history without
     rescanning it — the index is bucket-count-sized, far smaller than
     the corpus. One shuffle."""
-    sig = df.select(
-        F.col(id_col), minhash_signature(text_col, num_hashes, shingle_n).alias("_mh")
-    )
-    banded = sig.select(
-        id_col, F.explode(band_structs("_mh", num_hashes, bands)).alias("_bk")
-    ).select(id_col, "_bk.band", "_bk.band_key")
+    banded = _lsh_band_rows(df, text_col, [id_col], num_hashes, bands, shingle_n)
     return banded.groupBy("band", "band_key").agg(F.min(id_col).alias("owner_id"))
 
 
@@ -690,54 +665,8 @@ def near_dedup_incremental(
     switches to the partial-agg (winner, size) plan and exempts
     oversized buckets from the contest (recall-loss direction).
     """
-    from pyspark.sql import Window
-
-    sig = new_df.select(
-        F.col(id_col), minhash_signature(text_col, num_hashes, shingle_n).alias("_mh")
-    )
-    nb = sig.select(
-        id_col, F.explode(band_structs("_mh", num_hashes, bands)).alias("_bk")
-    ).select(id_col, "_bk.band", "_bk.band_key")
-
-    hits = nb.join(
-        index.select("band", "band_key", F.lit(True).alias("_hit")),
-        ["band", "band_key"],
-        "left",
-    )
-    flags = hits.groupBy(id_col).agg(
-        F.max(F.coalesce("_hit", F.lit(False))).alias("dup_of_history")
-    )
-    # ownership over ALL new docs (history-dups included): they still
-    # claim buckets, so their same-batch near-dups are dropped too
-    if max_bucket_size is None:
-        w = Window.partitionBy("band", "band_key").orderBy(id_col)
-        surv = (
-            nb.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .groupBy(id_col)
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") == bands)
-            .select(id_col, F.lit(True).alias("_surv"))
-        )
-    else:
-        surv = (
-            bucket_ownership_counts(
-                nb, id_col, order_cols=[id_col], cap=max_bucket_size
-            )
-            .filter(F.col("_n_owned") == bands)
-            .select(id_col, F.lit(True).alias("_surv"))
-        )
-    out = (
-        flags.join(surv, id_col, "left")
-        .select(
-            id_col,
-            "dup_of_history",
-            F.coalesce("_surv", F.lit(False)).alias("batch_survivor"),
-            (~F.col("dup_of_history") & F.coalesce("_surv", F.lit(False))).alias(
-                "kept"
-            ),
-        )
-    )
+    nb = _lsh_band_rows(new_df, text_col, [id_col], num_hashes, bands, shingle_n)
+    out = _incremental_gate(nb, index, id_col, bands, max_bucket_size)
     # ALL batch docs' claims enter the index (band_index records every
     # history doc the same way): buckets claimed only by dropped dups
     # must stay remembered for later increments
@@ -749,6 +678,41 @@ def near_dedup_incremental(
         .agg(F.min("owner_id").alias("owner_id"))
     )
     return out, updated
+
+
+def _incremental_gate(
+    nb: DataFrame,
+    index: DataFrame,
+    id_col: str,
+    bands: int,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """The band-level gate of :func:`near_dedup_incremental` over a
+    batch's ``(id, band, band_key)`` rows and a ``(band, band_key)``
+    index: one row per batch doc with ``dup_of_history``,
+    ``batch_survivor`` and ``kept``. Shared with the durable-index
+    ``streaming.lsh.LSHDedupMaintainer``."""
+    hits = nb.join(
+        index.select("band", "band_key", F.lit(True).alias("_hit")),
+        ["band", "band_key"],
+        "left",
+    )
+    flags = hits.groupBy(id_col).agg(
+        F.max(F.coalesce("_hit", F.lit(False))).alias("dup_of_history")
+    )
+    # ownership over ALL new docs (history-dups included): they still
+    # claim buckets, so their same-batch near-dups are dropped too
+    surv = band_owners(
+        nb, id_col, [id_col], bands, max_bucket_size=max_bucket_size
+    ).select(id_col, F.lit(True).alias("_surv"))
+    return flags.join(surv, id_col, "left").select(
+        id_col,
+        "dup_of_history",
+        F.coalesce("_surv", F.lit(False)).alias("batch_survivor"),
+        (~F.col("dup_of_history") & F.coalesce("_surv", F.lit(False))).alias(
+            "kept"
+        ),
+    )
 
 
 def fuzzy_name_pairs(
@@ -1055,8 +1019,8 @@ def connected_components(
 def band_structs(minhash_col: Column | str, num_hashes: int, bands: int) -> Column:
     """LSH banding of a minhash signature → array<struct<band int,
     band_key string>> (band key = md5 of the band's signature slice).
-    Shared by the batch candidate-pair generator and the streaming
-    near-dup filter so both gate on identical buckets."""
+    :func:`_lsh_band_rows` explodes it into the band rows every
+    MinHash-LSH operator keys on."""
     rows_per_band = num_hashes // bands
     c = F.col(minhash_col) if isinstance(minhash_col, str) else minhash_col
     return F.array(
@@ -1070,6 +1034,35 @@ def band_structs(minhash_col: Column | str, num_hashes: int, bands: int) -> Colu
             for b in range(bands)
         ]
     )
+
+
+def _lsh_band_rows(
+    df: DataFrame,
+    text_col: str,
+    carry: list[str],
+    num_hashes: int,
+    bands: int,
+    shingle_n: int = 3,
+    shingle_unit: str = "word",
+) -> DataFrame:
+    """MinHash-LSH banding as rows: one ``(band, band_key)`` row per
+    band of each doc's signature, after the ``carry`` columns. Every
+    MinHash-LSH operator bands through here (candidate pairs, the
+    bucket histogram, the band index and the three near-dup gates,
+    batch, incremental and stream, plus the durable-index
+    maintainer), so they all key on identical buckets. The signature
+    is projected once under its own alias before the explode:
+    :func:`band_structs` references it once per band, and Spark
+    inlines an expression's subtree at every reference."""
+    sig = df.select(
+        *carry,
+        minhash_signature(text_col, num_hashes, shingle_n, shingle_unit).alias(
+            "_mh"
+        ),
+    )
+    return sig.select(
+        *carry, F.explode(band_structs("_mh", num_hashes, bands)).alias("_bk")
+    ).select(*carry, "_bk.band", "_bk.band_key")
 
 
 def near_dedup_stream(
@@ -1094,16 +1087,15 @@ def near_dedup_stream(
     verify online); run the batch verify pipeline over the survivors
     for the exact refinement.
 
-    Plan (two chained stateful operators, append mode — Spark ≥3.5):
-
-    1. per-row signature + banding (pure JVM expressions, no Python);
-    2. band rows → ``dropDuplicatesWithinWatermark`` on (band,
-       band_key): state = one row per distinct bucket, TTL'd by the
-       watermark — the first claimant owns the bucket;
-    3. windowed count per doc: a doc that owns all ``bands`` buckets
-       survives. The window (``emit_window_ms``) exists only to give
-       append mode a close point; all of a doc's band rows share its
-       exact event time, so no doc straddles windows.
+    Plan: per-row signature + banding (pure JVM expressions, no
+    Python), then the shared stream core
+    (:func:`~denormalized_spark.operators._bucketing.band_owners_stream`,
+    two chained stateful operators, append mode — Spark ≥3.5):
+    ``dropDuplicatesWithinWatermark`` on (band, band_key), so state is
+    one row per distinct bucket TTL'd by the watermark and the first
+    claimant owns the bucket; then a per-doc count over an
+    ``emit_window_ms`` window, which only gives append mode a close
+    point. A doc that owns all ``bands`` buckets survives.
 
     Within one micro-batch the bucket owner is arbitrary (matching
     batch LSH, where same-bucket docs form a candidate pair and one
@@ -1121,38 +1113,13 @@ def near_dedup_stream(
     gate → per-window quality monitor → sink graph. Precision drops
     to the emit window; size ``emit_window_ms`` accordingly.
     """
-    if ts_mode not in ("exact", "window_time"):
-        raise ValueError(f"ts_mode must be exact|window_time, got {ts_mode!r}")
-    sig = df.withWatermark(event_time, watermark).select(
-        F.col(id_col),
-        F.col(event_time),
-        *[F.col(c) for c in payload_cols],
-        minhash_signature(text_col, num_hashes, shingle_n).alias("_mh"),
+    banded = _lsh_band_rows(
+        df, text_col, [id_col, event_time, *payload_cols], num_hashes, bands,
+        shingle_n,
     )
-    banded = sig.select(
-        id_col,
-        event_time,
-        *payload_cols,
-        F.explode(band_structs("_mh", num_hashes, bands)).alias("_bk"),
-    ).select(id_col, event_time, *payload_cols, "_bk.band", "_bk.band_key")
-    owned = banded.dropDuplicatesWithinWatermark(["band", "band_key"])
-    # millisecond interval string: integer-dividing to seconds would make
-    # sub-second windows the invalid '0 seconds' and silently truncate others
-    win = F.window(event_time, f"{emit_window_ms} milliseconds")
-    surv = (
-        owned.groupBy(win.alias("_w"), F.col(id_col))
-        .agg(
-            F.count("*").alias("_n_owned"),
-            F.min(event_time).alias("_ts"),
-            *[F.first(c).alias(c) for c in payload_cols],
-        )
-        .filter(F.col("_n_owned") == bands)
-    )
-    ts_out = (
-        F.col("_ts") if ts_mode == "exact" else F.window_time("_w")
-    )
-    return surv.select(
-        id_col, ts_out.alias(event_time), *payload_cols
+    return band_owners_stream(
+        banded, id_col, event_time, bands, watermark, emit_window_ms,
+        payload_cols, ts_mode,
     )
 
 
@@ -1172,61 +1139,26 @@ def near_dedup_batch(
     bucket is owned by its earliest (event_time, id) claimant; a doc
     survives iff it owns all its bands. Used for stream-vs-batch
     parity tests and backfills that must agree with the online gate.
-    One band-key shuffle; no pair generation.
+    One band-key shuffle; no pair generation (the shared batch core,
+    :func:`~denormalized_spark.operators._bucketing.band_owners`).
 
-    Skew posture: the default (no cap) relies on the ``_rn == 1``
-    filter's WindowGroupLimit pushdown to bound a degenerate bucket's
-    post-sort materialization; the bucket's rows still land on ONE
-    task (monitor with :func:`lsh_bucket_histogram`). For corpora
-    where one bucket would swallow a task, ``max_bucket_size`` flips
-    to a partial-agg plan: per-bucket (winner, size) via groupBy —
-    map-side combine shrinks even a corpus-sized bucket to one row
-    per map partition BEFORE the shuffle — and any bucket larger than
-    the cap is exempted from the contest (all members count it as
-    owned — the recall-loss direction, mirroring
-    ``lsh_candidate_pairs``: an oversized bucket stops discriminating
-    rather than dropping every member). With a cap no bucket exceeds
-    it, results equal the uncapped gate (pinned by the parity test)."""
-    from pyspark.sql import Window
-
-    sig = df.select(
-        F.col(id_col),
-        F.col(event_time),
-        *[F.col(c) for c in payload_cols],
-        minhash_signature(text_col, num_hashes, shingle_n).alias("_mh"),
+    Skew posture: the default (no cap) keeps each bucket's first row
+    through a WindowGroupLimit; a degenerate bucket's rows still land
+    on ONE task (monitor with :func:`lsh_bucket_histogram`). For
+    corpora where one bucket would swallow a task, ``max_bucket_size``
+    flips to a partial-agg plan and exempts any bucket larger than
+    the cap from the contest (all members count it as owned — the
+    recall-loss direction, mirroring ``lsh_candidate_pairs``: an
+    oversized bucket stops discriminating rather than dropping every
+    member). With a cap no bucket exceeds it, results equal the
+    uncapped gate (pinned by the parity test)."""
+    banded = _lsh_band_rows(
+        df, text_col, [id_col, event_time, *payload_cols], num_hashes, bands,
+        shingle_n,
     )
-    banded = sig.select(
-        id_col,
-        event_time,
-        *payload_cols,
-        F.explode(band_structs("_mh", num_hashes, bands)).alias("_bk"),
-    ).select(id_col, event_time, *payload_cols, "_bk.band", "_bk.band_key")
-    if max_bucket_size is None:
-        w = Window.partitionBy("band", "band_key").orderBy(event_time, id_col)
-        owned = banded.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") == 1
-        )
-        return (
-            owned.groupBy(id_col)
-            .agg(
-                F.count("*").alias("_n_owned"),
-                F.min(event_time).alias(event_time),
-                *[F.first(c).alias(c) for c in payload_cols],
-            )
-            .filter(F.col("_n_owned") == F.lit(bands))
-            .select(id_col, event_time, *payload_cols)
-        )
-    n_owned = bucket_ownership_counts(
-        banded, id_col, order_cols=[event_time, id_col], cap=max_bucket_size
-    )
-    doc_info = banded.groupBy(id_col).agg(
-        F.min(event_time).alias(event_time),
-        *[F.first(c).alias(c) for c in payload_cols],
-    )
-    return (
-        doc_info.join(n_owned, id_col, "left")
-        .filter(F.coalesce("_n_owned", F.lit(0)) == F.lit(bands))
-        .select(id_col, event_time, *payload_cols)
+    return band_owners(
+        banded, id_col, [event_time, id_col], bands, payload_cols,
+        max_bucket_size,
     )
 
 

@@ -39,11 +39,16 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from denormalized_spark.operators._bucketing import bucket_pairs, capped_bucket_collect
+from denormalized_spark.operators._bucketing import (
+    band_owners,
+    band_owners_stream,
+    bucket_pairs,
+    capped_bucket_collect,
+)
 
 IMAGE_META = T.StructType(
     [
@@ -282,11 +287,35 @@ def image_near_dups(
     (a dropped pair is missed, never wrong). The hamming verify runs
     inside the pair generation, so the final distinct shuffles narrow
     (id_a, id_b, hamming) rows only — no payload bytes ever shuffle."""
-    hp = image_phash(df, binary_col, method).select(
-        F.col(id_col), "phash_hi", "phash_lo"
-    ).filter(F.col("phash_hi").isNotNull())
     return _hash_band_pairs(
-        hp, id_col, "phash_hi", "phash_lo", max_hamming, max_bucket_size
+        image_phash(df, binary_col, method), id_col, "phash_hi", "phash_lo",
+        max_hamming, max_bucket_size,
+    )
+
+
+# four 16-bit LSH bands of a 64-bit perceptual hash (two 32-bit halves)
+_HASH_BANDS = 4
+
+
+def _split_hash_bands(
+    hashed: DataFrame, hi_col: str, lo_col: str, *carry: Column | str
+) -> DataFrame:
+    """Split-hash banding as rows: the two 32-bit halves of a 64-bit
+    perceptual hash (image phash, audio fingerprint) → four 16-bit
+    ``(band, band_key)`` rows after the ``carry`` columns. Rows with a
+    NULL hash (undecodable or too-short payloads) are dropped: they
+    have no fingerprint to contest a bucket with — route them
+    separately if they must be kept. Shared by the pair generator
+    (:func:`_hash_band_pairs`) and the image/audio near-dup gates, so
+    they all key on identical buckets."""
+    bands = F.array(
+        F.shiftright(hi_col, 16),
+        F.col(hi_col).bitwiseAND(F.lit(65535)),
+        F.shiftright(lo_col, 16),
+        F.col(lo_col).bitwiseAND(F.lit(65535)),
+    )
+    return hashed.filter(F.col(hi_col).isNotNull()).select(
+        *carry, F.posexplode(bands).alias("band", "band_key")
     )
 
 
@@ -305,21 +334,19 @@ def _hash_band_pairs(
     self-join (which would re-run the upstream decode kernel per
     side). ``max_bucket_size`` drops degenerate buckets (recall-loss
     direction). Output (id_a, id_b, hamming ≤ max_hamming)."""
-    bands = F.array(
-        F.shiftright(hi_col, 16),
-        F.col(hi_col).bitwiseAND(F.lit(65535)),
-        F.shiftright(lo_col, 16),
-        F.col(lo_col).bitwiseAND(F.lit(65535)),
-    )
-    banded = hashed.select(
+    banded = _split_hash_bands(
+        hashed,
+        hi_col,
+        lo_col,
         F.struct(
             F.col(id_col).alias("_i"),
             F.col(hi_col).alias("_hi"),
             F.col(lo_col).alias("_lo"),
         ).alias("_m"),
-        F.posexplode(bands).alias("band", "key"),
     )
-    buckets = capped_bucket_collect(banded, ["band", "key"], "_m", "_ms", max_bucket_size)
+    buckets = capped_bucket_collect(
+        banded, ["band", "band_key"], "_m", "_ms", max_bucket_size
+    )
     pair_arrays = bucket_pairs(
         F.col("_ms"),
         lambda x, y: F.struct(
@@ -366,7 +393,7 @@ def audio_fingerprint(
     ``n_frames`` must be in [50, 65]: the fingerprint has
     ``n_frames - 1`` bits, ``hi`` takes the first 32, ``lo`` the
     remaining ``n_frames - 33`` — below 50 ``lo`` has ≤ 16 bits, so
-    the ``shiftright(lo, 16)`` LSH band in :func:`_hash_band_pairs`
+    the ``shiftright(lo, 16)`` LSH band of :func:`_split_hash_bands`
     is 0 for EVERY clip (one global band-3 bucket → quadratic pair
     generation when ``max_bucket_size`` is None); above 65 ``lo``
     exceeds 32 bits and the band math loses its no-overflow
@@ -442,11 +469,9 @@ def audio_near_dups(
     boilerplate jingles all fingerprinting alike). Loudness-
     normalized copies pair at hamming 0; the decode kernel runs
     exactly once (bucket-collect, not a self-join)."""
-    fp = audio_fingerprint(df, binary_col, n_frames).select(
-        F.col(id_col), "fp_hi", "fp_lo"
-    ).filter(F.col("fp_hi").isNotNull())
     return _hash_band_pairs(
-        fp, id_col, "fp_hi", "fp_lo", max_hamming, max_bucket_size
+        audio_fingerprint(df, binary_col, n_frames), id_col, "fp_hi", "fp_lo",
+        max_hamming, max_bucket_size,
     )
 
 
@@ -821,35 +846,6 @@ def _gradient_rgb(i: int):
     return np.stack([r, g, b], axis=-1).astype(np.uint8)
 
 
-def _image_banded(
-    df: DataFrame,
-    id_col: str,
-    binary_col: str,
-    event_time: str,
-    method: str,
-    payload_cols: tuple,
-) -> DataFrame:
-    """Shared banding stage of the image near-dup gates: phash →
-    four 16-bit band rows per decodable image. Undecodable payloads
-    are DROPPED (they have no fingerprint to contest a bucket with) —
-    route them separately if they must be kept."""
-    hp = image_phash(df, binary_col, method).filter(
-        F.col("phash_hi").isNotNull()
-    )
-    bands = F.array(
-        F.shiftright("phash_hi", 16),
-        F.col("phash_hi").bitwiseAND(F.lit(65535)),
-        F.shiftright("phash_lo", 16),
-        F.col("phash_lo").bitwiseAND(F.lit(65535)),
-    )
-    return hp.select(
-        F.col(id_col),
-        F.col(event_time),
-        *[F.col(c) for c in payload_cols],
-        F.posexplode(bands).alias("band", "key"),
-    )
-
-
 def image_near_gate_batch(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -866,61 +862,14 @@ def image_near_gate_batch(
     :func:`~denormalized_spark.operators.dedup.near_dedup_batch`
     applied to the image modality. One band-key shuffle, no pair
     generation; used for stream-vs-batch parity and backfills that
-    must agree with the online gate."""
-    banded = _image_banded(
-        df, id_col, binary_col, event_time, method, payload_cols
+    must agree with the online gate. Undecodable payloads are dropped
+    (no fingerprint to contest a bucket with)."""
+    banded = _split_hash_bands(
+        image_phash(df, binary_col, method), "phash_hi", "phash_lo",
+        id_col, event_time, *payload_cols,
     )
-    return _band_gate_batch(banded, id_col, event_time, payload_cols)
-
-
-def _band_gate_batch(
-    banded: DataFrame, id_col: str, event_time: str, payload_cols: tuple
-) -> DataFrame:
-    """Shared batch ownership core of the perceptual-hash gates:
-    earliest (event_time, id) claimant per (band, key), survivor owns
-    all 4 bands. One band-key shuffle, no pair generation."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "key").orderBy(event_time, id_col)
-    owned = banded.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") == 1
-    )
-    return (
-        owned.groupBy(id_col)
-        .agg(
-            F.count("*").alias("_n_owned"),
-            F.min(event_time).alias(event_time),
-            *[F.first(c).alias(c) for c in payload_cols],
-        )
-        .filter(F.col("_n_owned") == 4)
-        .select(id_col, event_time, *payload_cols)
-    )
-
-
-def _band_gate_stream(
-    banded: DataFrame,
-    id_col: str,
-    event_time: str,
-    watermark: str,
-    emit_window_ms: int,
-    payload_cols: tuple,
-) -> DataFrame:
-    """Shared streaming ownership core of the perceptual-hash gates:
-    ``dropDuplicatesWithinWatermark`` on (band, key) — one state row
-    per distinct bucket, watermark-TTL'd — then an emit-window
-    survivor count == 4 to give append mode a close point."""
-    banded = banded.withWatermark(event_time, watermark)
-    owned = banded.dropDuplicatesWithinWatermark(["band", "key"])
-    win = F.window(event_time, f"{emit_window_ms} milliseconds")
-    return (
-        owned.groupBy(win.alias("_w"), F.col(id_col))
-        .agg(
-            F.count("*").alias("_n_owned"),
-            F.min(event_time).alias("_ts"),
-            *[F.first(c).alias(c) for c in payload_cols],
-        )
-        .filter(F.col("_n_owned") == 4)
-        .select(id_col, F.col("_ts").alias(event_time), *payload_cols)
+    return band_owners(
+        banded, id_col, [event_time, id_col], _HASH_BANDS, payload_cols
     )
 
 
@@ -939,57 +888,26 @@ def image_near_gate(
     claim all four of their dHash/aHash band buckets first — any band
     collision with an earlier image (within the watermark retention)
     drops the frame. The image twin of
-    :func:`~denormalized_spark.operators.dedup.near_dedup_stream`,
-    same two chained stateful operators:
-
-    1. phash + banding (the mapInPandas decode is the per-row stage;
-       the watermark is declared on ITS output, since mapInPandas
-       re-creates attributes and would strip an upstream event-time
-       tag);
-    2. band rows → ``dropDuplicatesWithinWatermark`` on (band, key) —
-       state is one row per distinct bucket, TTL'd by the watermark;
-    3. an ``emit_window_ms`` window gives append mode a close point;
-       all four band rows share the image's exact event time, so no
-       image straddles windows. Survivor ⟺ owns 4 buckets.
+    :func:`~denormalized_spark.operators.dedup.near_dedup_stream`:
+    phash + banding (the mapInPandas decode is the per-row stage),
+    then the shared stream core
+    (:func:`~denormalized_spark.operators._bucketing.band_owners_stream`:
+    watermark declared on the band rows, ``dropDuplicatesWithinWatermark``
+    on (band, band_key), an ``emit_window_ms`` close point; survivor ⟺
+    owns 4 buckets).
 
     The use case is frame/screenshot streams where boilerplate frames
     repeat endlessly: state stays bucket-count-sized, no pair
     generation. Near-miss semantics match the batch twin within a
     micro-batch up to arbitrary-owner ties, exactly as the text gate
     documents."""
-    banded = _image_banded(
-        df, id_col, binary_col, event_time, method, payload_cols
+    banded = _split_hash_bands(
+        image_phash(df, binary_col, method), "phash_hi", "phash_lo",
+        id_col, event_time, *payload_cols,
     )
-    return _band_gate_stream(
-        banded, id_col, event_time, watermark, emit_window_ms, payload_cols
-    )
-
-
-def _audio_banded(
-    df: DataFrame,
-    id_col: str,
-    binary_col: str,
-    event_time: str,
-    n_frames: int,
-    payload_cols: tuple,
-) -> DataFrame:
-    """Audio twin of :func:`_image_banded`: fingerprint → four 16-bit
-    band rows per decodable clip (undecodable/too-short clips are
-    dropped — no fingerprint to contest a bucket with)."""
-    fp = audio_fingerprint(df, binary_col, n_frames).filter(
-        F.col("fp_hi").isNotNull()
-    )
-    bands = F.array(
-        F.shiftright("fp_hi", 16),
-        F.col("fp_hi").bitwiseAND(F.lit(65535)),
-        F.shiftright("fp_lo", 16),
-        F.col("fp_lo").bitwiseAND(F.lit(65535)),
-    )
-    return fp.select(
-        F.col(id_col),
-        F.col(event_time),
-        *[F.col(c) for c in payload_cols],
-        F.posexplode(bands).alias("band", "key"),
+    return band_owners_stream(
+        banded, id_col, event_time, _HASH_BANDS, watermark, emit_window_ms,
+        payload_cols,
     )
 
 
@@ -1006,11 +924,15 @@ def audio_near_gate_batch(
     image gate's ownership semantics over audio fingerprints:
     earliest (event_time, id) claimant per band bucket, survivor owns
     all four. Loudness-normalized re-uploads of an earlier clip are
-    gated; used for parity tests and backfills."""
-    banded = _audio_banded(
-        df, id_col, binary_col, event_time, n_frames, payload_cols
+    gated; undecodable/too-short clips are dropped. Used for parity
+    tests and backfills."""
+    banded = _split_hash_bands(
+        audio_fingerprint(df, binary_col, n_frames), "fp_hi", "fp_lo",
+        id_col, event_time, *payload_cols,
     )
-    return _band_gate_batch(banded, id_col, event_time, payload_cols)
+    return band_owners(
+        banded, id_col, [event_time, id_col], _HASH_BANDS, payload_cols
+    )
 
 
 def audio_near_gate(
@@ -1025,17 +947,19 @@ def audio_near_gate(
     payload_cols: tuple = (),
 ) -> DataFrame:
     """STREAMING audio near-dup gate: the clip stream's analogue of
-    :func:`image_near_gate` — fingerprint bands through
-    ``dropDuplicatesWithinWatermark``, bucket-count-sized state, an
-    emit window for append-mode closure. A repeated jingle/silence
-    clip (or a loudness-renormalized copy — the fingerprint is
-    scale-invariant) collides with the first claimant's buckets and
-    is dropped online."""
-    banded = _audio_banded(
-        df, id_col, binary_col, event_time, n_frames, payload_cols
+    :func:`image_near_gate` — fingerprint bands through the shared
+    stream core, bucket-count-sized state, an emit window for
+    append-mode closure. A repeated jingle/silence clip (or a
+    loudness-renormalized copy — the fingerprint is scale-invariant)
+    collides with the first claimant's buckets and is dropped
+    online."""
+    banded = _split_hash_bands(
+        audio_fingerprint(df, binary_col, n_frames), "fp_hi", "fp_lo",
+        id_col, event_time, *payload_cols,
     )
-    return _band_gate_stream(
-        banded, id_col, event_time, watermark, emit_window_ms, payload_cols
+    return band_owners_stream(
+        banded, id_col, event_time, _HASH_BANDS, watermark, emit_window_ms,
+        payload_cols,
     )
 
 

@@ -2541,7 +2541,7 @@ def events_holt_winters(spark: SparkSession, sf: str) -> DataFrame:
     """Holt-Winters ADDITIVE seasonal smoothing of daily revenue-cents
     per event type (operators/analytics.holt_winters_additive; Winters
     1960, FPP §8.3; α=β=1/4, γ=1/2, m=7 weekly season) — holt_linear
-    plus the seasonal state, the r13 verdict's new-wave item. The
+    plus the seasonal state, for series with a weekly cycle. The
     seasonal lag makes the filter time-periodic, so the
     impulse-response-table trick no longer applies; instead the
     QUANTIZED recursion (all state micro-grid longs, one truncating

@@ -68,6 +68,85 @@ hh AS (SELECT doc_id,
 sh AS (SELECT doc_id, {_shingle_hash_sql()} AS shingles FROM hh)
 """
 
+
+def _lsh_bands_sql(id_col: str) -> str:
+    """MinHash-LSH banding of the ``sh`` shingle CTE (8 hashes, 4 bands
+    × 2 rows), matching operators.dedup._lsh_band_rows: CTEs ``mh``
+    and ``bands(id_col, band, band_key)``."""
+    return f"""
+    mh AS (SELECT {id_col}, {_minhash_list(8)} AS mh FROM sh),
+    bands AS (
+      SELECT {id_col}, b.b AS band,
+             md5(mh[b.b*2 + 1]::VARCHAR || ',' || mh[b.b*2 + 2]::VARCHAR) AS band_key
+      FROM mh CROSS JOIN (VALUES (0), (1), (2), (3)) b(b)
+    )"""
+
+
+def _lsh_cand_sql(id_col: str) -> str:
+    """LSH candidate pairs of the ``bands`` CTE: ``(id_a, id_b)``, one
+    row per pair sharing ≥1 band bucket, matching
+    operators.dedup.lsh_candidate_pairs."""
+    return f"""
+      SELECT DISTINCT a.{id_col} AS id_a, bb.{id_col} AS id_b
+      FROM bands a JOIN bands bb
+        ON a.band = bb.band AND a.band_key = bb.band_key AND a.{id_col} < bb.{id_col}"""
+
+
+def _reach_sql(pairs: str, prefix: str = "") -> str:
+    """Connected components of the ``(id_a, id_b)`` CTE ``pairs`` as a
+    recursive fixpoint: ``{prefix}reach(id, label)`` holds every node
+    with each node it reaches; ``min(label)`` per id is its component
+    label, matching operators.dedup.connected_components. Needs
+    ``WITH RECURSIVE``."""
+    sym, reach = f"{prefix}sym", f"{prefix}reach"
+    return f"""
+    {sym} AS (SELECT id_a AS a, id_b AS b FROM {pairs}
+            UNION SELECT id_b, id_a FROM {pairs}),
+    {reach}(id, label) AS (
+      SELECT a, a FROM {sym}
+      UNION
+      SELECT s.b, r.label FROM {reach} r JOIN {sym} s ON r.id = s.a
+    )"""
+
+
+# the doc shingles banded into LSH buckets (doc_id, band, band_key)
+_LSH_BANDS_CTE = _DOC_SHINGLES_CTE + "," + _lsh_bands_sql("doc_id")
+
+# candidate-gated shared-shingle groups per LSH pair, over the `ex`
+# (doc, shingle) and `cand` CTEs of _LSH_GATE_CTES
+_CAND_SHARED_SQL = """
+      FROM (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n_sh AS n_a, b.n_sh AS n_b, a.s
+        FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
+      ) j SEMI JOIN cand c ON j.id_a = c.id_a AND j.id_b = c.id_b
+      GROUP BY j.id_a, j.id_b, j.n_a, j.n_b"""
+
+# exact trigram Jaccard of every LSH candidate pair (id_a, id_b, jaccard)
+_CAND_JACCARD_SQL = (
+    """
+      SELECT j.id_a, j.id_b,
+             count(*)::DOUBLE / (j.n_a + j.n_b - count(*)) AS jaccard"""
+    + _CAND_SHARED_SQL
+)
+
+# AllPairs prefix-filtered exact trigram overlap over the `sh` CTE,
+# matching operators.dedup.prefix_filter_jaccard_join at 60%: `od`
+# per-doc frequency-ordered shingles, `vr` verified (i = |∩|, sa, sb)
+_PPJOIN_CTES = """
+    tk AS (SELECT doc_id, unnest(shingles) AS tok FROM sh),
+    fr AS (SELECT tok, count(*) AS df FROM tk GROUP BY tok),
+    od AS (SELECT doc_id, array_agg(tok ORDER BY df, tok) AS toks, count(*) AS sz
+           FROM tk JOIN fr USING (tok) GROUP BY doc_id),
+    pf AS (SELECT doc_id, sz,
+                  unnest(toks[1 : sz - ((60 * sz + 99) // 100) + 1]) AS tok
+           FROM od),
+    cd AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+           FROM pf a JOIN pf b ON a.tok = b.tok AND a.doc_id < b.doc_id
+            AND 60 * a.sz <= 100 * b.sz AND 60 * b.sz <= 100 * a.sz),
+    vr AS (SELECT c.id_a, c.id_b, len(list_intersect(x.toks, y.toks)) AS i,
+                  x.sz AS sa, y.sz AS sb
+           FROM cd c JOIN od x ON c.id_a = x.doc_id JOIN od y ON c.id_b = y.doc_id)"""
+
 # ---------------------------------------------------------------------------
 # dedup
 # ---------------------------------------------------------------------------
@@ -132,18 +211,7 @@ def dedup_minhash_signatures(spark: SparkSession, sf: str) -> DataFrame:
 
 @q(
     "dedup_lsh_candidates",
-    _DOC_SHINGLES_CTE
-    + f""",
-    mh AS (SELECT doc_id, {_minhash_list(8)} AS mh FROM sh),
-    bands AS (
-      SELECT doc_id, b.b AS band,
-             md5(mh[b.b*2 + 1]::VARCHAR || ',' || mh[b.b*2 + 2]::VARCHAR) AS band_key
-      FROM mh CROSS JOIN (VALUES (0), (1), (2), (3)) b(b)
-    )
-    SELECT DISTINCT a.doc_id AS id_a, bb.doc_id AS id_b
-    FROM bands a JOIN bands bb
-      ON a.band = bb.band AND a.band_key = bb.band_key AND a.doc_id < bb.doc_id
-    """,
+    _LSH_BANDS_CTE + _lsh_cand_sql("doc_id"),
 )
 def dedup_lsh_candidates(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash-LSH candidate pairs (8 hashes, 4 bands × 2 rows):
@@ -154,14 +222,8 @@ def dedup_lsh_candidates(spark: SparkSession, sf: str) -> DataFrame:
 
 @q(
     "dedup_near_gate",
-    _DOC_SHINGLES_CTE
-    + f""",
-    mh AS (SELECT doc_id, {_minhash_list(8)} AS mh FROM sh),
-    bands AS (
-      SELECT doc_id, b.b AS band,
-             md5(mh[b.b*2 + 1]::VARCHAR || ',' || mh[b.b*2 + 2]::VARCHAR) AS band_key
-      FROM mh CROSS JOIN (VALUES (0), (1), (2), (3)) b(b)
-    ),
+    _LSH_BANDS_CTE
+    + """,
     owned AS (
       SELECT doc_id, band, band_key,
              row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rn
@@ -187,21 +249,10 @@ def dedup_near_gate(spark: SparkSession, sf: str) -> DataFrame:
 
 @q(
     "dedup_ppjoin_pairs",
-    f"""
-    {_DOC_SHINGLES_CTE},
-    tk AS (SELECT doc_id, unnest(shingles) AS tok FROM sh),
-    fr AS (SELECT tok, count(*) AS df FROM tk GROUP BY tok),
-    od AS (SELECT doc_id, array_agg(tok ORDER BY df, tok) AS toks, count(*) AS sz
-           FROM tk JOIN fr USING (tok) GROUP BY doc_id),
-    pf AS (SELECT doc_id, sz,
-                  unnest(toks[1 : sz - ((60 * sz + 99) // 100) + 1]) AS tok
-           FROM od),
-    cd AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM pf a JOIN pf b ON a.tok = b.tok AND a.doc_id < b.doc_id
-            AND 60 * a.sz <= 100 * b.sz AND 60 * b.sz <= 100 * a.sz),
-    vr AS (SELECT c.id_a, c.id_b, len(list_intersect(x.toks, y.toks)) AS i,
-                  x.sz AS sa, y.sz AS sb
-           FROM cd c JOIN od x ON c.id_a = x.doc_id JOIN od y ON c.id_b = y.doc_id)
+    _DOC_SHINGLES_CTE
+    + ","
+    + _PPJOIN_CTES
+    + """
     SELECT id_a, id_b, round(i::DOUBLE / (sa + sb - i)::DOUBLE, 6) AS jaccard
     FROM vr WHERE 100 * i >= 60 * (sa + sb - i)
     """,
@@ -247,36 +298,47 @@ def dedup_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
 
 
 _LSH_GATE_CTES = (
-    _DOC_SHINGLES_CTE
-    + f""",
-    mh AS (SELECT doc_id, {_minhash_list(8)} AS mh FROM sh),
-    bands AS (
-      SELECT doc_id, b.b AS band,
-             md5(mh[b.b*2 + 1]::VARCHAR || ',' || mh[b.b*2 + 2]::VARCHAR) AS band_key
-      FROM mh CROSS JOIN (VALUES (0), (1), (2), (3)) b(b)
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, bb.doc_id AS id_b
-      FROM bands a JOIN bands bb
-        ON a.band = bb.band AND a.band_key = bb.band_key AND a.doc_id < bb.doc_id
+    _LSH_BANDS_CTE
+    + """,
+    cand AS ("""
+    + _lsh_cand_sql("doc_id")
+    + """
     ),
     ex AS (SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS s FROM sh)
     """
 )
 
+# LSH-gated Jaccard >= 0.2 pairs `vp` and their connected components
+# `reach` (see _reach_sql)
+_LSH_CC_CTES = (
+    _LSH_GATE_CTES.replace("WITH ", "WITH RECURSIVE ", 1)
+    + """,
+    vp AS (
+      SELECT id_a, id_b FROM ("""
+    + _CAND_JACCARD_SQL
+    + """
+      ) t WHERE jaccard >= 0.2
+    ),"""
+    + _reach_sql("vp")
+)
+
+
+def _lsh_jaccard_pairs(d: DataFrame, min_jaccard: float = 0.2) -> DataFrame:
+    """The Spark side of the ``cand`` → ``_CAND_JACCARD_SQL`` oracle
+    blocks: 8-hash/4-band LSH candidate pairs, then the exact trigram
+    Jaccard on those candidates only (``jaccard >= min_jaccard``)."""
+    cand = dedup.lsh_candidate_pairs(d, "doc_id", "text", num_hashes=8, bands=4)
+    return dedup.jaccard_pairs(
+        d, "doc_id", "text", shingle_n=3, min_jaccard=min_jaccard, candidates=cand
+    )
+
 
 @q(
     "dedup_jaccard_lsh_verified",
     _LSH_GATE_CTES
+    + "SELECT id_a, id_b, round(jaccard, 6) AS jaccard FROM ("
+    + _CAND_JACCARD_SQL
     + """
-    SELECT id_a, id_b, round(jaccard, 6) AS jaccard FROM (
-      SELECT j.id_a, j.id_b,
-             count(*)::DOUBLE / (j.n_a + j.n_b - count(*)) AS jaccard
-      FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n_sh AS n_a, b.n_sh AS n_b, a.s
-        FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-      ) j SEMI JOIN cand c ON j.id_a = c.id_a AND j.id_b = c.id_b
-      GROUP BY j.id_a, j.id_b, j.n_a, j.n_b
     ) t WHERE jaccard >= 0.2
     """,
 )
@@ -287,10 +349,7 @@ def dedup_jaccard_lsh_verified(spark: SparkSession, sf: str) -> DataFrame:
     shingle-sharing pair. ``dedup_jaccard_pairs`` keeps the ungated
     small-scale oracle variant."""
     d = t(spark, sf, "documents")
-    cand = dedup.lsh_candidate_pairs(d, "doc_id", "text", num_hashes=8, bands=4)
-    pairs = dedup.jaccard_pairs(
-        d, "doc_id", "text", shingle_n=3, min_jaccard=0.2, candidates=cand
-    )
+    pairs = _lsh_jaccard_pairs(d)
     return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -306,14 +365,7 @@ def dedup_jaccard_lsh_verified(spark: SparkSession, sf: str) -> DataFrame:
       FROM cand c JOIN mh16 a ON c.id_a = a.doc_id
                   JOIN mh16 b ON c.id_b = b.doc_id
     ),
-    exact AS (
-      SELECT j.id_a, j.id_b,
-             count(*)::DOUBLE / (j.n_a + j.n_b - count(*)) AS jaccard
-      FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n_sh AS n_a, b.n_sh AS n_b, a.s
-        FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-      ) j SEMI JOIN cand c ON j.id_a = c.id_a AND j.id_b = c.id_b
-      GROUP BY j.id_a, j.id_b, j.n_a, j.n_b
+    exact AS ({_CAND_JACCARD_SQL}
     )
     SELECT e.id_a, e.id_b,
            round(e.jaccard_est, 6) AS jaccard_est,
@@ -345,25 +397,8 @@ def dedup_minhash_estimate(spark: SparkSession, sf: str) -> DataFrame:
 
 @q(
     "dedup_connected_components",
-    _LSH_GATE_CTES.replace("WITH ", "WITH RECURSIVE ", 1)
-    + """,
-    vp AS (
-      SELECT id_a, id_b FROM (
-        SELECT j.id_a, j.id_b,
-               count(*)::DOUBLE / (j.n_a + j.n_b - count(*)) AS jaccard
-        FROM (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n_sh AS n_a, b.n_sh AS n_b, a.s
-          FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-        ) j SEMI JOIN cand c ON j.id_a = c.id_a AND j.id_b = c.id_b
-        GROUP BY j.id_a, j.id_b, j.n_a, j.n_b
-      ) t WHERE jaccard >= 0.2
-    ),
-    sym AS (SELECT id_a AS a, id_b AS b FROM vp UNION SELECT id_b, id_a FROM vp),
-    reach(id, label) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.b, r.label FROM reach r JOIN sym s ON r.id = s.a
-    )
+    _LSH_CC_CTES
+    + """
     SELECT id AS doc_id, min(label) AS canonical_id FROM reach GROUP BY id
     """,
     eager=True,
@@ -376,11 +411,7 @@ def dedup_connected_components(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB recursive CTE — an iterative distributed algorithm checked
     value-for-value against a declarative fixpoint."""
     d = t(spark, sf, "documents")
-    cand = dedup.lsh_candidate_pairs(d, "doc_id", "text", num_hashes=8, bands=4)
-    pairs = dedup.jaccard_pairs(
-        d, "doc_id", "text", shingle_n=3, min_jaccard=0.2, candidates=cand
-    )
-    cc = dedup.connected_components(pairs, "id_a", "id_b")
+    cc = dedup.connected_components(_lsh_jaccard_pairs(d), "id_a", "id_b")
     return cc.select(
         F.col("id").alias("doc_id"), F.col("label").alias("canonical_id")
     )
@@ -2229,14 +2260,9 @@ def multimodal_audio_neardup(spark: SparkSession, sf: str) -> DataFrame:
 @q(
     "multimodal_image_dedup_clusters",
     _IMG_PHASH_CTES.replace("WITH ", "WITH RECURSIVE ", 1)
-    + """,
-    sym AS (SELECT id_a AS a, id_b AS b FROM npairs
-            UNION SELECT id_b, id_a FROM npairs),
-    reach(id, label) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.b, r.label FROM reach r JOIN sym s ON r.id = s.a
-    )
+    + ","
+    + _reach_sql("npairs")
+    + """
     SELECT id, min(label) AS label FROM reach GROUP BY id
     """,
     eager=True,
@@ -2751,12 +2777,9 @@ def text_quality_percentile_gate(spark: SparkSession, sf: str) -> DataFrame:
            round(greatest(n_shared::DOUBLE / n_a, n_shared::DOUBLE / n_b), 6)
              AS max_containment
     FROM (
-      SELECT j.id_a, j.id_b, j.n_a, j.n_b, count(*) AS n_shared
-      FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n_sh AS n_a, b.n_sh AS n_b, a.s
-        FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-      ) j SEMI JOIN cand c ON j.id_a = c.id_a AND j.id_b = c.id_b
-      GROUP BY j.id_a, j.id_b, j.n_a, j.n_b
+      SELECT j.id_a, j.id_b, j.n_a, j.n_b, count(*) AS n_shared"""
+    + _CAND_SHARED_SQL
+    + """
     ) t
     """,
 )
@@ -2792,25 +2815,8 @@ _QUALITY_SQL = f"""(
 
 @q(
     "dedup_cluster_representatives",
-    _LSH_GATE_CTES.replace("WITH ", "WITH RECURSIVE ", 1)
+    _LSH_CC_CTES
     + f""",
-    vp AS (
-      SELECT id_a, id_b FROM (
-        SELECT j.id_a, j.id_b,
-               count(*)::DOUBLE / (j.n_a + j.n_b - count(*)) AS jaccard
-        FROM (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n_sh AS n_a, b.n_sh AS n_b, a.s
-          FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-        ) j SEMI JOIN cand c ON j.id_a = c.id_a AND j.id_b = c.id_b
-        GROUP BY j.id_a, j.id_b, j.n_a, j.n_b
-      ) t WHERE jaccard >= 0.2
-    ),
-    sym AS (SELECT id_a AS a, id_b AS b FROM vp UNION SELECT id_b, id_a FROM vp),
-    reach(id, label) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.b, r.label FROM reach r JOIN sym s ON r.id = s.a
-    ),
     comp AS (SELECT id, min(label) AS label FROM reach GROUP BY id),
     qd AS (SELECT doc_id, text, {{toks}} AS toks FROM documents),
     scored AS (
@@ -2841,11 +2847,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf: str) -> DataFrame:
     top of the iterative component labels; the oracle replays the
     closure as a recursive CTE and the argmax as a window rank."""
     d = t(spark, sf, "documents")
-    cand = dedup.lsh_candidate_pairs(d, "doc_id", "text", num_hashes=8, bands=4)
-    pairs = dedup.jaccard_pairs(
-        d, "doc_id", "text", shingle_n=3, min_jaccard=0.2, candidates=cand
-    )
-    cc = dedup.connected_components(pairs, "id_a", "id_b")
+    cc = dedup.connected_components(_lsh_jaccard_pairs(d), "id_a", "id_b")
     reps = dedup.cluster_representatives(d, cc, text.quality_score("text"), "doc_id")
     return reps.select(
         "cluster",
@@ -3104,25 +3106,8 @@ _SPLIT_FRAC = (
 
 @q(
     "curation_split_leakage",
-    _LSH_GATE_CTES.replace("WITH ", "WITH RECURSIVE ", 1)
+    _LSH_CC_CTES
     + f""",
-    vp AS (
-      SELECT id_a, id_b FROM (
-        SELECT j.id_a, j.id_b,
-               count(*)::DOUBLE / (j.n_a + j.n_b - count(*)) AS jaccard
-        FROM (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n_sh AS n_a, b.n_sh AS n_b, a.s
-          FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-        ) j SEMI JOIN cand c ON j.id_a = c.id_a AND j.id_b = c.id_b
-        GROUP BY j.id_a, j.id_b, j.n_a, j.n_b
-      ) t WHERE jaccard >= 0.2
-    ),
-    sym AS (SELECT id_a AS a, id_b AS b FROM vp UNION SELECT id_b, id_a FROM vp),
-    reach(id, label) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.b, r.label FROM reach r JOIN sym s ON r.id = s.a
-    ),
     comp AS (SELECT id, min(label) AS label FROM reach GROUP BY id),
     lbl AS (
       SELECT dd.doc_id, coalesce(c.label, dd.doc_id) AS grp
@@ -3165,10 +3150,7 @@ def curation_split_leakage(spark: SparkSession, sf: str) -> DataFrame:
     from denormalized_spark.operators import curation
 
     d = t(spark, sf, "documents")
-    cand = dedup.lsh_candidate_pairs(d, "doc_id", "text", num_hashes=8, bands=4)
-    pairs = dedup.jaccard_pairs(
-        d, "doc_id", "text", shingle_n=3, min_jaccard=0.2, candidates=cand
-    )
+    pairs = _lsh_jaccard_pairs(d)
     cc = dedup.connected_components(pairs, "id_a", "id_b")
     lbl = d.join(
         cc.select(F.col("id").alias("doc_id"), "label"), "doc_id", "left"
@@ -3510,14 +3492,8 @@ def text_bpe_encode_full(spark: SparkSession, sf: str) -> DataFrame:
 
 @q(
     "dedup_incremental_gate",
-    _DOC_SHINGLES_CTE
-    + f""",
-    mh AS (SELECT doc_id, {_minhash_list(8)} AS mh FROM sh),
-    bands AS (
-      SELECT doc_id, b.b AS band,
-             md5(mh[b.b*2 + 1]::VARCHAR || ',' || mh[b.b*2 + 2]::VARCHAR) AS band_key
-      FROM mh CROSS JOIN (VALUES (0), (1), (2), (3)) b(b)
-    ),
+    _LSH_BANDS_CTE
+    + """,
     hb AS (
       SELECT band, band_key FROM bands WHERE doc_id % 3 = 0
       GROUP BY band, band_key
@@ -3588,16 +3564,8 @@ def _fuzzy_names_oracle(
                   list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
            FROM d),
     sh AS (SELECT id, {_gram_sql(gram_n)} AS shingles FROM hh),
-    mh AS (SELECT id, {_minhash_list(8)} AS mh FROM sh),
-    bands AS (
-      SELECT id, b.b AS band,
-             md5(mh[b.b*2 + 1]::VARCHAR || ',' || mh[b.b*2 + 2]::VARCHAR) AS band_key
-      FROM mh CROSS JOIN (VALUES (0), (1), (2), (3)) b(b)
-    ),
-    cand AS (
-      SELECT DISTINCT a.id AS id_a, bb.id AS id_b
-      FROM bands a JOIN bands bb
-        ON a.band = bb.band AND a.band_key = bb.band_key AND a.id < bb.id
+    {_lsh_bands_sql("id")},
+    cand AS ({_lsh_cand_sql("id")}
     )
     SELECT c.id_a, c.id_b, na.name AS name_a, nb.name AS name_b,
            CAST(levenshtein(na.name, nb.name) AS INT) AS distance
@@ -5750,15 +5718,9 @@ def sketch_tdigest_grouped(spark: SparkSession, sf: str) -> DataFrame:
     _LSH_GATE_CTES
     + """
     , jp AS (
-      SELECT round(jaccard, 6) AS j FROM (
-        SELECT j.id_a, j.id_b,
-               count(*)::DOUBLE / (j.n_a + j.n_b - count(*)) AS jaccard
-        FROM (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n_sh AS n_a,
-                 b.n_sh AS n_b, a.s
-          FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-        ) j SEMI JOIN cand c ON j.id_a = c.id_a AND j.id_b = c.id_b
-        GROUP BY j.id_a, j.id_b, j.n_a, j.n_b
+      SELECT round(jaccard, 6) AS j FROM ("""
+    + _CAND_JACCARD_SQL
+    + """
       ) t
     ),
     b AS (SELECT CAST(least(floor(j * 10), 9) AS BIGINT) AS bucket,
@@ -5782,10 +5744,7 @@ def dedup_threshold_curve(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = t(spark, sf, "documents")
-    cand = dedup.lsh_candidate_pairs(d, "doc_id", "text", num_hashes=8, bands=4)
-    pairs = dedup.jaccard_pairs(
-        d, "doc_id", "text", shingle_n=3, min_jaccard=0.0, candidates=cand
-    )
+    pairs = _lsh_jaccard_pairs(d, min_jaccard=0.0)
     b = (
         pairs.select(
             F.least(F.floor(F.round("jaccard", 6) * 10), F.lit(9))
@@ -6427,8 +6386,8 @@ def sim_recall_curve(spark: SparkSession, sf: str) -> DataFrame:
     whole curve comes from ONE quantizer fit + ONE probed scan + ONE
     brute scan at k=max(ks): rank both 20-row lists, join on vec_id,
     and count pairs with both ranks ≤ k per curve point — ≤80
-    metadata rows after the two scans (r13 verdict: the old form ran
-    the fit+assign+scan chain FOUR times, ~4× this wall). The oracle
+    metadata rows after the two scans (a per-point form would run the
+    fit+assign+scan chain FOUR times, ~4× this wall). The oracle
     (unchanged) still replays all four chains; the nested-prefix
     property makes the values identical."""
     from pyspark.sql import Window
@@ -6900,20 +6859,9 @@ def sim_split_drift(spark: SparkSession, sf: str) -> DataFrame:
 @q(
     "dedup_eval_pairs",
     _LSH_GATE_CTES
+    + ","
+    + _PPJOIN_CTES
     + """,
-    tk AS (SELECT doc_id, unnest(shingles) AS tok FROM sh),
-    fr AS (SELECT tok, count(*) AS df FROM tk GROUP BY tok),
-    od AS (SELECT doc_id, array_agg(tok ORDER BY df, tok) AS toks, count(*) AS sz
-           FROM tk JOIN fr USING (tok) GROUP BY doc_id),
-    pf AS (SELECT doc_id, sz,
-                  unnest(toks[1 : sz - ((60 * sz + 99) // 100) + 1]) AS tok
-           FROM od),
-    cd AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM pf a JOIN pf b ON a.tok = b.tok AND a.doc_id < b.doc_id
-            AND 60 * a.sz <= 100 * b.sz AND 60 * b.sz <= 100 * a.sz),
-    vr AS (SELECT c.id_a, c.id_b, len(list_intersect(x.toks, y.toks)) AS i,
-                  x.sz AS sa, y.sz AS sb
-           FROM cd c JOIN od x ON c.id_a = x.doc_id JOIN od y ON c.id_b = y.doc_id),
     gold AS (SELECT id_a, id_b FROM vr WHERE 100 * i >= 60 * (sa + sb - i)),
     cnt AS (
       SELECT (SELECT count(*) FROM cand)::BIGINT AS n_system,
@@ -6983,35 +6931,15 @@ def dedup_eval_pairs(spark: SparkSession, sf: str) -> DataFrame:
 @q(
     "dedup_eval_bcubed",
     _LSH_GATE_CTES.replace("WITH ", "WITH RECURSIVE ", 1)
+    + ","
+    + _PPJOIN_CTES
     + """,
-    tk AS (SELECT doc_id, unnest(shingles) AS tok FROM sh),
-    fr AS (SELECT tok, count(*) AS df FROM tk GROUP BY tok),
-    od AS (SELECT doc_id, array_agg(tok ORDER BY df, tok) AS toks, count(*) AS sz
-           FROM tk JOIN fr USING (tok) GROUP BY doc_id),
-    pf AS (SELECT doc_id, sz,
-                  unnest(toks[1 : sz - ((60 * sz + 99) // 100) + 1]) AS tok
-           FROM od),
-    cd AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM pf a JOIN pf b ON a.tok = b.tok AND a.doc_id < b.doc_id
-            AND 60 * a.sz <= 100 * b.sz AND 60 * b.sz <= 100 * a.sz),
-    vr AS (SELECT c.id_a, c.id_b, len(list_intersect(x.toks, y.toks)) AS i,
-                  x.sz AS sa, y.sz AS sb
-           FROM cd c JOIN od x ON c.id_a = x.doc_id JOIN od y ON c.id_b = y.doc_id),
-    gold AS (SELECT id_a, id_b FROM vr WHERE 100 * i >= 60 * (sa + sb - i)),
-    ssym AS (SELECT id_a AS a, id_b AS b FROM cand
-             UNION SELECT id_b, id_a FROM cand),
-    sreach(id, label) AS (
-      SELECT a, a FROM ssym
-      UNION
-      SELECT s.b, r.label FROM sreach r JOIN ssym s ON r.id = s.a
-    ),
-    sysc AS (SELECT id, min(label) AS c FROM sreach GROUP BY id),
-    gsym AS (SELECT id_a AS a, id_b AS b FROM gold UNION SELECT id_b, id_a FROM gold),
-    greach(id, label) AS (
-      SELECT a, a FROM gsym
-      UNION
-      SELECT s.b, r.label FROM greach r JOIN gsym s ON r.id = s.a
-    ),
+    gold AS (SELECT id_a, id_b FROM vr WHERE 100 * i >= 60 * (sa + sb - i)),"""
+    + _reach_sql("cand", "s")
+    + """,
+    sysc AS (SELECT id, min(label) AS c FROM sreach GROUP BY id),"""
+    + _reach_sql("gold", "g")
+    + """,
     goldc AS (SELECT id, min(label) AS c FROM greach GROUP BY id),
     lab AS (
       SELECT d.doc_id,
@@ -7046,7 +6974,7 @@ def dedup_eval_pairs(spark: SparkSession, sf: str) -> DataFrame:
 def dedup_eval_bcubed(spark: SparkSession, sf: str) -> DataFrame:
     """B-cubed CLUSTER-level evaluation of the production dedup
     pipeline (operators/dedup.bcubed_eval; Bagga & Baldwin 1998,
-    Amigó et al. 2009) — the r13 verdict's new-wave complement of
+    Amigó et al. 2009) — the cluster-level complement of
     dedup_eval_pairs, which only counts PAIRS: SYSTEM = connected
     components over the RAW 8-hash/4-band LSH candidate pairs (the
     same system leg dedup_eval_pairs scores — banding false
@@ -7637,25 +7565,8 @@ def dedup_fastcdc_maxclamp(spark: SparkSession, sf: str) -> DataFrame:
 
 @q(
     "curation_softdedup_weights",
-    _LSH_GATE_CTES.replace("WITH ", "WITH RECURSIVE ", 1)
+    _LSH_CC_CTES
     + """,
-    vp AS (
-      SELECT id_a, id_b FROM (
-        SELECT j.id_a, j.id_b,
-               count(*)::DOUBLE / (j.n_a + j.n_b - count(*)) AS jaccard
-        FROM (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n_sh AS n_a, b.n_sh AS n_b, a.s
-          FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-        ) j SEMI JOIN cand c ON j.id_a = c.id_a AND j.id_b = c.id_b
-        GROUP BY j.id_a, j.id_b, j.n_a, j.n_b
-      ) t WHERE jaccard >= 0.2
-    ),
-    sym AS (SELECT id_a AS a, id_b AS b FROM vp UNION SELECT id_b, id_a FROM vp),
-    reach(id, label) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.b, r.label FROM reach r JOIN sym s ON r.id = s.a
-    ),
     comp AS (SELECT id AS doc_id, min(label) AS lab FROM reach GROUP BY id),
     csz AS (SELECT lab, count(*)::BIGINT AS cluster_size FROM comp GROUP BY lab),
     wts AS (
@@ -7689,11 +7600,7 @@ def curation_softdedup_weights(spark: SparkSession, sf: str) -> DataFrame:
     from denormalized_spark.operators import curation, dedup
 
     d = t(spark, sf, "documents")
-    cand = dedup.lsh_candidate_pairs(d, "doc_id", "text", num_hashes=8, bands=4)
-    pairs = dedup.jaccard_pairs(
-        d, "doc_id", "text", shingle_n=3, min_jaccard=0.2, candidates=cand
-    )
-    cc = dedup.connected_components(pairs, "id_a", "id_b")
+    cc = dedup.connected_components(_lsh_jaccard_pairs(d), "id_a", "id_b")
     weighted = curation.softdedup_weights(d, cc)
     return (
         weighted.groupBy("source")

@@ -627,8 +627,8 @@ def window_salted_1h(spark: SparkSession, sf: str) -> DataFrame:
     salt — so the oracle is the PLAIN one-stage SQL window agg (the
     salt is algebra-invisible by construction). Rounding happens
     after the final combine, never on partials. Cross-engine evidence
-    for the skew path that was previously only parity-tested against
-    the plain form (r9 verdict item 4)."""
+    for the skew path: a parity test against the plain form alone
+    would pass if both forms drifted from SQL together."""
     from denormalized_spark.operators.windows import salted_window_agg
 
     out = salted_window_agg(

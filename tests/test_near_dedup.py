@@ -109,6 +109,56 @@ def test_stream_matches_batch_twin(spark):
     assert by_id[4] == T0 + datetime.timedelta(minutes=5)
 
 
+def test_stream_matches_batch_twin_two_bands_with_payload(spark):
+    """The band count reaches the stream core: at num_hashes=8,
+    bands=2 a survivor owns exactly two buckets, so a core that
+    counted a fixed four would emit nothing. The emitted set (minus
+    the sentinel's unclosed window) equals the batch twin at the same
+    settings, and a payload column round-trips."""
+    stage = tempfile.mkdtemp(prefix="nd_b2_stage_")
+    schema = "doc_id long, ts timestamp, text string, src string"
+    by_minute: dict[int, list] = {}
+    for i, m, t in DOCS:
+        by_minute.setdefault(m, []).append(
+            (i, T0 + datetime.timedelta(minutes=m), t, f"src{i}")
+        )
+    for k, (m, chunk) in enumerate(sorted(by_minute.items())):
+        path = os.path.join(stage, f"part{k}")
+        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(path)
+        for f in os.listdir(path):
+            os.utime(os.path.join(path, f), (1_000_000 + k, 1_000_000 + k))
+
+    settings = dict(num_hashes=8, bands=2, payload_cols=("src",))
+    sdf = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(stage, "part*"))
+    )
+    ds = DataStream(sdf, event_time="ts").near_dedup("doc_id", "text", **settings)
+    emitted = []
+    q = ds.sink(
+        lambda df: emitted.extend(df.collect()),
+        checkpoint=tempfile.mkdtemp(prefix="nd_b2_ck_"),
+    )
+    q.awaitTermination(240)
+    got = {r.doc_id for r in emitted}
+    assert len(got) == len(emitted), "duplicate emission"
+
+    batch_df = spark.createDataFrame(
+        [(i, ts, t, f"src{i}") for i, ts, t in _rows()], schema
+    )
+    want = {
+        r.doc_id
+        for r in near_dedup_batch(batch_df, "doc_id", "text", "ts", **settings)
+        .collect()
+    }
+    assert got == want - {99}
+    assert got == {1, 2, 4}
+    assert all(r.src == f"src{r.doc_id}" for r in emitted)
+
+
 def test_stream_batch_polymorphism(doc_df):
     out = DataStream(doc_df, event_time="ts").near_dedup("doc_id", "text")
     assert {r.doc_id for r in out.df.collect()} == {1, 2, 4, 99}

@@ -9,6 +9,8 @@ multimodal operators.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -72,12 +74,27 @@ def test_no_python_eval_outside_udf_paths(spark, queries):
         "text_stats",
         "over_ntile_percentrank",
         "dedup_jaccard_lsh_verified",
+        "dedup_near_gate",
+        "dedup_incremental_gate",
     ):
         plan = plan_of(queries, spark, name)
         assert not any(m in plan for m in markers), f"{name} runs Python"
     for name in python_ok:
         plan = plan_of(queries, spark, name)
         assert any(m in plan for m in markers)  # and these are the sanctioned ones
+
+
+def test_near_gate_one_band_key_shuffle_no_pairs(spark, queries):
+    """The first-claimant gate's promise: one band-key shuffle and no
+    pair generation — exactly one exchange on (band, band_key), and
+    no nested-loop or cartesian join anywhere."""
+    plan = plan_of(queries, spark, "dedup_near_gate")
+    band_exchanges = re.findall(
+        r"Exchange hashpartitioning\(band#\d+, band_key#\d+,", plan
+    )
+    assert len(band_exchanges) == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_global_ranking_no_single_partition_on_data(spark, queries):

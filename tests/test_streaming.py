@@ -1336,12 +1336,24 @@ def test_lsh_dedup_maintainer_direct_updates(spark, tmp_path):
     bucket and survives; identical content in a LATER batch hits the
     persisted index and is flagged; the index parquet grows only by
     new buckets."""
+    _check_maintainer_direct_updates(spark, str(tmp_path / "idx"))
+
+
+def test_lsh_dedup_maintainer_direct_updates_file_uri(spark, tmp_path):
+    """The same contract with a ``file://`` URI index path: the index
+    is found through the path's FileSystem, so batch 2 sees the
+    buckets batch 1 appended (a local-path-only existence check read
+    an empty index every batch and let doc 4 survive)."""
+    _check_maintainer_direct_updates(spark, (tmp_path / "idx").as_uri())
+
+
+def _check_maintainer_direct_updates(spark, index_path: str) -> None:
     from denormalized_spark.streaming.lsh import LSHDedupMaintainer
 
     ta = "the quick brown fox jumps over the lazy dog again and again"
     tc = "completely different content about spark structured streaming"
     te = "a third unrelated document mentioning parquet columnar files"
-    m = LSHDedupMaintainer(str(tmp_path / "idx"))
+    m = LSHDedupMaintainer(index_path)
     b1 = spark.createDataFrame(
         [(1, ta), (2, ta), (3, tc)], "doc_id long, text string"
     )
