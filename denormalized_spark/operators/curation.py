@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from denormalized_spark.operators._hashing import md5_int, md5_unit
 from denormalized_spark.operators._memo import memo_column
 from denormalized_spark.operators.dedup import shingle_hashes
 from denormalized_spark.operators.text import tokens
@@ -340,12 +341,7 @@ def sample_fraction(id_col: Column | str, seed: str = "s0") -> Column:
     across reruns, partitionings, AND engines (DuckDB computes the
     identical value), unlike ``rand(seed)`` which is
     partition-dependent."""
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
-    return (
-        F.conv(F.substring(F.md5(F.concat(F.lit(seed), c.cast("string"))), 1, 8), 16, 10)
-        .cast("double")
-        / F.lit(float(1 << 32))
-    )
+    return md5_unit(id_col, 8, salt=seed)
 
 
 def split_assign(
@@ -594,10 +590,7 @@ def _hashed_tokens(
         *cols, F.explode(tokens(text_col)).alias("_tok")
     ).withColumn(
         "_bucket",
-        F.pmod(
-            F.conv(F.substring(F.md5("_tok"), 1, 8), 16, 10).cast("long"),
-            F.lit(num_buckets),
-        ),
+        F.pmod(md5_int("_tok", 8), F.lit(num_buckets)),
     )
 
 
@@ -655,10 +648,7 @@ def gumbel_micros(id_col: Column | str, seed: str = "dsir-rs0") -> Column:
     across reruns, partitionings, and engines; the micro-nat floor
     grid is ~10¹⁰× coarser than a double ulp, so cross-libm ln
     differences cannot move the floored value."""
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
-    m = F.conv(
-        F.substring(F.md5(F.concat(F.lit(seed), c.cast("string"))), 1, 8), 16, 10
-    ).cast("long")
+    m = md5_int(id_col, 8, salt=seed)
     u = (m.cast("double") + F.lit(0.5)) / F.lit(float(1 << 32))
     return F.floor(-F.log(-F.log(u)) * 1e6 + 0.5).cast("long")
 
@@ -1283,35 +1273,17 @@ def span_corruption_plan(
     n = F.size(toks)
     pos = F.sequence(F.lit(1), F.greatest(n, F.lit(0)))
 
+    def pos_key(j: Column) -> Column:
+        return F.concat(c_id, F.lit(":"), j.cast("string"))
+
     def frac(j: Column, tag: str) -> Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{seed}{tag}:"), c_id, F.lit(":"),
-                                   j.cast("string"))),
-                    1, 8,
-                ),
-                16, 10,
-            ).cast("double")
-            / F.lit(float(1 << 32))
-        )
+        return md5_unit(pos_key(j), 8, salt=f"{seed}{tag}:")
 
     def is_start(j: Column) -> Column:
         return frac(j, "s") < F.lit(start_rate_milli / 1000.0)
 
     def span_len(j: Column) -> Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{seed}l:"), c_id, F.lit(":"),
-                                   j.cast("string"))),
-                    1, 8,
-                ),
-                16, 10,
-            ).cast("long")
-            % max_span
-            + 1
-        )
+        return md5_int(pos_key(j), 8, salt=f"{seed}l:") % max_span + 1
 
     def masked(p: Column) -> Column:
         back = F.sequence(F.greatest(p - (max_span - 1), F.lit(1)), p)

@@ -8,10 +8,11 @@ compare all pairs. The pipeline is
             -> candidate pairs (within-bucket join — tiny buckets)
             -> exact verify (Jaccard on the candidates only)
 
-All hashing is md5-based and engine-portable (identical results in
-Spark and DuckDB, which the correctness oracles exploit). No Python
-UDFs anywhere; every stage is built-in higher-order functions, so the
-whole signature computation stays inside whole-stage codegen.
+All hashing is the md5-prefix hash of ``operators._hashing`` and
+engine-portable (identical results in Spark and DuckDB, which the
+correctness oracles exploit). No Python UDFs anywhere; every stage is
+built-in higher-order functions, so the whole signature computation
+stays inside whole-stage codegen.
 
 The reference has no dedup operators; Spark's ``dropDuplicates`` /
 ``dropDuplicatesWithinWatermark`` cover the exact-streaming case.
@@ -28,18 +29,15 @@ from denormalized_spark.operators._bucketing import (
     bucket_pairs,
     capped_bucket_collect,
 )
+from denormalized_spark.operators._hashing import md5_int, md5_int_py
 from denormalized_spark.operators._memo import memo_column
 from denormalized_spark.operators.text import tokens
 
 
 def _hash64(col: Column, bits: int = 60) -> Column:
-    """Portable stable hash: md5 hex -> first 15 chars -> signed long.
-
-    15 hex chars = 60 bits, always positive, same value in DuckDB via
-    ``('0x' || substr(md5(x), 1, 15))::BIGINT``.
-    """
-    n_hex = bits // 4
-    return F.conv(F.substring(F.md5(col), 1, n_hex), 16, 10).cast("long")
+    """Portable stable hash: the first ``bits // 4`` md5 hex chars as a
+    non-negative long (:func:`~denormalized_spark.operators._hashing.md5_int`)."""
+    return md5_int(col, bits // 4)
 
 
 def word_shingles(text: Column | str, n: int = 3) -> Column:
@@ -64,14 +62,12 @@ SHINGLE_MOD = 1 << 32
 def shingle_params(j: int) -> int:
     """Deterministic 29-bit positional mixing constant for the j-th
     token of a shingle (md5-derived, engine-portable literal)."""
-    import hashlib
-
-    return int(hashlib.md5(f"sh_c:{j}".encode()).hexdigest()[:8], 16) % ((1 << 29) - 1) + 1
+    return md5_int_py(f"sh_c:{j}", 8) % ((1 << 29) - 1) + 1
 
 
 def token_hash32(t: Column) -> Column:
     """32-bit token hash: first 8 md5 hex chars."""
-    return F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
+    return md5_int(t, 8)
 
 
 def eval_once(col: Column, build) -> Column:
@@ -180,12 +176,8 @@ def minhash_params(i: int) -> tuple[int, int]:
     constants, identical in any engine that embeds them as literals.
     a ∈ [1, M), b ∈ [0, M) — full-range multipliers are what makes
     the slots independent draws (see MERSENNE31)."""
-    import hashlib
-
     m = MERSENNE31
-    a = int(hashlib.md5(f"mh_a:{i}".encode()).hexdigest()[:15], 16) % (m - 1) + 1
-    b = int(hashlib.md5(f"mh_b:{i}".encode()).hexdigest()[:15], 16) % m
-    return a, b
+    return md5_int_py(f"mh_a:{i}", 15) % (m - 1) + 1, md5_int_py(f"mh_b:{i}", 15) % m
 
 
 @memo_column
@@ -1644,15 +1636,7 @@ def weighted_minhash_signatures(
             F.sequence(F.lit(1), F.least(F.col("_c"), F.lit(weight_cap)))
         ).alias("_i"),
     )
-    h32 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("_tok"), F.lit(":"), F.col("_i").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h32 = md5_int(F.concat(F.col("_tok"), F.lit(":"), F.col("_i").cast("string")), 8)
     base = (h32 % mod).alias("_h")
     hashed = rep.select(id_col, base)
     aggs = []

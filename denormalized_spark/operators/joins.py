@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from denormalized_spark.operators._hashing import md5_int
+
 
 def salted_join(
     left: DataFrame,
@@ -111,15 +113,10 @@ def bloom_semi_join(
     if bits is None:
         bits = _derive_bloom_bits(keys.select(keys_key).distinct().count())
 
-    def mix(c):
-        return F.conv(
-            F.substring(F.md5(F.col(c).cast("string")), 1, 8), 16, 10
-        ).cast("long")
-
-    build = keys.select(mix(keys_key).alias("gram"))
+    build = keys.select(md5_int(keys_key, 8).alias("gram"))
     bm = _bench_gram_bloom(build, bits, probes)
     gated = fact.crossJoin(F.broadcast(bm)).filter(
-        _bloom_hit(F.col("_bm"), F.array(mix(fact_key)), bits, probes)
+        _bloom_hit(F.col("_bm"), F.array(md5_int(fact_key, 8)), bits, probes)
     ).drop("_bm")
     if gate_only:
         # Debug/measurement surface: the Bloom-passed rows BEFORE the

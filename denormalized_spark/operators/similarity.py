@@ -31,6 +31,7 @@ from denormalized_spark.operators._bucketing import (
     bucket_pin_partitions,
     capped_bucket_collect,
 )
+from denormalized_spark.operators._hashing import md5_int_py
 from denormalized_spark.operators._memo import memo_column
 
 
@@ -72,20 +73,21 @@ def cosine_topk(
     return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
 
 
+def _md5_components(prefix: str, dim: int) -> list[float]:
+    """Deterministic pseudo-random vector in [-0.5, 0.5]^dim:
+    component j = the 60-bit portable hash (15 hex chars) of
+    ``"<prefix>:<j>"`` scaled to the unit interval, minus 0.5."""
+    return [md5_int_py(f"{prefix}:{j}", 15) / float(1 << 60) - 0.5 for j in range(dim)]
+
+
 def hyperplane_components(plane_idx: int, dim: int) -> list[float]:
     """Deterministic pseudo-random hyperplane in [-0.5, 0.5]^dim:
     component j = md5("p<i>:<j>") -> first 15 hex chars -> 60-bit uint
-    -> unit interval. Computed driver-side with hashlib (identical to
-    what md5() in any engine yields), so the plane is a plain float
-    literal array — Catalyst constant-folds it, and the DuckDB oracle
-    can embed the very same literals."""
-    import hashlib
-
-    comps = []
-    for j in range(dim):
-        h = int(hashlib.md5(f"p{plane_idx}:{j}".encode()).hexdigest()[:15], 16)
-        comps.append(h / float(1 << 60) - 0.5)
-    return comps
+    -> unit interval. Computed driver-side (identical to what md5() in
+    any engine yields), so the plane is a plain float literal array —
+    Catalyst constant-folds it, and the DuckDB oracle can embed the
+    very same literals."""
+    return _md5_components(f"p{plane_idx}", dim)
 
 
 def lsh_signature_arrays(
@@ -245,13 +247,7 @@ def projection_components(comp_idx: int, dim: int) -> list[float]:
     the Johnson-Lindenstrauss matrix row, md5-derived like
     :func:`hyperplane_components` but under its own seed family so
     projections and LSH hyperplanes stay independent draws."""
-    import hashlib
-
-    comps = []
-    for j in range(dim):
-        h = int(hashlib.md5(f"rp{comp_idx}:{j}".encode()).hexdigest()[:15], 16)
-        comps.append(h / float(1 << 60) - 0.5)
-    return comps
+    return _md5_components(f"rp{comp_idx}", dim)
 
 
 def project_embeddings(
@@ -1281,12 +1277,7 @@ def jl_signs(j: int, dim: int) -> list[float]:
     """Deterministic ±1 sign row j of the JL projection matrix:
     component i = low bit of md5("jl{j}:{i}") — same engine-portable
     literal contract as :func:`hyperplane_components`."""
-    import hashlib
-
-    return [
-        1.0 if int(hashlib.md5(f"jl{j}:{i}".encode()).hexdigest()[-1], 16) & 1 else -1.0
-        for i in range(dim)
-    ]
+    return [1.0 if md5_int_py(f"jl{j}:{i}", 32) & 1 else -1.0 for i in range(dim)]
 
 
 def jl_project(

@@ -21,11 +21,11 @@ Design for Spark's execution model:
 - Probes broadcast the sketch (≤ depth·width rows) and take the min
   over the key's ``depth`` cells — map-side, scan speed.
 
-Hash family: the repo's portable md5 contract (first 8 hex chars of
-``"cm{row}:" || key`` mod width) — deterministic across engines, so
-the DuckDB oracles replay the sketch bit-for-bit. Guarantees: the
-estimate never undercounts, and overcounts by more than 2N/width with
-probability at most (1/2)^depth.
+Hash family: the repo's portable md5 hash (``operators._hashing``:
+first 8 hex chars of ``"cm{row}:" || key``, mod width) —
+deterministic across engines, so the DuckDB oracles replay the sketch
+bit-for-bit. Guarantees: the estimate never undercounts, and
+overcounts by more than 2N/width with probability at most (1/2)^depth.
 
 Reference parity: the reference engine exposes approximate aggregates
 (approx_distinct / approx_median — covered by functions/__init__.py);
@@ -38,20 +38,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from denormalized_spark.operators._hashing import md5_int
+
 
 def cm_hash(key: Column | str, row: int, width: int) -> Column:
     """Row-``row`` bucket of ``key``: md5("cm{row}:" || key) mod width
     — independent-enough hash functions indexed by the row salt, and
     replayable in any engine with md5."""
-    c = F.col(key) if isinstance(key, str) else key
-    return F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"cm{row}:"), c.cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(width),
-    )
+    return F.pmod(md5_int(key, 8, salt=f"cm{row}:"), F.lit(width))
 
 
 def count_min(
@@ -195,8 +189,7 @@ def hll_registers(df: DataFrame, key_col: str, p: int = 6) -> DataFrame:
     production alternative with the same shape; this register table is
     the engine-portable (and hence oracle-checkable) formulation."""
     m = 1 << p
-    c = F.col(key_col)
-    h = F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")
+    h = md5_int(key_col, 15)
     w = F.shiftright(h, p)
     rho = (
         F.when(w == 0, F.lit(61 - p))
@@ -269,8 +262,7 @@ _KMV_SPACE = float(1 << 60)  # the 60-bit md5 hash domain
 def kmv_hash(key: Column | str) -> Column:
     """The repo's portable 60-bit md5 hash (first 15 hex chars) — the
     uniform the KMV order statistics are taken over."""
-    c = F.col(key) if isinstance(key, str) else key
-    return F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")
+    return md5_int(key, 15)
 
 
 def kmv_sketch(df: DataFrame, key_col: str, k: int = 64) -> DataFrame:
@@ -558,8 +550,7 @@ def hll_registers_grouped(
     answer any rollup later by max-merging registers along either
     dimension."""
     m = 1 << p
-    c = F.col(key_col)
-    h = F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")
+    h = md5_int(key_col, 15)
     w = F.shiftright(h, p)
     rho = (
         F.when(w == 0, F.lit(61 - p))
@@ -604,15 +595,7 @@ def bloom_hash(key: Column | str, i: int, m_bits: int) -> Column:
     """i-th Bloom bit position of ``key``: md5("bl{i}:" || key) mod
     m_bits — same salted-md5 family as :func:`cm_hash`, replayable in
     any engine with md5."""
-    c = F.col(key) if isinstance(key, str) else key
-    return F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"bl{i}:"), c.cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(m_bits),
-    )
+    return F.pmod(md5_int(key, 8, salt=f"bl{i}:"), F.lit(m_bits))
 
 
 def bloom_bits(
@@ -691,13 +674,9 @@ def bloom_probe(
 
 def cs_sign(key: Column | str, row: int) -> Column:
     """±1 four-wise-ish sign of ``key`` for sketch row ``row``: low bit
-    of md5("css{row}:" || key) — same portable salted-md5 family."""
-    c = F.col(key) if isinstance(key, str) else key
-    bit = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"css{row}:"), c.cast("string"))), 1, 1),
-        16,
-        10,
-    ).cast("long") % 2
+    of the FIRST hex char of md5("css{row}:" || key) (the 1-hex-char
+    portable hash) — same salted-md5 family."""
+    bit = md5_int(key, 1, salt=f"css{row}:") % 2
     return F.when(bit == 1, F.lit(1)).otherwise(F.lit(-1))
 
 
@@ -727,23 +706,9 @@ def count_sketch(
                 *[
                     F.struct(
                         F.lit(r).alias("cs_row"),
-                        F.pmod(
-                            F.conv(
-                                F.substring(
-                                    F.md5(
-                                        F.concat(
-                                            F.lit(f"cs{r}:"),
-                                            F.col("_k").cast("string"),
-                                        )
-                                    ),
-                                    1,
-                                    8,
-                                ),
-                                16,
-                                10,
-                            ).cast("long"),
-                            F.lit(width),
-                        ).alias("cs_col"),
+                        F.pmod(md5_int("_k", 8, salt=f"cs{r}:"), F.lit(width)).alias(
+                            "cs_col"
+                        ),
                         (cs_sign(F.col("_k"), r) * F.col("_c")).alias("_sc"),
                     )
                     for r in range(depth)

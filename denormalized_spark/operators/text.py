@@ -19,6 +19,7 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from denormalized_spark.operators._hashing import md5_unit
 from denormalized_spark.operators._memo import memo_column
 
 #: Minimal English stopword list used by the quality / language-ID
@@ -384,15 +385,7 @@ def hashed_linear_margin(
         w = F.transform(buckets, lambda b: F.coalesce(weights[b], F.lit(0.0)))
     else:
         # pseudo-weight(b) = first-8-hex(md5(seed||b)) / 2^32 * 2 - 1
-        w = F.transform(
-            buckets,
-            lambda b: F.conv(
-                F.substring(F.md5(F.concat(F.lit(seed), b.cast("string"))), 1, 8), 16, 10
-            ).cast("double")
-            / F.lit(float(1 << 32))
-            * 2
-            - 1,
-        )
+        w = F.transform(buckets, lambda b: md5_unit(b, 8, salt=seed) * 2 - 1)
     return F.aggregate(
         w, F.lit(0.0), lambda a, x: a + x
     ) / F.greatest(F.size(toks), F.lit(1))

@@ -4,7 +4,8 @@ hash-compares results (order-insensitive, columns sorted by name), so
 
 - every computed column is aliased IDENTICALLY in both,
 - floats are rounded the same number of digits in both,
-- all hashing is md5-based (identical across engines),
+- all hashing is the md5-prefix hash of ``operators._hashing``
+  (identical across engines; oracles embed ``md5_int_sql``),
 - top-k queries carry explicit tiebreaks so LIMIT is deterministic.
 
 Known rounding hazard (fix pattern, applied where hit): Spark's

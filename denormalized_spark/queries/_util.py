@@ -6,6 +6,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from denormalized_spark.operators._hashing import md5_int_sql
+from denormalized_spark.operators.dedup import SHINGLE_MOD, shingle_params
+from denormalized_spark.operators.text import STOPWORDS
 from denormalized_spark.sources.files import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -17,6 +20,34 @@ EAGER: set[str] = set()
 #: oracle SQL for :func:`~denormalized_spark.operators.text.tokens`:
 #: whitespace split, empties dropped
 _TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), x -> x != '')"
+
+#: oracle SQL for the 32-bit token hashes of a ``ws`` token list
+#: (:func:`~denormalized_spark.operators.dedup.token_hash32`)
+_TOKEN_HASHES = f"list_transform(ws, t -> {md5_int_sql('t', 8)})"
+
+#: :data:`~denormalized_spark.operators.text.STOPWORDS` as a DuckDB list
+_STOP_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
+
+
+def _positional_gram_sql(n: int) -> str:
+    """Hash of the word ``n``-gram starting at ``th[i]`` over the token
+    hashes ``th``, matching operators.dedup.positional_gram_hashes and
+    shingle_hashes: positional constants, per-term mod, mod 2^32."""
+    m = SHINGLE_MOD
+    terms = " + ".join(f"((th[i+{j}] * {shingle_params(j)}) % {m})" for j in range(n))
+    return f"(({terms}) % {m})"
+
+
+def _gram_sql(n: int) -> str:
+    """Distinct word ``n``-gram hashes of ``th``, matching
+    operators.dedup.shingle_hashes: a doc shorter than ``n`` tokens
+    gets one rolling hash of all its tokens."""
+    m = SHINGLE_MOD
+    return f"""
+    CASE WHEN len(th) >= {n}
+         THEN list_distinct([{_positional_gram_sql(n)} for i in range(1, len(th) - {n - 2})])
+         ELSE [list_reduce(list_prepend(0::BIGINT, th), (acc, x) -> (acc * 31 + x) % {m})] END
+    """
 
 
 def q(name: str, oracle: str | None = None, eager: bool = False):

@@ -4,9 +4,9 @@ pipeline — each with a DuckDB oracle recomputing the identical
 md5-based decisions.
 
 Spark implementations live in operators/curation.py; the oracles
-reuse the engine-portable hashing contracts from operators/dedup.py
-(token hash = first 8 md5 hex chars; n-gram hash = positional-constant
-mix mod 2^32).
+reuse the engine-portable hash of operators/_hashing.py (token hash =
+first 8 md5 hex chars) and the shared n-gram SQL of queries/_util.py
+(n-gram hash = positional-constant mix mod 2^32).
 """
 
 from __future__ import annotations
@@ -15,31 +15,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from denormalized_spark.operators import curation, text
-from denormalized_spark.operators.dedup import SHINGLE_MOD, shingle_params
-from denormalized_spark.queries._util import _TOKS, q, t
-
-
-def _gram_sql(n: int) -> str:
-    """Word n-gram hashes for arbitrary n, matching
-    operators.dedup.shingle_hashes: same positional constants, same
-    per-term mod, same short-doc rolling-hash fallback. (The n=3
-    variant in llm_pipeline.py predates this; kept there for the
-    minhash oracles' literal stability.)"""
-    m = SHINGLE_MOD
-    cs = [shingle_params(j) for j in range(n)]
-    gram = " + ".join(f"((th[i+{j}] * {cs[j]}) % {m})" for j in range(n))
-    return f"""
-    CASE WHEN len(th) >= {n}
-         THEN list_distinct([({gram}) % {m} for i in range(1, len(th) - {n - 2})])
-         ELSE [list_reduce(list_prepend(0::BIGINT, th), (acc, x) -> (acc * 31 + x) % {m})] END
-    """
+from denormalized_spark.operators._hashing import md5_int_sql
+from denormalized_spark.queries._util import _STOP_SQL, _TOKEN_HASHES, _TOKS, _gram_sql, q, t
 
 
 #: documents CTE → per-doc 5-gram hash arrays (benchmark split on doc_id % 20 == 7)
 _GRAMS_CTE = f"""
 WITH d AS (SELECT doc_id, {_TOKS} AS ws FROM documents),
 hh AS (SELECT doc_id,
-              list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+              {_TOKEN_HASHES} AS th
        FROM d),
 g AS (SELECT doc_id, {_gram_sql(5)} AS grams FROM hh),
 bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 20 = 7),
@@ -129,7 +113,7 @@ _MIX_VALUES = ", ".join(f"('{k}', {v})" for k, v in _MIX_RATES.items())
     f"""
     WITH d AS (SELECT doc_id, {_TOKS} AS ws FROM documents),
     hh AS (SELECT doc_id,
-                  list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+                  {_TOKEN_HASHES} AS th
            FROM d),
     g AS (SELECT doc_id, {_gram_sql(3)} AS grams FROM hh),
     e AS (SELECT doc_id, unnest(grams) AS gram FROM g),
@@ -159,7 +143,7 @@ def dedup_ngram_duplication_rate(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH d AS (SELECT doc_id, {_TOKS} AS ws FROM documents),
     hh AS (SELECT doc_id,
-                  list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+                  {_TOKEN_HASHES} AS th
            FROM d),
     g AS (SELECT doc_id, {_gram_sql(3)} AS grams FROM hh),
     e AS (SELECT doc_id, unnest(grams) AS gram FROM g),
@@ -216,7 +200,7 @@ _SOLVER_W_VALUES = ", ".join(f"('{k}', {v})" for k, v in _SOLVER_W.items())
       SELECT d.source, count(*) AS n_docs_kept,
              CAST(sum(len({_TOKS})) AS BIGINT) AS n_tokens_kept
       FROM documents d JOIN rates USING (source)
-      WHERE ('0x' || substr(md5('mix0' || CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT
+      WHERE {md5_int_sql("'mix0' || CAST(d.doc_id AS VARCHAR)", 8)}
             / 4294967296.0 < rates.rate
       GROUP BY d.source
     )
@@ -257,12 +241,12 @@ def curation_mixture_solver(spark: SparkSession, sf: str) -> DataFrame:
 
 @q(
     "curation_eval_sample",
-    """
+    f"""
     WITH r AS (
       SELECT doc_id, lang,
              row_number() OVER (
                PARTITION BY lang
-               ORDER BY ('0x' || substr(md5('ev0' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+               ORDER BY {md5_int_sql("'ev0' || CAST(doc_id AS VARCHAR)", 8)}
                         / 4294967296.0 ASC, doc_id ASC
              ) AS rk
       FROM documents
@@ -293,7 +277,7 @@ def curation_eval_sample(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     SELECT d.doc_id, d.source FROM documents d
     JOIN (VALUES {_MIX_VALUES}) r(source, rate) USING (source)
-    WHERE ('0x' || substr(md5('mix1' || CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT
+    WHERE {md5_int_sql("'mix1' || CAST(d.doc_id AS VARCHAR)", 8)}
           / 4294967296.0 < r.rate
     """,
 )
@@ -313,7 +297,7 @@ _DSIR_B = 4096
 #: reused by both the weighting and the resampling entries
 _DSIR_W_CTES = f"""toks AS (
       SELECT doc_id, lang = 'en' AS is_tgt,
-             ('0x' || substr(md5(tok), 1, 8))::BIGINT % {_DSIR_B} AS bucket
+             {md5_int_sql("tok", 8)} % {_DSIR_B} AS bucket
       FROM (SELECT doc_id, lang, unnest({_TOKS}) AS tok FROM documents)
     ),
     b AS (
@@ -371,7 +355,7 @@ _DSIR_N = 100
     )
     SELECT doc_id, weight_micros,
            weight_micros + CAST(floor(-ln(-ln(
-             ((('0x' || substr(md5('dsir-rs0' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+             (({md5_int_sql("'dsir-rs0' || CAST(doc_id AS VARCHAR)", 8)}
                + 0.5) / 4294967296.0)
            )) * 1000000.0 + 0.5) AS BIGINT) AS key_micros
     FROM scored
@@ -396,12 +380,12 @@ def curation_dsir_resample(spark: SparkSession, sf: str) -> DataFrame:
 
 @q(
     "curation_split",
-    """
+    f"""
     WITH a AS (
       SELECT source,
-             CASE WHEN ('0x' || substr(md5('split0' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+             CASE WHEN {md5_int_sql("'split0' || CAST(doc_id AS VARCHAR)", 8)}
                        / 4294967296.0 < 0.8 THEN 'train'
-                  WHEN ('0x' || substr(md5('split0' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+                  WHEN {md5_int_sql("'split0' || CAST(doc_id AS VARCHAR)", 8)}
                        / 4294967296.0 < 0.9 THEN 'val'
                   ELSE 'test' END AS split
       FROM documents
@@ -501,7 +485,6 @@ def curation_redact(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_STOP_SQL = "[" + ", ".join(f"'{s}'" for s in text.STOPWORDS) + "]"
 
 
 @q(
@@ -582,8 +565,7 @@ def curation_contamination_report(spark: SparkSession, sf: str) -> DataFrame:
       SELECT * FROM tk
       WHERE 1.0 / (1.0 + exp(-(
         list_sum(list_transform(toks, t ->
-          ('0x' || substr(md5('qc0' || CAST(
-             ('0x' || substr(md5(t), 1, 8))::BIGINT % 65536 AS VARCHAR)), 1, 8))::BIGINT
+          {md5_int_sql(f"'qc0' || CAST( {md5_int_sql('t', 8)} % 65536 AS VARCHAR)", 8)}
           / 4294967296.0 * 2 - 1))
         / greatest(len(toks), 1)))) > 0.5
     ),
@@ -594,8 +576,7 @@ def curation_contamination_report(spark: SparkSession, sf: str) -> DataFrame:
            ON fp.f = k.f AND fp.doc_id = k.keep_id),
     clean AS (SELECT * FROM dd WHERE doc_id NOT IN (SELECT doc_id FROM cont)),
     sp AS (
-      SELECT *, CASE WHEN ('0x' || substr(md5('split0' || CAST(doc_id AS VARCHAR)),
-                          1, 8))::BIGINT / 4294967296.0 < 0.9
+      SELECT *, CASE WHEN {md5_int_sql("'split0' || CAST(doc_id AS VARCHAR)", 8)} / 4294967296.0 < 0.9
                      THEN 'train' ELSE 'val' END AS split
       FROM clean
     )
@@ -613,12 +594,6 @@ def curation_full_funnel(spark: SparkSession, sf: str) -> DataFrame:
     is either a projection or a key-local shuffle; the only broadcast
     is the benchmark gram set. This is the query a 100 TB pre-training
     prep run actually executes.
-
-    Perf note (r12): the r11 bench's 1.89 s / 2.4× own-oracle was
-    host-state, not code — a same-box bisect ran the r10 TREE at
-    3.23 s vs this tree's 2.40 s on identical hardware, and the r12
-    idle-box bench is back to 1.51 s (~2.0× own-oracle, near the r10
-    1.6×). Plan unchanged.
 
     Stage split (r14 post-optimization runs of the since-deleted
     tools/profile_stages.py,
@@ -673,7 +648,7 @@ def curation_full_funnel(spark: SparkSession, sf: str) -> DataFrame:
     sampled AS (
       SELECT c.doc_id, c.source, c.text FROM clean c
       JOIN (VALUES {_MIX_VALUES}) r(source, rate) USING (source)
-      WHERE ('0x' || substr(md5('mix1' || CAST(c.doc_id AS VARCHAR)), 1, 8))::BIGINT
+      WHERE {md5_int_sql("'mix1' || CAST(c.doc_id AS VARCHAR)", 8)}
             / 4294967296.0 < r.rate
     )
     SELECT source, count(*) AS n_docs,
@@ -693,17 +668,6 @@ def curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     explode they avoid. At corpus scales where the explode dominates
     the scan, flip it on — the result is hash-identical (no false
     negatives), driver-proven by ``curation_decontaminate_bloom``.
-
-    Fixed-cost split (re-measured r12, idle box, sf0.1): bench wall
-    1.10 s of which re-executing the already-analyzed/compiled plan
-    takes 0.44 s — i.e. ~60% of the small-SF wall is driver-side
-    analysis+codegen that amortizes to nothing at corpus scale, and
-    the 0.44 s execution is ~1.8× the DuckDB oracle. The r11 bench's
-    2.16 s (8.1× own-oracle) was host-state: a same-box bisect ran
-    the r10 TREE at 2.71 s min vs this tree's 1.99 s on identical
-    hardware — the r11 code is strictly faster; the ratio moved
-    because contention inflates Spark's task-scheduling walls far
-    more than DuckDB's embedded execution.
 
     Stage split (r14 post-optimization runs of the since-deleted
     tools/profile_stages.py,
@@ -1013,12 +977,12 @@ def curation_drift_report(spark: SparkSession, sf: str) -> DataFrame:
 
 @q(
     "curation_weighted_eval_sample",
-    """
+    f"""
     WITH k AS (
       SELECT doc_id, source, n_chars,
              CAST(floor(ln(n_chars::DOUBLE) * 1000000.0 + 0.5) AS BIGINT)
              + CAST(floor(-ln(-ln(
-                 ((('0x' || substr(md5('wev0' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+                 (({md5_int_sql("'wev0' || CAST(doc_id AS VARCHAR)", 8)}
                    + 0.5) / 4294967296.0)
                )) * 1000000.0 + 0.5) AS BIGINT) AS key
       FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0
@@ -1208,16 +1172,13 @@ def curation_mixture_divergence(spark: SparkSession, sf: str) -> DataFrame:
     WITH d AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     st AS (SELECT doc_id, len(toks)::BIGINT AS n_tokens,
            len([j for j in range(1, len(toks) + 1)
-                if ('0x' || substr(md5('scs:' || CAST(doc_id AS VARCHAR) || ':'
-                       || CAST(j AS VARCHAR)), 1, 8))::BIGINT
+                if {md5_int_sql("'scs:' || CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", 8)}
                    / 4294967296.0 < 0.05])::BIGINT AS n_starts,
            len([p for p in range(1, len(toks) + 1)
                 if len([j for j in range(greatest(1, p - 4), p + 1)
-                        if ('0x' || substr(md5('scs:' || CAST(doc_id AS VARCHAR)
-                               || ':' || CAST(j AS VARCHAR)), 1, 8))::BIGINT
+                        if {md5_int_sql("'scs:' || CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", 8)}
                               / 4294967296.0 < 0.05
-                       AND ('0x' || substr(md5('scl:' || CAST(doc_id AS VARCHAR)
-                               || ':' || CAST(j AS VARCHAR)), 1, 8))::BIGINT % 5
+                       AND {md5_int_sql("'scl:' || CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", 8)} % 5
                               + 1 >= p - j + 1]) > 0])::BIGINT AS n_masked
            FROM d)
     SELECT doc_id, n_tokens, n_starts, n_masked,
@@ -1248,7 +1209,7 @@ def _contamination_n_oracle(n: int) -> str:
     return f"""
     WITH d AS (SELECT doc_id, {_TOKS} AS ws FROM documents),
     hh AS (SELECT doc_id,
-                  list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+                  {_TOKEN_HASHES} AS th
            FROM d),
     g AS (SELECT doc_id, {_gram_sql(n)} AS grams FROM hh),
     bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 20 = 7),
@@ -1312,7 +1273,7 @@ def curation_contamination_sensitivity(spark: SparkSession, sf: str) -> DataFram
     f"""
     WITH d AS (SELECT doc_id, source, {_TOKS} AS ws FROM documents),
     hh AS (SELECT doc_id, source,
-                  list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+                  {_TOKEN_HASHES} AS th
            FROM d),
     g AS (SELECT doc_id, source, {_gram_sql(13)} AS grams FROM hh),
     bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 20 = 7),

@@ -12,35 +12,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from denormalized_spark.operators import dedup, similarity, text
-from denormalized_spark.queries._util import _TOKS, q, t
+from denormalized_spark.operators._hashing import md5_int_sql
+from denormalized_spark.queries._util import (
+    _STOP_SQL,
+    _TOKEN_HASHES,
+    _TOKS,
+    _gram_sql,
+    _positional_gram_sql,
+    q,
+    t,
+)
 
 
 # ---- shared oracle SQL fragments -----------------------------------------
-
-
-def _hex15(expr: str) -> str:
-    """Portable md5→60-bit-int hash (matches operators.dedup._hash64)."""
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
-
-def _shingle_hash_sql() -> str:
-    """Numeric 3-gram shingle hashes matching
-    operators.dedup.shingle_hashes: 32-bit md5 token hashes mixed with
-    the same positional constants, identical per-term-mod structure."""
-    from denormalized_spark.operators.dedup import SHINGLE_MOD, shingle_params
-
-    c0, c1, c2 = (shingle_params(j) for j in range(3))
-    m = SHINGLE_MOD
-    gram = (
-        f"(((th[i] * {c0}) % {m}) + ((th[i+1] * {c1}) % {m})"
-        f" + ((th[i+2] * {c2}) % {m})) % {m}"
-    )
-    return f"""
-    CASE WHEN len(th) >= 3
-         THEN list_distinct([{gram} for i in range(1, len(th) - 1)])
-         ELSE [list_reduce(list_prepend(0::BIGINT, th),
-                           (acc, x) -> (acc * 31 + x) % {m})] END
-    """
 
 
 def _minhash_list(num_hashes: int) -> str:
@@ -63,9 +47,9 @@ def _minhash_list(num_hashes: int) -> str:
 _DOC_SHINGLES_CTE = f"""
 WITH d AS (SELECT doc_id, {_TOKS} AS ws FROM documents),
 hh AS (SELECT doc_id,
-              list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+              {_TOKEN_HASHES} AS th
        FROM d),
-sh AS (SELECT doc_id, {_shingle_hash_sql()} AS shingles FROM hh)
+sh AS (SELECT doc_id, {_gram_sql(3)} AS shingles FROM hh)
 """
 
 
@@ -421,7 +405,7 @@ def dedup_connected_components(spark: SparkSession, sf: str) -> DataFrame:
     "dedup_simhash",
     f"""
     WITH d AS (SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents),
-    tok AS (SELECT doc_id, {_hex15('s')} AS h
+    tok AS (SELECT doc_id, {md5_int_sql('s', 15)} AS h
             FROM (SELECT doc_id, unnest(toks) AS s FROM d) t),
     votes AS (
       SELECT doc_id, i.i AS bit,
@@ -445,7 +429,6 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
 # text analysis
 # ---------------------------------------------------------------------------
 
-_STOP_SQL = "[" + ", ".join(f"'{s}'" for s in text.STOPWORDS) + "]"
 
 @q(
     "text_stats",
@@ -597,12 +580,6 @@ def text_unigram_quality(spark: SparkSession, sf: str) -> DataFrame:
     vocabulary (bounded output) → broadcast the LM back → per-doc
     re-aggregation; zero Python, two shuffles of the token stream.
 
-    Perf note (r12): the r11 bench's 1.04 s / 5.7× own-oracle was
-    host-state, not code — a same-box bisect ran the r10 TREE at
-    1.83 s vs this tree's 0.97 s on identical hardware, and the r12
-    idle-box bench is back to 0.55 s (~3× own-oracle, the r10
-    level). Plan unchanged (test_plans-verified).
-
     Stage split (r14 post-optimization runs of the since-deleted
     tools/profile_stages.py,
     idle box, sf0.1, min-of-3): cold 1.61-0.76 s across host states,
@@ -673,8 +650,7 @@ def text_ccnet_buckets(spark: SparkSession, sf: str) -> DataFrame:
     s AS (
       SELECT doc_id,
              list_sum(list_transform(toks, t ->
-               ('0x' || substr(md5('qc0' || CAST(
-                  ('0x' || substr(md5(t), 1, 8))::BIGINT % 65536 AS VARCHAR)), 1, 8))::BIGINT
+               {md5_int_sql(f"'qc0' || CAST( {md5_int_sql('t', 8)} % 65536 AS VARCHAR)", 8)}
                / 4294967296.0 * 2 - 1))
              / greatest(len(toks), 1) AS mean_w
       FROM d
@@ -1135,22 +1111,7 @@ def dedup_embedding_neardup(spark: SparkSession, sf: str) -> DataFrame:
     ORACLE-shaped; the production-planed twin of this exact funnel
     (10 planes ∝ log2(corpus), 8 tables) is measured at the 10×
     stress tier by tools/scale_check.stress_headline_lsh (r10:
-    9.10→15.65 s wall for 10× vectors, sublinear).
-
-    r10 bench note: BENCH_r10 showed 2.81→3.47 s min-wall vs r9 and
-    the verdict asked for a bisect. Bisected r11: the r9→r10 diff on
-    this path (commit 872b6d3, the _bucketing.py unification) emits
-    the IDENTICAL plan (same groupBy/collect/size-filter chain), and
-    an isolated idle-box rerun (local[32], bench's noop-write
-    methodology, n=5) measures 2.18 s steady-state min — faster than
-    both rounds. The +24% was in-session contention from the 21 other
-    headline queries sharing the JVM (GC/JIT state), not a code
-    regression. Late-r11 caveat: the HOST itself became ~1.4× slower
-    and highly variable (the DuckDB bench anchor moved 15.9→23.1 s;
-    an isolated n=8 rerun saw walls 5.3-88 s with one external-load
-    spike), so absolute walls on this box are only comparable within
-    one bench run — the spark_vs_oracle ratio (0.75-0.84× this round)
-    is the number that survives the noise."""
+    9.10→15.65 s wall for 10× vectors, sublinear)."""
     from denormalized_spark.operators import similarity
 
     e = t(spark, sf, "embeddings")
@@ -1486,7 +1447,7 @@ _CM_CTES = f"""tok AS (SELECT unnest({_TOKS}) AS tok FROM documents),
     rs AS (SELECT unnest([{", ".join(str(r) for r in range(_CM_D))}]) AS r),
     cells AS (
       SELECT r AS cm_row,
-             ('0x' || substr(md5('cm' || CAST(r AS VARCHAR) || ':' || tok), 1, 8))::BIGINT
+             {md5_int_sql("'cm' || CAST(r AS VARCHAR) || ':' || tok", 8)}
                % {_CM_W} AS cm_col,
              CAST(sum(c) AS BIGINT) AS cnt
       FROM kc CROSS JOIN rs GROUP BY 1, 2
@@ -1524,7 +1485,7 @@ def sketch_cm_cells(spark: SparkSession, sf: str) -> DataFrame:
       FROM kc k CROSS JOIN rs r
       JOIN cells cl
         ON cl.cm_row = r.r
-       AND cl.cm_col = ('0x' || substr(md5('cm' || CAST(r.r AS VARCHAR) || ':' || k.tok), 1, 8))::BIGINT % {_CM_W}
+       AND cl.cm_col = {md5_int_sql("'cm' || CAST(r.r AS VARCHAR) || ':' || k.tok", 8)} % {_CM_W}
     ),
     est AS (SELECT tok, CAST(min(cnt) AS BIGINT) AS cm_count,
                    CAST(min(c) AS BIGINT) AS exact_count
@@ -1557,7 +1518,7 @@ def sketch_cm_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
 #: HLL register derivation shared by both oracles: 60-bit md5 hash,
 #: low 6 bits pick the register, rank of the lowest set bit of the
 #: rest is rho (w=0 saturates at 55 = 61-p)
-_HLL_CTES = """h AS (SELECT ('0x' || substr(md5(text), 1, 15))::BIGINT AS h FROM documents),
+_HLL_CTES = f"""h AS (SELECT {md5_int_sql("text", 15)} AS h FROM documents),
     r AS (SELECT h & 63 AS reg,
                  CASE WHEN (h >> 6) = 0 THEN 55
                       ELSE bit_count(((h >> 6) & (-(h >> 6))) - 1) + 1 END AS rho
@@ -1623,7 +1584,7 @@ def sketch_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
 @q(
     "sketch_hll_group_distinct",
     f"""
-    WITH h AS (SELECT lang, ('0x' || substr(md5(text), 1, 15))::BIGINT AS h
+    WITH h AS (SELECT lang, {md5_int_sql("text", 15)} AS h
                FROM documents),
     r AS (SELECT lang, h & 63 AS reg,
                  CASE WHEN (h >> 6) = 0 THEN 55
@@ -1668,9 +1629,9 @@ _KMV_K = 64
                  (SELECT unnest({_TOKS}) AS tok FROM documents WHERE lang = 'en')),
     tb AS (SELECT DISTINCT tok FROM
                  (SELECT unnest({_TOKS}) AS tok FROM documents WHERE lang != 'en')),
-    ska AS (SELECT kmv_h FROM (SELECT DISTINCT ('0x' || substr(md5(tok), 1, 15))::BIGINT AS kmv_h FROM ta)
+    ska AS (SELECT kmv_h FROM (SELECT DISTINCT {md5_int_sql("tok", 15)} AS kmv_h FROM ta)
             ORDER BY kmv_h LIMIT {_KMV_K}),
-    skb AS (SELECT kmv_h FROM (SELECT DISTINCT ('0x' || substr(md5(tok), 1, 15))::BIGINT AS kmv_h FROM tb)
+    skb AS (SELECT kmv_h FROM (SELECT DISTINCT {md5_int_sql("tok", 15)} AS kmv_h FROM tb)
             ORDER BY kmv_h LIMIT {_KMV_K}),
     ell AS (SELECT kmv_h FROM (SELECT DISTINCT kmv_h FROM
                  (SELECT kmv_h FROM ska UNION ALL SELECT kmv_h FROM skb))
@@ -2445,7 +2406,7 @@ def _linear_trainer_oracle(dim: int = 8, iters: int = 3, lr_bits: int = 25) -> s
     s = f"{2 ** lr_bits}.0"
     cnt = lambda j: (
         f"CAST(len(list_filter({_TOKS}, "
-        f"t -> ('0x' || substr(md5(t), 1, 8))::BIGINT % {dim} = {j})) AS BIGINT)"
+        f"t -> {md5_int_sql('t', 8)} % {dim} = {j})) AS BIGINT)"
     )
     feats = ", ".join(f"{cnt(j)} AS x{j}" for j in range(dim))
     ctes = [
@@ -2644,9 +2605,8 @@ def text_js_divergence_matrix(spark: SparkSession, sf: str) -> DataFrame:
 
 _AUC_MARGIN = (
     "coalesce(list_sum(list_transform(toks, t -> "
-    "('0x' || substr(md5('qc0' || CAST(('0x' || substr(md5(t), 1, 8))::BIGINT"
-    " % 65536 AS VARCHAR)), 1, 8))::BIGINT / 4294967296.0 * 2 - 1)), 0.0)"
-    " / greatest(len(toks), 1)"
+    + md5_int_sql(f"'qc0' || CAST({md5_int_sql('t', 8)} % 65536 AS VARCHAR)", 8)
+    + " / 4294967296.0 * 2 - 1)), 0.0) / greatest(len(toks), 1)"
 )
 
 
@@ -3098,10 +3058,7 @@ def text_bigram_quality(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_SPLIT_FRAC = (
-    "(('0x' || substr(md5('split0' || CAST({key} AS VARCHAR)), 1, 8))::BIGINT"
-    " / 4294967296.0)"
-)
+_SPLIT_FRAC = "(" + md5_int_sql("'split0' || CAST({key} AS VARCHAR)", 8) + " / 4294967296.0)"
 
 
 @q(
@@ -3547,8 +3504,6 @@ def _fuzzy_names_oracle(
     """Gate-replay oracle for the fuzzy name join: word- or char-
     n-gram MinHash banding over the sampled part names, then the
     exact Levenshtein verify on the candidates."""
-    from denormalized_spark.queries.curation import _gram_sql
-
     tok = (
         "list_filter(regexp_split_to_array(p_name, '\\s+'), x -> x != '')"
         if unit == "word"
@@ -3561,7 +3516,7 @@ def _fuzzy_names_oracle(
       FROM part WHERE p_partkey % 5 = 0
     ),
     hh AS (SELECT id, name,
-                  list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+                  {_TOKEN_HASHES} AS th
            FROM d),
     sh AS (SELECT id, {_gram_sql(gram_n)} AS shingles FROM hh),
     {_lsh_bands_sql("id")},
@@ -4300,25 +4255,12 @@ def sim_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
 # cross-document repeated-passage detection (exact-substring dedup)
 # ---------------------------------------------------------------------------
 
-def _positional_gram_sql(n: int) -> str:
-    """DuckDB 5-term positional gram hash matching
-    operators.dedup.positional_gram_hashes: same per-token md5, same
-    positional constants, same per-term-mod sum."""
-    from denormalized_spark.operators.dedup import SHINGLE_MOD, shingle_params
-
-    m = SHINGLE_MOD
-    terms = " + ".join(
-        f"((th[i+{j}] * {shingle_params(j)}) % {m})" for j in range(n)
-    )
-    return f"(({terms}) % {m})"
-
-
 def _repeated_span_cte(n: int, min_docs: int) -> str:
     gram = _positional_gram_sql(n)
     return f"""
 WITH d AS (SELECT doc_id, {_TOKS} AS ws FROM documents),
 hh AS (SELECT doc_id,
-              list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+              {_TOKEN_HASHES} AS th
        FROM d),
 pg AS (SELECT doc_id,
               [{{'pos': i - 1, 'gram': {gram}}}
@@ -4437,7 +4379,7 @@ _BLOOM_M, _BLOOM_K = 16384, 4
 _BLOOM_CTES = f"""hs AS (SELECT unnest([{", ".join(str(i) for i in range(_BLOOM_K))}]) AS i),
     bits AS (
       SELECT DISTINCT
-        ('0x' || substr(md5('bl' || i::VARCHAR || ':' || user_id::VARCHAR), 1, 8))::BIGINT
+        {md5_int_sql("'bl' || i::VARCHAR || ':' || user_id::VARCHAR", 8)}
           % {_BLOOM_M} AS bit
       FROM (SELECT DISTINCT user_id FROM events) CROSS JOIN hs
     )"""
@@ -4471,7 +4413,7 @@ def sketch_bloom_bits(spark: SparkSession, sf: str) -> DataFrame:
     probes AS (SELECT pid FROM range(3000) t(pid)),
     pb AS (
       SELECT pid,
-             ('0x' || substr(md5('bl' || i::VARCHAR || ':' || pid::VARCHAR), 1, 8))::BIGINT
+             {md5_int_sql("'bl' || i::VARCHAR || ':' || pid::VARCHAR", 8)}
                % {_BLOOM_M} AS bit
       FROM probes CROSS JOIN hs
     ),
@@ -4531,7 +4473,7 @@ def _winnow_cte(k: int = 4, w: int = 4) -> str:
     )
     return f"""d AS (SELECT doc_id, {_TOKS} AS ws FROM documents),
     hh AS (SELECT doc_id,
-                  list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+                  {_TOKEN_HASHES} AS th
            FROM d),
     pg AS (SELECT doc_id,
                   [{gram} for i in range(1, len(th) - {k} + 2)] AS gs
@@ -4699,9 +4641,9 @@ _CS_CTES = f"""tokc AS (SELECT unnest({_TOKS}) AS tok FROM documents),
     rcs AS (SELECT unnest([{", ".join(str(r) for r in range(_CS_D))}]) AS r),
     cs_cells AS (
       SELECT r AS cs_row,
-             ('0x' || substr(md5('cs' || r::VARCHAR || ':' || tok), 1, 8))::BIGINT
+             {md5_int_sql("'cs' || r::VARCHAR || ':' || tok", 8)}
                % {_CS_W} AS cs_col,
-             CAST(sum(CASE WHEN ('0x' || substr(md5('css' || r::VARCHAR || ':' || tok), 1, 1))::BIGINT % 2 = 1
+             CAST(sum(CASE WHEN {md5_int_sql("'css' || r::VARCHAR || ':' || tok", 1)} % 2 = 1
                            THEN c ELSE -c END) AS BIGINT) AS cnt
       FROM kcs CROSS JOIN rcs GROUP BY 1, 2
     )"""
@@ -4889,7 +4831,7 @@ def _hll_user_regs_sql(cte: str, where: str) -> str:
     """Register CTE for a user cohort (md5 of user_id::VARCHAR — the
     same cast chain Spark's hll_registers applies to a BIGINT key)."""
     return f"""{cte}h AS (
-      SELECT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
+      SELECT {md5_int_sql("user_id::VARCHAR", 15)} AS h
       FROM (SELECT DISTINCT user_id FROM events WHERE {where})
     ),
     {cte} AS (
@@ -4977,7 +4919,7 @@ def sketch_hll_intersect(spark: SparkSession, sf: str) -> DataFrame:
     tfw AS (SELECT doc_id, tok, count(*) AS c FROM tokw GROUP BY 1, 2),
     rep AS (SELECT doc_id, tok, unnest(range(1, least(c, 16) + 1)) AS i FROM tfw),
     hh AS (SELECT doc_id,
-                  ('0x' || substr(md5(tok || ':' || i::VARCHAR), 1, 8))::BIGINT
+                  {md5_int_sql("tok || ':' || i::VARCHAR", 8)}
                     % 2147483647 AS hh
            FROM rep),
     sl AS (
@@ -5079,9 +5021,9 @@ def sketch_mg_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
                  (SELECT unnest({_TOKS}) AS tok FROM documents WHERE lang = 'en')),
     tb AS (SELECT DISTINCT tok FROM
                  (SELECT unnest({_TOKS}) AS tok FROM documents WHERE lang != 'en')),
-    ska AS (SELECT kmv_h FROM (SELECT DISTINCT ('0x' || substr(md5(tok), 1, 15))::BIGINT AS kmv_h FROM ta)
+    ska AS (SELECT kmv_h FROM (SELECT DISTINCT {md5_int_sql("tok", 15)} AS kmv_h FROM ta)
             ORDER BY kmv_h LIMIT {_KMV_K}),
-    skb AS (SELECT kmv_h FROM (SELECT DISTINCT ('0x' || substr(md5(tok), 1, 15))::BIGINT AS kmv_h FROM tb)
+    skb AS (SELECT kmv_h FROM (SELECT DISTINCT {md5_int_sql("tok", 15)} AS kmv_h FROM tb)
             ORDER BY kmv_h LIMIT {_KMV_K}),
     ell AS (SELECT kmv_h FROM (SELECT DISTINCT kmv_h FROM
                  (SELECT kmv_h FROM ska UNION ALL SELECT kmv_h FROM skb))
@@ -5499,12 +5441,12 @@ def sim_ndcg_ivf(spark: SparkSession, sf: str) -> DataFrame:
     kc_b AS (SELECT o_custkey::VARCHAR AS _k, count(*)::BIGINT AS _c
              FROM orders GROUP BY 1),
     ca AS (
-      SELECT cm_row, ('0x' || substr(md5('cm' || cm_row::VARCHAR || ':' || _k), 1, 8))::BIGINT % 512 AS cm_col,
+      SELECT cm_row, {md5_int_sql("'cm' || cm_row::VARCHAR || ':' || _k", 8)} % 512 AS cm_col,
              sum(_c)::BIGINT AS cnt
       FROM kc_a CROSS JOIN range(4) r(cm_row) GROUP BY 1, 2
     ),
     cb AS (
-      SELECT cm_row, ('0x' || substr(md5('cm' || cm_row::VARCHAR || ':' || _k), 1, 8))::BIGINT % 512 AS cm_col,
+      SELECT cm_row, {md5_int_sql("'cm' || cm_row::VARCHAR || ':' || _k", 8)} % 512 AS cm_col,
              sum(_c)::BIGINT AS cnt
       FROM kc_b CROSS JOIN range(4) r(cm_row) GROUP BY 1, 2
     ),
@@ -6701,7 +6643,7 @@ def _pblock_cte(k: int = _PB_K) -> str:
     return f"""
     WITH d AS (SELECT doc_id, {_TOKS} AS ws FROM documents),
     hh AS (SELECT doc_id,
-                  list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+                  {_TOKEN_HASHES} AS th
            FROM d),
     blk AS (SELECT doc_id, u.b AS block_idx,
                    list_reduce(
@@ -7013,7 +6955,7 @@ _CDC_MOD = 16
     f"""
     WITH d AS (SELECT doc_id, {_TOKS} AS ws FROM documents),
     hh AS (SELECT doc_id,
-                  list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+                  {_TOKEN_HASHES} AS th
            FROM d),
     ex AS (SELECT doc_id, u.i AS pos, th[u.i] AS h
            FROM hh, (SELECT unnest(range(1, len(th) + 1)) AS i) u),
@@ -7454,7 +7396,7 @@ def _fastcdc_oracle(mod: int, min_t: int, max_t: int | None = None) -> str:
     return f"""
     WITH RECURSIVE d AS (SELECT doc_id, {_TOKS} AS ws FROM documents),
     hh AS (SELECT doc_id,
-                  list_transform(ws, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+                  {_TOKEN_HASHES} AS th
            FROM d WHERE len(ws) >= 1),
     cr AS (
       SELECT doc_id, 1 AS pos, [1::BIGINT] AS cuts, th FROM hh

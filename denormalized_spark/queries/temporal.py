@@ -243,13 +243,7 @@ def join_range_order_bursts(spark: SparkSession, sf: str) -> DataFrame:
     order — a keyless interval join. Binned to 7-day buckets the
     plan is an equi-join on the bin (SortMergeJoin; fan-out <= 2 bins
     per interval) + residual containment filter — never a cartesian
-    product. tests/test_plans.py asserts no BNLJ in the plan.
-
-    Perf note (r12): the r11 bench's 0.64 s / 4.4× own-oracle was
-    host-state, not the r11 temporal.py change (which touched only
-    the STREAMING range join's bin clamp — this batch path is
-    byte-identical): a same-box bisect ran the r10 TREE at 0.57 s vs
-    this tree's 0.52 s, and the r12 idle-box bench is 0.40 s."""
+    product. tests/test_plans.py asserts no BNLJ in the plan."""
     from denormalized_spark.operators.temporal import range_join
 
     o = t(spark, sf, "orders")

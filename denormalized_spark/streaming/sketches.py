@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from denormalized_spark.operators._hashing import md5_int
+
 
 def _fold_centroids(cur: list[list], new_rows: list[list], delta: int) -> list[list]:
     """Driver-side mirror of operators/sketches.tdigest_merge: union
@@ -159,29 +161,18 @@ class SketchMaintainer:
             ).collect():
                 self.bloom_bits.add(r["bit"])
 
-        # bottom-k reservoir partial (optional): the k smallest
-        # md5-ticket keys of a union are the merge of each side's
-        # bottom-k, so the accumulated sample IS the batch sample of
-        # everything seen — deterministic, EXACTLY stream==batch
-        # (the distributed-reservoir trick behind every "sample the
-        # firehose" monitor; same keys as curation.sample_fraction's
-        # md5 contract)
+        # bottom-k reservoir partial (optional): each distinct key's
+        # ticket is the 60-bit portable hash (15 hex chars) of
+        # ``sample_seed + ":" + key``; the k smallest tickets of a
+        # union are the merge of each side's bottom-k, so the
+        # accumulated sample IS the batch sample of everything seen —
+        # deterministic, EXACTLY stream==batch (the distributed-
+        # reservoir trick behind every "sample the firehose" monitor)
         if self.sample_k is not None:
             part = (
                 batch_df.select(F.col(self.key_col).cast("string").alias("_k"))
                 .distinct()
-                .select(
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat(F.lit(self.sample_seed + ":"), F.col("_k"))),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long").alias("_t"),
-                    "_k",
-                )
+                .select(md5_int("_k", 15, salt=self.sample_seed + ":").alias("_t"), "_k")
                 .orderBy("_t")
                 .limit(self.sample_k)
                 .collect()
