@@ -24,7 +24,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from denormalized_spark.eventtime import with_event_time
+from denormalized_spark.eventtime import declare_watermark, with_event_time
 from denormalized_spark.operators import windows as _w
 
 _JOIN_TYPES = {
@@ -50,7 +50,10 @@ class DataStream:
     ``event_time`` names the designated TimestampType event-time
     column (the reference's canonical_timestamp contract, SURVEY §1.2
     — but visible, not hidden). ``watermark`` is the lateness
-    allowance applied before stateful streaming ops.
+    allowance applied before stateful streaming ops: a column that
+    already carries a watermark keeps it, and ``watermark`` sets the
+    delay only for a column that has none
+    (:func:`~denormalized_spark.eventtime.declare_watermark`).
     """
 
     def __init__(
@@ -58,18 +61,10 @@ class DataStream:
         df: DataFrame,
         event_time: str | None = None,
         watermark: str = "0 seconds",
-        watermarked: bool = False,
     ):
         self._df = df
         self.event_time = event_time
         self.watermark = watermark
-        #: True when the event-time column already sits downstream of a
-        #: watermark declaration IN THIS QUERY (e.g. the chainable
-        #: ts_mode="window_time" output of near_dedup): stateful ops
-        #: must then NOT re-declare a watermark — a second declaration
-        #: recomputes lateness from the post-aggregation stream and
-        #: holds the chained operator's windows open forever.
-        self.watermarked = watermarked
 
     # -- plumbing ------------------------------------------------------
 
@@ -80,6 +75,46 @@ class DataStream:
 
     def _wrap(self, df: DataFrame) -> "DataStream":
         return DataStream(df, event_time=self.event_time, watermark=self.watermark)
+
+    def _watermarked(self, caller: str) -> DataFrame:
+        """The input of a built-in stateful op: a stream with its
+        watermark declared, a batch as is."""
+        if self.event_time is None:
+            raise ValueError(f"{caller}() requires an event-time column; call with_timestamp()")
+        if not self._df.isStreaming:
+            return self._df
+        return declare_watermark(self._df, self.event_time, self.watermark)
+
+    def _event_op(
+        self,
+        caller: str,
+        stream_op: Callable[..., DataFrame],
+        batch_op: Callable[..., DataFrame],
+        /,
+        *args: Any,
+        keep_event_time: bool = False,
+        **kwargs: Any,
+    ) -> "DataStream":
+        """The stream-or-batch dispatch shared by the event-time
+        operators: ``stream_op(df, *args, event_time, watermark=...,
+        **kwargs)`` on a stream, its deterministic twin
+        ``batch_op(df, *args, event_time, **kwargs)`` on a batch. The
+        result designates no event-time column unless
+        ``keep_event_time``."""
+        if self.event_time is None:
+            raise ValueError(f"{caller}() requires an event-time column; call with_timestamp()")
+        if self._df.isStreaming:
+            out = stream_op(
+                self._df, *args, self.event_time, watermark=self.watermark,
+                **kwargs,
+            )
+        else:
+            out = batch_op(self._df, *args, self.event_time, **kwargs)
+        return DataStream(
+            out,
+            event_time=self.event_time if keep_event_time else None,
+            watermark=self.watermark,
+        )
 
     def schema(self):
         """Visible schema (reference strips its metadata column,
@@ -97,10 +132,12 @@ class DataStream:
         return DataStream(out, event_time=target, watermark=self.watermark)
 
     def with_watermark(self, delay: str) -> "DataStream":
-        """Set the lateness allowance. The reference's watermark has no
-        configurable delay (max-of-batch-min, streaming_window.rs:732-744);
-        Spark's watermark = max event time − delay. delay='0 seconds'
-        gives the closest behavior on ordered data (SURVEY §7.4)."""
+        """Set the lateness allowance. A column that already carries a
+        watermark keeps it, and ``delay`` applies only to a column that
+        has none. The reference's watermark has no configurable delay
+        (max-of-batch-min, streaming_window.rs:732-744); Spark's
+        watermark = max event time − delay. delay='0 seconds' gives the
+        closest behavior on ordered data (SURVEY §7.4)."""
         return DataStream(self._df, event_time=self.event_time, watermark=delay)
 
     # -- row ops (reference datastream.rs:74-123) -----------------------
@@ -164,20 +201,15 @@ class DataStream:
         is evicted once the watermark passes — the only way exact
         streaming dedup survives an unbounded stream. Requires a
         watermark (set via with_watermark on the event-time column)."""
-        if self._df.isStreaming:
-            if self.event_time is None:
-                raise ValueError(
-                    "drop_duplicates_within_watermark requires an event-time column"
-                )
-            df = self._df.withWatermark(self.event_time, self.watermark)
-            out = (
-                df.dropDuplicatesWithinWatermark(list(subset))
-                if subset
-                else df.dropDuplicatesWithinWatermark()
-            )
-            return self._wrap(out)
-        # batch degenerate path: plain dedup (same rows for bounded input)
-        return self.drop_duplicates(subset)
+        if not self._df.isStreaming:
+            # batch degenerate path: plain dedup (same rows for bounded input)
+            return self.drop_duplicates(subset)
+        df = self._watermarked("drop_duplicates_within_watermark")
+        return self._wrap(
+            df.dropDuplicatesWithinWatermark(list(subset))
+            if subset
+            else df.dropDuplicatesWithinWatermark()
+        )
 
     def union(self, other: "DataStream | DataFrame", distinct: bool = False) -> "DataStream":
         o = other.df if isinstance(other, DataStream) else other
@@ -453,13 +485,9 @@ class DataStream:
         Spark's built-in windowed groupBy. Requires a designated
         event-time column (``with_timestamp`` or a TimestampType
         column named at construction)."""
-        if self.event_time is None:
-            raise ValueError("window() requires an event-time column; call with_timestamp()")
-        df = self._df
-        if df.isStreaming and not self.watermarked:
-            df = df.withWatermark(self.event_time, self.watermark)
         out = _w.window_aggregate(
-            df, self.event_time, group_exprs, aggr_exprs, window_length_ms, slide_ms
+            self._watermarked("window"), self.event_time, group_exprs,
+            aggr_exprs, window_length_ms, slide_ms,
         )
         return DataStream(out, event_time=None, watermark=self.watermark)
 
@@ -473,13 +501,9 @@ class DataStream:
         reference (planner/streaming_window.rs:130); native here.
         ``gap_ms`` accepts a per-event millisecond Column for DYNAMIC
         gaps (operators/windows.session_window_aggregate)."""
-        if self.event_time is None:
-            raise ValueError("session_window() requires an event-time column")
-        df = self._df
-        if df.isStreaming and not self.watermarked:
-            df = df.withWatermark(self.event_time, self.watermark)
         out = _w.session_window_aggregate(
-            df, self.event_time, group_exprs, aggr_exprs, gap_ms
+            self._watermarked("session_window"), self.event_time,
+            group_exprs, aggr_exprs, gap_ms,
         )
         return DataStream(out, event_time=None, watermark=self.watermark)
 
@@ -491,14 +515,15 @@ class DataStream:
         """Per-key sessionization with custom state — exact window-fn
         plan on batch, applyInPandasWithState (GroupState + event-time
         timeout) on streams. See streaming/stateful.py."""
-        from denormalized_spark.streaming.stateful import sessionize
-
-        if self.event_time is None:
-            raise ValueError("sessionize() requires an event-time column")
-        out = sessionize(
-            self._df, list(group_exprs), self.event_time, gap_ms, self.watermark
+        from denormalized_spark.streaming.stateful import (
+            sessionize_batch,
+            sessionize_stream,
         )
-        return DataStream(out, event_time=None, watermark=self.watermark)
+
+        return self._event_op(
+            "sessionize", sessionize_stream, sessionize_batch,
+            list(group_exprs), gap_ms=gap_ms,
+        )
 
     def scd2(
         self,
@@ -513,48 +538,16 @@ class DataStream:
         intervals as changes arrive; the current interval is held in
         state — append holdback). The streaming form is
         single-attribute; pack several columns with to_json(struct)."""
-        if self._df.isStreaming:
-            from denormalized_spark.streaming.stateful import scd2_stream
-
-            if self.event_time is None:
-                raise ValueError("scd2() on a stream requires an event-time column")
-            out = scd2_stream(
-                self._df, list(key_cols), self.event_time, attr_col,
-                tiebreak_col, self.watermark,
-            )
-            return DataStream(out, event_time=None, watermark=self.watermark)
         from denormalized_spark.operators.temporal import scd2_intervals
+        from denormalized_spark.streaming.stateful import scd2_stream
 
-        if self.event_time is None:
-            raise ValueError("scd2() requires an event-time column")
-        out = scd2_intervals(
-            self._df, list(key_cols), self.event_time, [attr_col], tiebreak_col
+        def batch(df, keys, event_time, attr_col, tiebreak_col):
+            return scd2_intervals(df, keys, event_time, [attr_col], tiebreak_col)
+
+        return self._event_op(
+            "scd2", scd2_stream, batch, list(key_cols),
+            attr_col=attr_col, tiebreak_col=tiebreak_col,
         )
-        return DataStream(out, event_time=None, watermark=self.watermark)
-
-    def _near_gate(
-        self,
-        caller: str,
-        stream_gate: Callable[..., DataFrame],
-        batch_gate: Callable[..., DataFrame],
-        cols: tuple,
-        emit_window_ms: int,
-        /,
-        **kwargs: Any,
-    ) -> DataFrame:
-        """The stream-or-batch dispatch shared by the near-dup gates:
-        the online gate (watermark-TTL'd bucket state, closed by an
-        ``emit_window_ms`` window) on a stream, its deterministic
-        earliest-(event_time, id) twin on a batch. Bucket ownership is
-        temporal, so both need the event-time column."""
-        if self.event_time is None:
-            raise ValueError(f"{caller}() requires an event-time column")
-        if self._df.isStreaming:
-            return stream_gate(
-                self._df, *cols, self.event_time, watermark=self.watermark,
-                emit_window_ms=emit_window_ms, **kwargs,
-            )
-        return batch_gate(self._df, *cols, self.event_time, **kwargs)
 
     def near_dedup(
         self,
@@ -596,30 +589,27 @@ class DataStream:
             raise ValueError(
                 f"ts_mode must be exact|window_time, got {ts_mode!r}"
             )
-        out = self._near_gate(
-            "near_dedup", partial(near_dedup_stream, ts_mode=ts_mode),
-            near_dedup_batch, (id_col, text_col), emit_window_ms,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-            payload_cols=tuple(payload_cols),
-        )
-        if ts_mode == "window_time" and not self._df.isStreaming:
+
+        def batch(df, id_col, text_col, event_time, **kwargs):
+            out = near_dedup_batch(df, id_col, text_col, event_time, **kwargs)
+            if ts_mode == "exact":
+                return out
             # same value the stream emits: the doc's emit-window
             # end − 1 µs (its band rows all carry its exact ts)
-            out = out.withColumn(
-                self.event_time,
+            return out.withColumn(
+                event_time,
                 F.window_time(
-                    F.window(
-                        F.col(self.event_time),
-                        f"{emit_window_ms} milliseconds",
-                    )
+                    F.window(F.col(event_time), f"{emit_window_ms} milliseconds")
                 ),
             )
-        chain_et = self.event_time if ts_mode == "window_time" else None
-        return DataStream(
-            out,
-            event_time=chain_et,
-            watermark=self.watermark,
-            watermarked=(ts_mode == "window_time" and self._df.isStreaming),
+
+        return self._event_op(
+            "near_dedup",
+            partial(near_dedup_stream, ts_mode=ts_mode, emit_window_ms=emit_window_ms),
+            batch, id_col, text_col,
+            keep_event_time=ts_mode == "window_time",
+            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+            payload_cols=tuple(payload_cols),
         )
 
     def near_dedup_images(
@@ -644,12 +634,12 @@ class DataStream:
             image_near_gate_batch,
         )
 
-        out = self._near_gate(
-            "near_dedup_images", image_near_gate, image_near_gate_batch,
-            (id_col, binary_col), emit_window_ms,
+        return self._event_op(
+            "near_dedup_images",
+            partial(image_near_gate, emit_window_ms=emit_window_ms),
+            image_near_gate_batch, id_col, binary_col,
             method=method, payload_cols=tuple(payload_cols),
         )
-        return DataStream(out, event_time=None, watermark=self.watermark)
 
     def near_dedup_audio(
         self,
@@ -674,12 +664,12 @@ class DataStream:
             audio_near_gate_batch,
         )
 
-        out = self._near_gate(
-            "near_dedup_audio", audio_near_gate, audio_near_gate_batch,
-            (id_col, binary_col), emit_window_ms,
+        return self._event_op(
+            "near_dedup_audio",
+            partial(audio_near_gate, emit_window_ms=emit_window_ms),
+            audio_near_gate_batch, id_col, binary_col,
             n_frames=n_frames, payload_cols=tuple(payload_cols),
         )
-        return DataStream(out, event_time=None, watermark=self.watermark)
 
     def funnel(
         self,
@@ -730,30 +720,21 @@ class DataStream:
         deterministic window-function twin
         (operators/analytics.anomaly_online_batch) — stream == batch
         on every closed window (tests/test_stateful.py)."""
-        if self.event_time is None:
-            raise ValueError("anomaly_scores() requires an event-time column")
-        groups = list(group_cols)
-        if self._df.isStreaming:
-            from denormalized_spark.streaming.stateful import anomaly_stream
+        from denormalized_spark.operators.analytics import anomaly_online_batch
+        from denormalized_spark.streaming.stateful import anomaly_stream
 
-            out = anomaly_stream(
-                self._df, groups, self.event_time, window_ms,
-                self.watermark, z_threshold, min_windows,
-            )
-        else:
-            from denormalized_spark.operators.analytics import (
-                anomaly_online_batch,
-            )
-
+        def batch(df, groups, event_time, **kwargs):
             if len(groups) != 1:
                 raise ValueError(
                     "batch anomaly_scores supports exactly one group column"
                 )
-            out = anomaly_online_batch(
-                self._df, groups[0], self.event_time, window_ms,
-                z_threshold, min_windows,
-            )
-        return DataStream(out, event_time=None, watermark=self.watermark)
+            return anomaly_online_batch(df, groups[0], event_time, **kwargs)
+
+        return self._event_op(
+            "anomaly_scores", anomaly_stream, batch, list(group_cols),
+            window_ms=window_ms, z_threshold=z_threshold,
+            min_windows=min_windows,
+        )
 
     def near_dedup_incremental(
         self,

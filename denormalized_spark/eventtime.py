@@ -8,6 +8,7 @@ Spark needs no hidden column — event time is just a TimestampType
 column named in ``withWatermark`` — so we reproduce only the
 user-visible contract: accept ms-int / sec-int / ISO-8601-string
 columns and produce a proper TimestampType column.
+:func:`declare_watermark` is the package's one watermark declaration.
 """
 
 from __future__ import annotations
@@ -45,3 +46,17 @@ def with_event_time(
     """Add a normalized event-time column (``with_timestamp`` in the
     reference API, kafka_config.rs:129-135)."""
     return df.withColumn(target_column, to_event_time(source_column, unit, fmt))
+
+
+def declare_watermark(df: DataFrame, column: str, delay: str) -> DataFrame:
+    """Declare the watermark on ``column`` unless it already carries
+    one, as the reference keeps one watermark per event-time column
+    (streaming_window.rs:732-744). Spark records a declared watermark
+    as ``spark.watermarkDelayMs`` column metadata, which survives
+    projections, filters, renames and ``window_time``. Declaring again
+    either fails (``Redefining watermark is disallowed``) or, after an
+    upstream stateful operator, recomputes lateness from its output
+    and holds a chained operator's windows open forever."""
+    if "spark.watermarkDelayMs" in df.schema[column].metadata:
+        return df
+    return df.withWatermark(column, delay)

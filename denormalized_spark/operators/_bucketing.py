@@ -41,6 +41,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from denormalized_spark.eventtime import declare_watermark
+
 
 def bucket_pin_partitions(df: DataFrame) -> int:
     """Scale-adaptive partition pin for compute-bound bucket shuffles:
@@ -231,9 +233,10 @@ def band_owners_stream(
     """Streaming first-claimant gate over ``(band, band_key)`` rows —
     two chained stateful operators in append mode:
 
-    1. the watermark is declared on the band rows themselves (an
-       upstream ``mapInPandas`` re-creates attributes and would strip
-       an event-time tag declared before it);
+    1. the watermark is declared on the band rows unless their
+       event-time column already carries one (an upstream
+       ``mapInPandas`` re-creates attributes and strips a watermark
+       declared before it);
     2. ``dropDuplicatesWithinWatermark`` on ``(band, band_key)``: state
        is one row per distinct bucket, TTL'd by the watermark, and the
        first claimant owns the bucket (within one micro-batch the
@@ -250,9 +253,9 @@ def band_owners_stream(
     further windowed aggregation can follow in the same query."""
     if ts_mode not in ("exact", "window_time"):
         raise ValueError(f"ts_mode must be exact|window_time, got {ts_mode!r}")
-    owned = banded.withWatermark(event_time, watermark).dropDuplicatesWithinWatermark(
-        ["band", "band_key"]
-    )
+    owned = declare_watermark(
+        banded, event_time, watermark
+    ).dropDuplicatesWithinWatermark(["band", "band_key"])
     # millisecond interval string: integer-dividing to seconds would make
     # sub-second windows the invalid '0 seconds' and silently truncate others
     win = F.window(event_time, f"{emit_window_ms} milliseconds")

@@ -8,7 +8,8 @@ that replays one is built on this one hash. This module is its ONE
 definition, in the three forms the package needs, side by side:
 
 - :func:`md5_int` / :func:`md5_unit` — Spark Columns;
-- :func:`md5_int_sql` — the DuckDB text the oracles embed;
+- :func:`md5_int_sql` / :func:`md5_unit_sql` — the DuckDB text the
+  oracles embed;
 - :func:`md5_int_py` — driver-side literals.
 
 The contract:
@@ -65,6 +66,12 @@ def md5_int_sql(expr: str, n_hex: int) -> str:
     ``expr`` (salt and casts already spelled out in ``expr``)."""
     _check(n_hex)
     return f"('0x' || substr(md5({expr}), 1, {n_hex}))::BIGINT"
+
+
+def md5_unit_sql(expr: str, n_hex: int) -> str:
+    """DuckDB text of :func:`md5_unit`: :func:`md5_int_sql` scaled to a
+    double in [0, 1), parenthesized."""
+    return f"({md5_int_sql(expr, n_hex)} / {float(1 << (4 * n_hex))!r})"
 
 
 def md5_int_py(s: str, n_hex: int) -> int:

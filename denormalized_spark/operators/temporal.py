@@ -33,6 +33,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from denormalized_spark.eventtime import declare_watermark
+
 
 def _seconds(c: Column, dtype) -> Column:
     """Numeric seconds for comparison/binning. TIMESTAMP_NTZ has no
@@ -442,7 +444,7 @@ def range_join_stream(
     re_ = _seconds(F.col(right_end), right.schema[right_end].dataType)
     lp = _seconds(F.col(left_point), left.schema[left_point].dataType)
 
-    lb = left.withWatermark(left_point, watermark).withColumn(
+    lb = declare_watermark(left, left_point, watermark).withColumn(
         "_bin", F.floor(lp / w)
     )
     # ≤2 bins per interval under the contract (cap the sequence so an
@@ -451,7 +453,7 @@ def range_join_stream(
     # would otherwise make sequence() DESCEND (Spark emits a reversed
     # range, not an empty one) and fabricate bins; clamped, such rows
     # get exactly one bin and the end-bound join predicate drops them.
-    rb = right.withWatermark(right_start, watermark).withColumn(
+    rb = declare_watermark(right, right_start, watermark).withColumn(
         "_bin",
         F.explode(
             F.sequence(

@@ -6,7 +6,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from denormalized_spark.operators._hashing import md5_int_sql
+from denormalized_spark.operators._hashing import md5_int_sql, md5_unit_sql
 from denormalized_spark.operators.dedup import SHINGLE_MOD, shingle_params
 from denormalized_spark.operators.text import STOPWORDS
 from denormalized_spark.sources.files import load_table
@@ -24,6 +24,14 @@ _TOKS = r"list_filter(regexp_split_to_array(text, '\s+'), x -> x != '')"
 #: oracle SQL for the 32-bit token hashes of a ``ws`` token list
 #: (:func:`~denormalized_spark.operators.dedup.token_hash32`)
 _TOKEN_HASHES = f"list_transform(ws, t -> {md5_int_sql('t', 8)})"
+
+#: oracle SQL for the hashed pseudo-weight in [-1, 1) of a token ``t``
+#: (:func:`~denormalized_spark.operators.text.hashed_linear_margin`
+#: without learned weights: 65536 buckets, salt 'qc0')
+_QC0_WEIGHT = (
+    md5_unit_sql(f"'qc0' || CAST({md5_int_sql('t', 8)} % 65536 AS VARCHAR)", 8)
+    + " * 2 - 1"
+)
 
 #: :data:`~denormalized_spark.operators.text.STOPWORDS` as a DuckDB list
 _STOP_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"

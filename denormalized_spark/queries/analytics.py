@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from denormalized_spark.operators import analytics, curation
-from denormalized_spark.operators._hashing import md5_int_sql
+from denormalized_spark.operators._hashing import md5_unit_sql
 from denormalized_spark.queries._util import q, t
 
 
@@ -2574,7 +2574,7 @@ def _bootstrap_oracle(n_replicates: int = 32) -> str:
     cum = poisson_cdf_literals()
 
     def w(b: int) -> str:
-        u = "(" + md5_int_sql(f"'boot:{b}:' || CAST(event_id AS VARCHAR)", 8) + " / 4294967296.0)"
+        u = md5_unit_sql(f"'boot:{b}:' || CAST(event_id AS VARCHAR)", 8)
         cases = " ".join(
             f"WHEN {u} < {c!r} THEN {k}" for k, c in enumerate(cum)
         )
@@ -3058,7 +3058,7 @@ def events_cohort_ltv(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH e AS (
       SELECT event_type,
-             CASE WHEN ({md5_int_sql("'ipw:' || CAST(event_id AS VARCHAR)", 8)} / 4294967296.0) < 0.5
+             CASE WHEN {md5_unit_sql("'ipw:' || CAST(event_id AS VARCHAR)", 8)} < 0.5
                   THEN 1 ELSE 0 END AS t,
              CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
       FROM events
@@ -3307,10 +3307,10 @@ def events_markov_stationary(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH e AS (
       SELECT greatest(least(CAST(floor(
-               (1.0 - ({md5_int_sql("'qs:' || CAST(event_id AS VARCHAR)", 8)}
-                       / 4294967296.0)) * 10) AS INT), 9), 0)
+               (1.0 - {md5_unit_sql("'qs:' || CAST(event_id AS VARCHAR)", 8)}) * 10)
+               AS INT), 9), 0)
                AS bucket,
-             CASE WHEN ({md5_int_sql("'qt:' || CAST(event_id AS VARCHAR)", 8)} / 4294967296.0) < 0.5
+             CASE WHEN {md5_unit_sql("'qt:' || CAST(event_id AS VARCHAR)", 8)} < 0.5
                   THEN 1 ELSE 0 END AS t,
              CASE WHEN value >= 100.0 THEN 1 ELSE 0 END AS y
       FROM events

@@ -15,8 +15,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from denormalized_spark.operators import curation, text
-from denormalized_spark.operators._hashing import md5_int_sql
-from denormalized_spark.queries._util import _STOP_SQL, _TOKEN_HASHES, _TOKS, _gram_sql, q, t
+from denormalized_spark.operators._hashing import md5_int_sql, md5_unit_sql
+from denormalized_spark.queries._util import (
+    _QC0_WEIGHT,
+    _STOP_SQL,
+    _TOKEN_HASHES,
+    _TOKS,
+    _gram_sql,
+    q,
+    t,
+)
 
 
 #: documents CTE → per-doc 5-gram hash arrays (benchmark split on doc_id % 20 == 7)
@@ -200,8 +208,7 @@ _SOLVER_W_VALUES = ", ".join(f"('{k}', {v})" for k, v in _SOLVER_W.items())
       SELECT d.source, count(*) AS n_docs_kept,
              CAST(sum(len({_TOKS})) AS BIGINT) AS n_tokens_kept
       FROM documents d JOIN rates USING (source)
-      WHERE {md5_int_sql("'mix0' || CAST(d.doc_id AS VARCHAR)", 8)}
-            / 4294967296.0 < rates.rate
+      WHERE {md5_unit_sql("'mix0' || CAST(d.doc_id AS VARCHAR)", 8)} < rates.rate
       GROUP BY d.source
     )
     SELECT rates.source, available_tokens, round(rate, 6) AS rate, target_tokens,
@@ -246,8 +253,8 @@ def curation_mixture_solver(spark: SparkSession, sf: str) -> DataFrame:
       SELECT doc_id, lang,
              row_number() OVER (
                PARTITION BY lang
-               ORDER BY {md5_int_sql("'ev0' || CAST(doc_id AS VARCHAR)", 8)}
-                        / 4294967296.0 ASC, doc_id ASC
+               ORDER BY {md5_unit_sql("'ev0' || CAST(doc_id AS VARCHAR)", 8)} ASC,
+                        doc_id ASC
              ) AS rk
       FROM documents
     )
@@ -277,8 +284,7 @@ def curation_eval_sample(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     SELECT d.doc_id, d.source FROM documents d
     JOIN (VALUES {_MIX_VALUES}) r(source, rate) USING (source)
-    WHERE {md5_int_sql("'mix1' || CAST(d.doc_id AS VARCHAR)", 8)}
-          / 4294967296.0 < r.rate
+    WHERE {md5_unit_sql("'mix1' || CAST(d.doc_id AS VARCHAR)", 8)} < r.rate
     """,
 )
 def curation_mixture(spark: SparkSession, sf: str) -> DataFrame:
@@ -383,10 +389,10 @@ def curation_dsir_resample(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH a AS (
       SELECT source,
-             CASE WHEN {md5_int_sql("'split0' || CAST(doc_id AS VARCHAR)", 8)}
-                       / 4294967296.0 < 0.8 THEN 'train'
-                  WHEN {md5_int_sql("'split0' || CAST(doc_id AS VARCHAR)", 8)}
-                       / 4294967296.0 < 0.9 THEN 'val'
+             CASE WHEN {md5_unit_sql("'split0' || CAST(doc_id AS VARCHAR)", 8)} < 0.8
+                  THEN 'train'
+                  WHEN {md5_unit_sql("'split0' || CAST(doc_id AS VARCHAR)", 8)} < 0.9
+                  THEN 'val'
                   ELSE 'test' END AS split
       FROM documents
     )
@@ -564,9 +570,7 @@ def curation_contamination_report(spark: SparkSession, sf: str) -> DataFrame:
     quality AS (
       SELECT * FROM tk
       WHERE 1.0 / (1.0 + exp(-(
-        list_sum(list_transform(toks, t ->
-          {md5_int_sql(f"'qc0' || CAST( {md5_int_sql('t', 8)} % 65536 AS VARCHAR)", 8)}
-          / 4294967296.0 * 2 - 1))
+        list_sum(list_transform(toks, t -> {_QC0_WEIGHT}))
         / greatest(len(toks), 1)))) > 0.5
     ),
     fp AS (SELECT *, md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS f
@@ -576,7 +580,7 @@ def curation_contamination_report(spark: SparkSession, sf: str) -> DataFrame:
            ON fp.f = k.f AND fp.doc_id = k.keep_id),
     clean AS (SELECT * FROM dd WHERE doc_id NOT IN (SELECT doc_id FROM cont)),
     sp AS (
-      SELECT *, CASE WHEN {md5_int_sql("'split0' || CAST(doc_id AS VARCHAR)", 8)} / 4294967296.0 < 0.9
+      SELECT *, CASE WHEN {md5_unit_sql("'split0' || CAST(doc_id AS VARCHAR)", 8)} < 0.9
                      THEN 'train' ELSE 'val' END AS split
       FROM clean
     )
@@ -648,8 +652,7 @@ def curation_full_funnel(spark: SparkSession, sf: str) -> DataFrame:
     sampled AS (
       SELECT c.doc_id, c.source, c.text FROM clean c
       JOIN (VALUES {_MIX_VALUES}) r(source, rate) USING (source)
-      WHERE {md5_int_sql("'mix1' || CAST(c.doc_id AS VARCHAR)", 8)}
-            / 4294967296.0 < r.rate
+      WHERE {md5_unit_sql("'mix1' || CAST(c.doc_id AS VARCHAR)", 8)} < r.rate
     )
     SELECT source, count(*) AS n_docs,
            CAST(sum(len({_TOKS})) AS BIGINT) AS n_tokens
@@ -1172,12 +1175,12 @@ def curation_mixture_divergence(spark: SparkSession, sf: str) -> DataFrame:
     WITH d AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     st AS (SELECT doc_id, len(toks)::BIGINT AS n_tokens,
            len([j for j in range(1, len(toks) + 1)
-                if {md5_int_sql("'scs:' || CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", 8)}
-                   / 4294967296.0 < 0.05])::BIGINT AS n_starts,
+                if {md5_unit_sql("'scs:' || CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", 8)}
+                   < 0.05])::BIGINT AS n_starts,
            len([p for p in range(1, len(toks) + 1)
                 if len([j for j in range(greatest(1, p - 4), p + 1)
-                        if {md5_int_sql("'scs:' || CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", 8)}
-                              / 4294967296.0 < 0.05
+                        if {md5_unit_sql("'scs:' || CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", 8)}
+                              < 0.05
                        AND {md5_int_sql("'scl:' || CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", 8)} % 5
                               + 1 >= p - j + 1]) > 0])::BIGINT AS n_masked
            FROM d)

@@ -12,8 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from denormalized_spark.operators import dedup, similarity, text
-from denormalized_spark.operators._hashing import md5_int_sql
+from denormalized_spark.operators._hashing import md5_int_sql, md5_unit_sql
 from denormalized_spark.queries._util import (
+    _QC0_WEIGHT,
     _STOP_SQL,
     _TOKEN_HASHES,
     _TOKS,
@@ -649,9 +650,7 @@ def text_ccnet_buckets(spark: SparkSession, sf: str) -> DataFrame:
     WITH d AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     s AS (
       SELECT doc_id,
-             list_sum(list_transform(toks, t ->
-               {md5_int_sql(f"'qc0' || CAST( {md5_int_sql('t', 8)} % 65536 AS VARCHAR)", 8)}
-               / 4294967296.0 * 2 - 1))
+             list_sum(list_transform(toks, t -> {_QC0_WEIGHT}))
              / greatest(len(toks), 1) AS mean_w
       FROM d
     )
@@ -2604,9 +2603,8 @@ def text_js_divergence_matrix(spark: SparkSession, sf: str) -> DataFrame:
 
 
 _AUC_MARGIN = (
-    "coalesce(list_sum(list_transform(toks, t -> "
-    + md5_int_sql(f"'qc0' || CAST({md5_int_sql('t', 8)} % 65536 AS VARCHAR)", 8)
-    + " / 4294967296.0 * 2 - 1)), 0.0) / greatest(len(toks), 1)"
+    f"coalesce(list_sum(list_transform(toks, t -> {_QC0_WEIGHT})), 0.0)"
+    " / greatest(len(toks), 1)"
 )
 
 
@@ -3058,7 +3056,7 @@ def text_bigram_quality(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_SPLIT_FRAC = "(" + md5_int_sql("'split0' || CAST({key} AS VARCHAR)", 8) + " / 4294967296.0)"
+_SPLIT_FRAC = md5_unit_sql("'split0' || CAST({key} AS VARCHAR)", 8)
 
 
 @q(

@@ -31,7 +31,57 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
+
+from denormalized_spark.eventtime import declare_watermark
+
+
+def _keyed_state(
+    df: DataFrame,
+    keys: list[str],
+    event_time: str,
+    watermark: str,
+    fn,
+    out_fields: list[StructField],
+    state_fields: list[StructField],
+    timeout: str,
+    read_cols: Sequence[str] = (),
+) -> DataFrame:
+    """The scaffold of the per-key stateful operators: project to the
+    columns ``fn`` reads (applyInPandasWithState is opaque to Catalyst,
+    so without it every input column is Arrow-shipped to the Python
+    workers), declare the watermark, group by ``keys`` and run ``fn``
+    in append mode. The output is the key columns, then ``out_fields``."""
+    out_schema = StructType([df.schema[k] for k in keys] + out_fields)
+    projected = df.select(*dict.fromkeys([*keys, event_time, *read_cols]))
+    return (
+        declare_watermark(projected, event_time, watermark)
+        .groupBy(*keys)
+        .applyInPandasWithState(
+            fn, out_schema, StructType(state_fields), "append", timeout
+        )
+    )
+
+
+def _key_frame(keys: list[str], key: tuple, cols: dict):
+    """One emitted per-key frame: the key repeated over the rows, then
+    ``cols`` (numpy arrays in output-schema order). Raw native-dtype
+    arrays with copy=False cost ~100 µs per frame against ~300 µs with
+    pd.Series wrappers and object-dtype key arrays."""
+    import numpy as np
+    import pandas as pd
+
+    n = len(next(iter(cols.values())))
+    data = {k: np.full(n, kv) for k, kv in zip(keys, key)}
+    data.update(cols)
+    return pd.DataFrame(data, copy=False)
+
+
+def _us(values):
+    """int64 epoch microseconds as a datetime64[us] view."""
+    import numpy as np
+
+    return np.asarray(values, dtype="int64").view("datetime64[us]")
 
 
 def sessionize_batch(
@@ -80,50 +130,29 @@ def sessionize_stream(
     batch: sort the key's rows, split on gaps, emit every session
     closed by a gap, keep the trailing open session in state with an
     event-time timeout at end + gap; the timeout fires once the
-    watermark passes it and flushes the session. Late rows older than
-    the watermark were already dropped by ``withWatermark``.
+    watermark passes it and flushes the session. Rows older than the
+    watermark are dropped before they reach the state function.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from pyspark.sql.types import LongType, StructField
+    from pyspark.sql.types import LongType
 
     keys = list(keys)
     ts_type = df.schema[event_time].dataType  # timestamp or timestamp_ntz
-    out_schema = StructType(
-        [df.schema[k] for k in keys]
-        + [
-            StructField("session_start", ts_type),
-            StructField("session_end", ts_type),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start_us", LongType()),
-            StructField("end_us", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
     gap_us = gap_ms * 1000
 
     # Per-group Python cost is the lane's wall (r15 floor probe: a
-    # no-op state fn drains sf0.1 in ~1.9 s vs ~3.6 s for this fn), and
-    # within the fn the pandas construction dominates: pd.Series
-    # wrappers + object-dtype key arrays cost ~300 µs per emitted
-    # DataFrame vs ~100 µs for raw native-dtype arrays with copy=False,
-    # and the concat+notna+astype timestamp prep costs ~350 µs vs
-    # ~10 µs for a view-and-filter on the int64 representation. Same
-    # values, same column order, same dtypes on the Arrow boundary.
+    # no-op state fn drains sf0.1 in ~1.9 s vs ~3.6 s for this fn):
+    # the concat+notna+astype timestamp prep costs ~350 µs vs ~10 µs
+    # for a view-and-filter on the int64 representation.
     INAT = np.iinfo("int64").min
 
     def _emit(key, starts, ends, counts):
-        data = {k: np.full(len(starts), kv) for k, kv in zip(keys, key)}
-        data["session_start"] = starts.view("datetime64[us]")
-        data["session_end"] = ends.view("datetime64[us]")
-        data["n_events"] = counts
-        return pd.DataFrame(data, copy=False)
+        return _key_frame(keys, key, {
+            "session_start": _us(starts),
+            "session_end": _us(ends),
+            "n_events": counts,
+        })
 
     def _arr1(v):
         return np.array([v], dtype="int64")
@@ -194,32 +223,20 @@ def sessionize_stream(
                 cn = np.concatenate((_arr1(prepend[2]), cn))
             yield _emit(key, cs, ce, cn)
 
-    # Project to keys + event_time BEFORE the stateful operator: the
-    # function reads nothing else, but applyInPandasWithState is opaque
-    # to Catalyst — without the explicit select every input column
-    # (including wide payloads like events.props) is Arrow-shipped to
-    # the Python workers per batch (guide §4.1 column-pruning rule).
-    return (
-        df.select(*dict.fromkeys([*keys, event_time]))
-        .withWatermark(event_time, watermark)
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    return _keyed_state(
+        df, keys, event_time, watermark, fn,
+        [
+            StructField("session_start", ts_type),
+            StructField("session_end", ts_type),
+            StructField("n_events", LongType()),
+        ],
+        [
+            StructField("start_us", LongType()),
+            StructField("end_us", LongType()),
+            StructField("n", LongType()),
+        ],
+        GroupStateTimeout.EventTimeTimeout,
     )
-
-
-def sessionize(
-    df: DataFrame,
-    keys: Sequence[str],
-    event_time: str,
-    gap_ms: int,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Path-polymorphic sessionization (the DataStream entry point)."""
-    if df.isStreaming:
-        return sessionize_stream(df, keys, event_time, gap_ms, watermark)
-    return sessionize_batch(df, keys, event_time, gap_ms)
 
 
 def asof_join_stream(
@@ -285,9 +302,8 @@ def asof_join_stream(
     if tolerance_ms is not None and tolerance_ms < 0:
         raise ValueError(f"tolerance_ms must be >= 0, got {tolerance_ms}")
     import numpy as np
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import LongType, StringType, StructField
+    from pyspark.sql.types import LongType, StringType
 
     keys = list(on)
     right_cols = list(right_cols)
@@ -295,14 +311,14 @@ def asof_join_stream(
     ts_type = left.schema[left_time].dataType
     tol_us = int(tolerance_ms) * 1000 if tolerance_ms is not None else None
 
-    lu = left.withWatermark(left_time, watermark).select(
+    lu = declare_watermark(left, left_time, watermark).select(
         *keys,
         F.col(left_time).alias("_t"),
         F.lit(1).alias("_side"),
         *[F.col(c) for c in left_payload],
         *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in right_cols],
     )
-    ru = right.withWatermark(right_time, watermark).select(
+    ru = declare_watermark(right, right_time, watermark).select(
         *keys,
         F.col(right_time).alias("_t"),
         F.lit(0).alias("_side"),
@@ -432,8 +448,7 @@ def asof_join_stream(
                 use_b = (db <= df_) & (db != big)
                 matched = use_b | (df_ != big)
                 midx = np.where(use_b, np.maximum(bidx, 0), fsafe)
-            data = {k: np.full(n_emit, kv, dtype=object) for k, kv in zip(keys, key)}
-            data[left_time] = pd.Series(lt[:n_emit].astype("datetime64[us]"))
+            data = {left_time: _us(lt[:n_emit])}
             for c in left_payload:
                 data[c] = lcols[c][:n_emit]
             for c in right_cols:
@@ -445,8 +460,8 @@ def asof_join_stream(
                 mt = np.full(n_emit, np.datetime64("NaT", "us"))
                 if matched.any():
                     mt[matched] = rt[midx[matched]].astype("datetime64[us]")
-                data[matched_time_col] = pd.Series(mt)
-            yield pd.DataFrame(data)
+                data[matched_time_col] = mt
+            yield _key_frame(keys, key, data)
 
     return u.groupBy(*keys).applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
@@ -498,34 +513,9 @@ def anomaly_stream(
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StructField,
-    )
+    from pyspark.sql.types import BooleanType, DoubleType, LongType
 
     keys = list(keys)
-    ts_type = df.schema[event_time].dataType
-    out_schema = StructType(
-        [df.schema[k] for k in keys]
-        + [
-            StructField("window_start_time", ts_type),
-            StructField("n", LongType()),
-            StructField("n_prior_windows", LongType()),
-            StructField("zscore", DoubleType()),
-            StructField("is_anomaly", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("cur_start_us", LongType()),
-            StructField("cur_n", LongType()),
-            StructField("hist_n", LongType()),
-            StructField("hist_sum", LongType()),
-            StructField("hist_sumsq", LongType()),
-        ]
-    )
     win_us = window_ms * 1000
 
     def _score(n, hist):
@@ -541,17 +531,14 @@ def anomaly_stream(
         return z, abs(z) >= z_threshold
 
     def _emit(key, rows):
-        data = {k: [kv] * len(rows) for k, kv in zip(keys, key)}
-        data["window_start_time"] = pd.Series(
-            np.asarray([r[0] for r in rows], dtype="int64").astype(
-                "datetime64[us]"
-            )
-        )
-        data["n"] = [r[1] for r in rows]
-        data["n_prior_windows"] = [r[2] for r in rows]
-        data["zscore"] = [r[3] for r in rows]
-        data["is_anomaly"] = [r[4] for r in rows]
-        return pd.DataFrame(data)
+        start, n, prior, z, flag = zip(*rows)
+        return _key_frame(keys, key, {
+            "window_start_time": _us(start),
+            "n": np.asarray(n, dtype="int64"),
+            "n_prior_windows": np.asarray(prior, dtype="int64"),
+            "zscore": np.asarray(z, dtype="float64"),
+            "is_anomaly": np.asarray(flag, dtype=bool),
+        })
 
     def fn(key, pdf_iter, state):
         if state.hasTimedOut:
@@ -611,16 +598,23 @@ def anomaly_stream(
         if out:
             yield _emit(key, out)
 
-    # keys + event_time are all fn reads — explicit projection keeps
-    # the opaque stateful operator from Arrow-shipping every column
-    # (guide §4.1), same as sessionize_stream.
-    return (
-        df.select(*dict.fromkeys([*keys, event_time]))
-        .withWatermark(event_time, watermark)
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    return _keyed_state(
+        df, keys, event_time, watermark, fn,
+        [
+            StructField("window_start_time", df.schema[event_time].dataType),
+            StructField("n", LongType()),
+            StructField("n_prior_windows", LongType()),
+            StructField("zscore", DoubleType()),
+            StructField("is_anomaly", BooleanType()),
+        ],
+        [
+            StructField("cur_start_us", LongType()),
+            StructField("cur_n", LongType()),
+            StructField("hist_n", LongType()),
+            StructField("hist_sum", LongType()),
+            StructField("hist_sumsq", LongType()),
+        ],
+        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -666,47 +660,26 @@ def scd2_stream(
     Single-attribute form (the state row holds one string) — callers
     tracking several columns pack them with ``F.to_json(struct(...))``
     or concat_ws, the standard SCD2-hash trick. Out-of-order rows
-    OLDER than the watermark are dropped by ``withWatermark`` before
-    they can corrupt history; within-watermark disorder is repaired by
+    OLDER than the watermark are dropped before they can corrupt
+    history; within-watermark disorder is repaired by
     the per-batch sort only (cross-batch regressions land as new
     versions — document your watermark accordingly)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import BooleanType, LongType, StringType, StructField
+    from pyspark.sql.types import BooleanType, LongType, StringType
 
     keys = list(keys)
     ts_type = df.schema[event_time].dataType
-    out_schema = StructType(
-        [df.schema[k] for k in keys]
-        + [
-            StructField(attr_col, StringType()),
-            StructField("version", LongType()),
-            StructField("valid_from", ts_type),
-            StructField("valid_to", ts_type),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("from_us", LongType()),
-            StructField("version", LongType()),
-            StructField("attr", StringType()),
-            StructField("attr_is_null", BooleanType()),
-        ]
-    )
 
     def _emit(key, rows):
-        n = len(rows)
-        data = {k: np.full(n, kv, dtype=object) for k, kv in zip(keys, key)}
-        data[attr_col] = pd.array([r[2] for r in rows], dtype=object)
-        data["version"] = np.asarray([r[3] for r in rows], dtype="int64")
-        data["valid_from"] = pd.Series(
-            np.asarray([r[0] for r in rows], dtype="int64").astype("datetime64[us]")
-        )
-        data["valid_to"] = pd.Series(
-            np.asarray([r[1] for r in rows], dtype="int64").astype("datetime64[us]")
-        )
-        return pd.DataFrame(data)
+        valid_from, valid_to, attr, version = zip(*rows)
+        return _key_frame(keys, key, {
+            attr_col: np.array(attr, dtype=object),
+            "version": np.asarray(version, dtype="int64"),
+            "valid_from": _us(valid_from),
+            "valid_to": _us(valid_to),
+        })
 
     def fn(key, pdf_iter, state):
         rows = pd.concat(list(pdf_iter))
@@ -745,17 +718,20 @@ def scd2_stream(
         if closed:
             yield _emit(key, closed)
 
-    # fn reads keys + event_time + attr + tiebreak only — explicit
-    # projection keeps the opaque stateful operator from Arrow-shipping
-    # unrelated columns (guide §4.1), same as sessionize_stream.
-    cols = [*keys, event_time, attr_col] + (
-        [tiebreak_col] if tiebreak_col else []
-    )
-    return (
-        df.select(*dict.fromkeys(cols))
-        .withWatermark(event_time, watermark)
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+    return _keyed_state(
+        df, keys, event_time, watermark, fn,
+        [
+            StructField(attr_col, StringType()),
+            StructField("version", LongType()),
+            StructField("valid_from", ts_type),
+            StructField("valid_to", ts_type),
+        ],
+        [
+            StructField("from_us", LongType()),
+            StructField("version", LongType()),
+            StructField("attr", StringType()),
+            StructField("attr_is_null", BooleanType()),
+        ],
+        GroupStateTimeout.NoTimeout,
+        read_cols=[attr_col] + ([tiebreak_col] if tiebreak_col else []),
     )

@@ -214,3 +214,19 @@ def test_facade_funnel_and_anomaly(spark):
     anom = ds.anomaly_scores(["event_type"]).df
     assert {f.name for f in anom.schema} >= {"window_start_time", "n", "zscore", "is_anomaly"}
     assert anom.count() == 2  # (view, h0), (click, h0)
+
+
+def test_watermark_declared_once():
+    """Every watermark in the package is declared through
+    eventtime.declare_watermark, which keeps a watermark the event-time
+    column already carries — so no operator can redeclare one."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "denormalized_spark"
+    sites = [
+        f"{path.relative_to(pkg).as_posix()}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ".withWatermark(" in line
+    ]
+    assert [s.split(":")[0] for s in sites] == ["eventtime.py"], sites

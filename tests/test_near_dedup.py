@@ -480,11 +480,20 @@ class TestBucketSizeCap:
         assert base == capped
 
 
-def test_window_time_mode_stream_equals_batch(spark):
+@pytest.mark.parametrize(
+    "row_op",
+    [
+        pytest.param(lambda ds: ds, id="no_row_op"),
+        pytest.param(lambda ds: ds.filter(F.col("doc_id") > 0), id="filter"),
+    ],
+)
+def test_window_time_mode_stream_equals_batch(spark, row_op):
     """ts_mode='window_time' parity: the streaming gate's emitted
     (doc_id, ts) must equal the batch twin's derived window_time —
     and the column must chain into a downstream windowed aggregation
-    in the same query (the gate → monitor graph)."""
+    in the same query (the gate → monitor graph), also through a row
+    op between the gate and the window: the column's watermark
+    metadata, not the query's shape, says it is already watermarked."""
     stage = tempfile.mkdtemp(prefix="nd_wt_stage_")
     schema = "doc_id long, ts timestamp, text string"
     by_minute: dict[int, list] = {}
@@ -508,9 +517,10 @@ def test_window_time_mode_stream_equals_batch(spark):
     gated = DataStream(sdf, event_time="ts").near_dedup(
         "doc_id", "text", ts_mode="window_time"
     )
-    assert gated.event_time == "ts" and gated.watermarked
+    assert gated.event_time == "ts"
+    assert "spark.watermarkDelayMs" in gated.df.schema["ts"].metadata
     # chain a 10-minute windowed count downstream IN THE SAME QUERY
-    mon = gated.window(["doc_id"], [F.count("*").alias("n")], 600_000)
+    mon = row_op(gated).window(["doc_id"], [F.count("*").alias("n")], 600_000)
     emitted = []
     q = mon.sink(
         lambda df: emitted.extend(df.collect()),

@@ -210,6 +210,52 @@ def test_late_data_dropped(spark, tmp_path):
     assert len(hour0) == 1 and hour0[0]["n"] == 3, rows
 
 
+def test_declared_watermark_is_kept(spark, tmp_path):
+    """A stream whose event-time column already carries a watermark
+    keeps it: ``window`` neither redeclares it (Spark rejects that with
+    "Redefining watermark is disallowed") nor overrides the delay with
+    the DataStream's 0-second default. The 10:12 row is inside the
+    declared 10-minute allowance (watermark 10:10 after file 1), so it
+    is counted and no row is dropped."""
+    import datetime
+    import os
+
+    from denormalized_spark.datastream import DataStream
+
+    t0 = datetime.datetime(2024, 1, 1, 10, 0)
+    files = [[0, 20], [12, 30]]  # minutes past 10:00, one file per batch
+    stream_dir = tmp_path / "declared_wm"
+    for i, minutes in enumerate(files):
+        out = str(stream_dir / f"f{i}")
+        spark.createDataFrame(
+            [("a", t0 + datetime.timedelta(minutes=m)) for m in minutes],
+            "k string, ts timestamp",
+        ).coalesce(1).write.parquet(out)
+        for f in os.listdir(out):
+            os.utime(os.path.join(out, f), (1_000_000 + i, 1_000_000 + i))
+    sdf = (
+        spark.readStream.schema("k string, ts timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(stream_dir / "f*"))
+        .withWatermark("ts", "10 minutes")
+    )
+    ds = DataStream(sdf, event_time="ts").window([], [F.count("*").alias("n")], 300_000)
+    rows = []
+    q = ds.sink(
+        lambda df: rows.extend(df.collect()),
+        checkpoint=str(tmp_path / "ck"),
+    )
+    q.awaitTermination(180)
+    got = {r["window_start_time"].strftime("%H:%M"): r["n"] for r in rows}
+    assert got == {"10:00": 1, "10:10": 1}, got
+    dropped = sum(
+        op["numRowsDroppedByWatermark"]
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    )
+    assert dropped == 0
+
+
 def test_stream_sink_batch_degenerate(spark, events):
     """Batch DataFrames run the sink callback once, immediately —
     shared sink code between backfills and live streams."""
