@@ -40,8 +40,16 @@ _JOIN_TYPES = {
 }
 
 
+#: the trigger of every sink but Kafka's: drain what is there, then stop
+_AVAILABLE_NOW = {"availableNow": True}
+
+
 def _as_col(e: Column | str) -> Column:
     return F.col(e) if isinstance(e, str) else e
+
+
+def _as_df(x: "DataStream | DataFrame") -> DataFrame:
+    return x.df if isinstance(x, DataStream) else x
 
 
 class DataStream:
@@ -212,17 +220,14 @@ class DataStream:
         )
 
     def union(self, other: "DataStream | DataFrame", distinct: bool = False) -> "DataStream":
-        o = other.df if isinstance(other, DataStream) else other
-        out = self._df.union(o)
+        out = self._df.union(_as_df(other))
         return self._wrap(out.distinct() if distinct else out)
 
     def intersect(self, other: "DataStream | DataFrame") -> "DataStream":
-        o = other.df if isinstance(other, DataStream) else other
-        return self._wrap(self._df.intersect(o))
+        return self._wrap(self._df.intersect(_as_df(other)))
 
     def except_all(self, other: "DataStream | DataFrame") -> "DataStream":
-        o = other.df if isinstance(other, DataStream) else other
-        return self._wrap(self._df.exceptAll(o))
+        return self._wrap(self._df.exceptAll(_as_df(other)))
 
     def repartition(self, n: int, *cols: str) -> "DataStream":
         if cols:
@@ -294,7 +299,7 @@ class DataStream:
         (or rely on AQE/autoBroadcast) to avoid shuffling the big side.
         """
         how = _JOIN_TYPES[join_type]
-        r = right.df if isinstance(right, DataStream) else right
+        r = _as_df(right)
         if broadcast_right:
             r = F.broadcast(r)
         if left_cols is None:
@@ -320,7 +325,7 @@ class DataStream:
         datastream.rs:126-145; the reference's Python binding is
         ``todo!()`` — py-denormalized/src/datastream.rs:97-104)."""
         how = _JOIN_TYPES[join_type]
-        r = right.df if isinstance(right, DataStream) else right
+        r = _as_df(right)
         if broadcast_right:
             r = F.broadcast(r)
         return self._wrap(self._df.join(r, on, how))
@@ -409,7 +414,7 @@ class DataStream:
         tolerance_ms there — the tolerance is the finalization horizon
         (a left emits once the watermark passes t + tolerance). Not in
         the reference; standard in time-series/feature-store engines."""
-        r = right.df if isinstance(right, DataStream) else right
+        r = _as_df(right)
         if self._df.isStreaming or r.isStreaming:
             from denormalized_spark.streaming.stateful import asof_join_stream
 
@@ -449,7 +454,7 @@ class DataStream:
         the bin supplies the symmetric hash join's equi key and the
         ``point <= start + bin_width`` bound lets the watermark evict
         both sides' state."""
-        r = right.df if isinstance(right, DataStream) else right
+        r = _as_df(right)
         if self._df.isStreaming or r.isStreaming:
             from denormalized_spark.operators.temporal import range_join_stream
 
@@ -761,9 +766,8 @@ class DataStream:
                 "near_dedup_incremental() is the batch-load form; use "
                 "near_dedup() on streams"
             )
-        idx = index._df if isinstance(index, DataStream) else index
         flags, updated = near_dedup_incremental(
-            self._df, idx, id_col, text_col,
+            self._df, _as_df(index), id_col, text_col,
             num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
         )
         return DataStream(flags), DataStream(updated)
@@ -800,8 +804,7 @@ class DataStream:
             writer = writer.queryName(query_name)
         if checkpoint:
             writer = writer.option("checkpointLocation", checkpoint)
-        writer = writer.trigger(**(trigger or {"availableNow": True}))
-        return writer.start()
+        return writer.trigger(**(trigger or _AVAILABLE_NOW)).start()
 
     def sink_kafka(
         self,
@@ -836,16 +839,9 @@ class DataStream:
         if not self._df.isStreaming:
             self.to_parquet(path, partition_by=list(partition_by or ()))
             return None
-        w = (
-            self._df.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", path)
-            .option("checkpointLocation", checkpoint)
-            .trigger(**(trigger or {"availableNow": True}))
+        return self._sink_files(
+            "parquet", path, checkpoint, trigger, partition_by=partition_by
         )
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        return w.start()
 
     def sink_csv(
         self, path: str, *, checkpoint: str, trigger: dict | None = None, header: bool = True
@@ -855,14 +851,8 @@ class DataStream:
         if not self._df.isStreaming:
             self.to_csv(path, header=header)
             return None
-        return (
-            self._df.writeStream.format("csv")
-            .outputMode("append")
-            .option("path", path)
-            .option("header", str(header).lower())
-            .option("checkpointLocation", checkpoint)
-            .trigger(**(trigger or {"availableNow": True}))
-            .start()
+        return self._sink_files(
+            "csv", path, checkpoint, trigger, header=str(header).lower()
         )
 
     def sink_json(self, path: str, *, checkpoint: str, trigger: dict | None = None):
@@ -870,14 +860,30 @@ class DataStream:
         if not self._df.isStreaming:
             self.to_json(path)
             return None
-        return (
-            self._df.writeStream.format("json")
+        return self._sink_files("json", path, checkpoint, trigger)
+
+    def _sink_files(
+        self,
+        fmt: str,
+        path: str,
+        checkpoint: str,
+        trigger: dict | None,
+        partition_by: Sequence[str] | None = None,
+        **options: str,
+    ):
+        """The streaming body of the file sinks: Spark's ``fmt`` file
+        sink in append mode, committed through ``_spark_metadata``."""
+        w = (
+            self._df.writeStream.format(fmt)
             .outputMode("append")
             .option("path", path)
+            .options(**options)
             .option("checkpointLocation", checkpoint)
-            .trigger(**(trigger or {"availableNow": True}))
-            .start()
+            .trigger(**(trigger or _AVAILABLE_NOW))
         )
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        return w.start()
 
     def print_stream(self, *, trigger: dict | None = None, num_rows: int = 20):
         """Console sink (reference datastream.rs:309-344)."""
@@ -888,7 +894,7 @@ class DataStream:
             self._df.writeStream.format("console")
             .outputMode("append")
             .option("numRows", str(num_rows))
-            .trigger(**(trigger or {"availableNow": True}))
+            .trigger(**(trigger or _AVAILABLE_NOW))
             .start()
         )
 

@@ -10,9 +10,7 @@ Kernel reality by modality:
 - **audio (WAV/PCM): REAL.** :func:`audio_features` parses RIFF/WAVE
   containers with stdlib ``wave`` (header + PCM decode, no external
   deps) and computes signal statistics; :func:`audio_chunks` segments
-  either raw PCM or decoded WAV. Corrupt/unparseable payloads yield
-  NULL features, never a task failure — at 100 TB some files WILL be
-  broken and a decode error must not kill the stage.
+  either raw PCM or decoded WAV.
 - **image (BMP/PNG): REAL.** :func:`image_stats`,
   :func:`image_features` (mean-pooled luma grid), and
   :func:`image_phash` / :func:`image_near_dups` (perceptual-hash
@@ -26,10 +24,16 @@ Kernel reality by modality:
 
 Scale notes: binary payloads ride the normal columnar path
 (parquet binary columns), so partition sizing is governed by
-``spark.sql.files.maxPartitionBytes`` like any column. Decode runs in
-``mapInPandas`` — per-partition Arrow batches, one Python worker per
-task, no shuffle. Feature vectors come back as array<float> ready for
-operators.similarity.
+``spark.sql.files.maxPartitionBytes`` like any column. Every per-row
+decoder and synthesizer runs through
+:func:`~denormalized_spark.operators._rows.map_rows` (Arrow batches
+in ``mapInPandas``, one Python worker per task, no shuffle). A decoder
+returns ``None`` for a payload it cannot parse, and ``map_rows`` turns
+that into a NULL row: at 100 TB some files WILL be broken, and a
+corrupt payload must not kill the stage. The fan-out kernels
+(:func:`audio_chunks`, :func:`sample_frames`) keep their own
+vectorized row repeat. Feature vectors come back as array<float>
+ready for operators.similarity.
 """
 
 from __future__ import annotations
@@ -49,6 +53,7 @@ from denormalized_spark.operators._bucketing import (
     bucket_pairs,
     capped_bucket_collect,
 )
+from denormalized_spark.operators._rows import map_rows
 
 IMAGE_META = T.StructType(
     [
@@ -95,22 +100,38 @@ def _fake_features(payload: bytes, dim: int) -> list[float]:
     return out
 
 
-def _luma_grid(payload: bytes | None):
-    """Decode (BMP then PNG) and return the integer scaled-luma grid
-    (H×W int64, 1000× Rec.601: 299·R + 587·G + 114·B) — the shared
-    integer-exact input of :func:`image_features` and
-    :func:`image_phash`. None for unparseable payloads."""
-    import numpy as np
-
+def _decode_rgb(payload: bytes | None):
+    """The one image decode: BMP, then PNG → (width, height, HxWx3 RGB
+    uint8), or None for a NULL or unparseable payload."""
     if payload is None:
         return None
-    parsed = _parse_bmp(payload)
-    if parsed is None:
-        parsed = _parse_png(payload)
+    raw = bytes(payload)
+    return _parse_bmp(raw) or _parse_png(raw)
+
+
+def _luma_grid(payload: bytes | None):
+    """Decode and return the integer scaled-luma grid (H×W int64,
+    1000× Rec.601: 299·R + 587·G + 114·B) — the shared integer-exact
+    input of :func:`image_features` and :func:`image_phash`. None for
+    unparseable payloads."""
+    import numpy as np
+
+    parsed = _decode_rgb(payload)
     if parsed is None:
         return None
     rgb = parsed[2].astype(np.int64)
     return 299 * rgb[..., 0] + 587 * rgb[..., 1] + 114 * rgb[..., 2]
+
+
+def _pack_hi_lo(bits) -> tuple[int, int]:
+    """A perceptual hash's bits (most significant first) → its two
+    halves: the first 32 bits as ``hi``, the rest as ``lo``."""
+    hi = lo = 0
+    for b in bits[:32]:
+        hi = (hi << 1) | int(b)
+    for b in bits[32:]:
+        lo = (lo << 1) | int(b)
+    return hi, lo
 
 
 def image_features(
@@ -128,8 +149,8 @@ def image_features(
     over pixels with ⌊y·g/h⌋=i, ⌊x·g/w⌋=j). All accumulation is exact
     integer arithmetic; each feature is ONE IEEE division
     S/(n·1000.0), so values are bit-identical across engines.
-    Unparseable payloads yield NULL features (corrupt files must not
-    kill a 100 TB stage); ``dim`` must be a perfect square. JPEG
+    Unparseable payloads yield NULL features; ``dim`` must be a
+    perfect square. JPEG
     still needs a DCT codec: ``fake=True`` keeps the md5-chain
     stand-in kernel for payloads no stdlib codec covers.
 
@@ -143,43 +164,29 @@ def image_features(
     g = math.isqrt(dim)
     if not fake and g * g != dim:
         raise ValueError(f"dim must be a perfect square for the grid kernel, got {dim}")
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("features", T.ArrayType(T.FloatType()))]
+
+    def grid(p):
+        L = _luma_grid(p)
+        if L is None:
+            return None
+        h, w = L.shape
+        cy = np.arange(h) * g // h
+        cx = np.arange(w) * g // w
+        sums = np.zeros((g, g), dtype=np.int64)
+        counts = np.zeros((g, g), dtype=np.int64)
+        np.add.at(sums, (cy[:, None], cx[None, :]), L)
+        np.add.at(counts, (cy[:, None], cx[None, :]), 1)
+        # empty cells only when the image is smaller than the grid —
+        # define those as 0.0
+        vals = np.where(counts > 0, sums / (np.maximum(counts, 1) * 1000.0), 0.0)
+        return ([float(v) for v in vals.flatten()],)
+
+    return map_rows(
+        df,
+        [T.StructField("features", T.ArrayType(T.FloatType()))],
+        (lambda p: (_fake_features(p, dim),)) if fake else grid,
+        [binary_col],
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            if fake:
-                pdf["features"] = [
-                    _fake_features(bytes(p) if p is not None else b"", dim)
-                    for p in pdf[binary_col]
-                ]
-                yield pdf
-                continue
-            feats = []
-            for p in pdf[binary_col]:
-                L = _luma_grid(bytes(p) if p is not None else None)
-                if L is None:
-                    feats.append(None)
-                    continue
-                h, w = L.shape
-                cy = np.arange(h) * g // h
-                cx = np.arange(w) * g // w
-                sums = np.zeros((g, g), dtype=np.int64)
-                counts = np.zeros((g, g), dtype=np.int64)
-                np.add.at(sums, (cy[:, None], cx[None, :]), L)
-                np.add.at(counts, (cy[:, None], cx[None, :]), 1)
-                # empty cells only when the image is smaller than the
-                # grid — define those as 0.0
-                vals = np.where(
-                    counts > 0, sums / (np.maximum(counts, 1) * 1000.0), 0.0
-                )
-                feats.append([float(v) for v in vals.flatten()])
-            pdf["features"] = feats
-            yield pdf
-
-    return df.mapInPandas(kernel, out_schema)
 
 
 def image_phash(
@@ -208,49 +215,28 @@ def image_phash(
 
     if method not in ("dhash", "ahash"):
         raise ValueError(f"method must be dhash|ahash, got {method!r}")
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("phash_hi", T.LongType()),
-            T.StructField("phash_lo", T.LongType()),
-        ]
-    )
 
-    def _bits(L) -> list[int]:
+    def phash(p):
+        L = _luma_grid(p)
+        if L is None:
+            return None
         h, w = L.shape
         if method == "dhash":
             xs = (2 * np.arange(9) + 1) * w // 18
             ys = (2 * np.arange(8) + 1) * h // 16
             S = L[np.ix_(ys, xs)]
-            return (S[:, :-1] > S[:, 1:]).astype(int).flatten().tolist()
+            return _pack_hi_lo((S[:, :-1] > S[:, 1:]).flatten())
         xs = (2 * np.arange(8) + 1) * w // 16
         ys = (2 * np.arange(8) + 1) * h // 16
         S = L[np.ix_(ys, xs)]
-        return (64 * S > S.sum()).astype(int).flatten().tolist()
+        return _pack_hi_lo((64 * S > S.sum()).flatten())
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            his, los = [], []
-            for p in pdf[binary_col]:
-                L = _luma_grid(bytes(p) if p is not None else None)
-                if L is None:
-                    his.append(None)
-                    los.append(None)
-                    continue
-                bits = _bits(L)
-                hi = lo = 0
-                for b in bits[:32]:
-                    hi = (hi << 1) | b
-                for b in bits[32:]:
-                    lo = (lo << 1) | b
-                his.append(hi)
-                los.append(lo)
-            out = pdf.copy()
-            out["phash_hi"] = pd.array(his, dtype="Int64")
-            out["phash_lo"] = pd.array(los, dtype="Int64")
-            yield out
-
-    return df.mapInPandas(kernel, out_schema)
+    return map_rows(
+        df,
+        [T.StructField("phash_hi", T.LongType()), T.StructField("phash_lo", T.LongType())],
+        phash,
+        [binary_col],
+    )
 
 
 def image_near_dups(
@@ -387,8 +373,7 @@ def audio_fingerprint(
     scales every energy by g, preserving every comparison — a
     re-encoded/volume-normalized copy fingerprints identically.
     Undecodable payloads (or clips shorter than ``n_frames``
-    samples) yield NULLs, never a task failure. Pure mapInPandas
-    projection — no shuffle.
+    samples) yield NULLs. Pure mapInPandas projection — no shuffle.
 
     ``n_frames`` must be in [50, 65]: the fingerprint has
     ``n_frames - 1`` bits, ``hi`` takes the first 32, ``lo`` the
@@ -405,52 +390,21 @@ def audio_fingerprint(
             f"n_frames must be in [50, 65] so all four 16-bit LSH bands carry "
             f"real bits and both halves fit 32 bits, got {n_frames}"
         )
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("fp_hi", T.LongType()),
-            T.StructField("fp_lo", T.LongType()),
-        ]
+
+    def fingerprint(p):
+        x = _pcm_channel0(_parse_wav(p))
+        L = 0 if x is None else len(x) // n_frames
+        if L < 1:
+            return None
+        e = np.abs(x[: L * n_frames]).reshape(n_frames, L).sum(axis=1)
+        return _pack_hi_lo(e[1:] > e[:-1])
+
+    return map_rows(
+        df,
+        [T.StructField("fp_hi", T.LongType()), T.StructField("fp_lo", T.LongType())],
+        fingerprint,
+        [binary_col],
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            his, los = [], []
-            for p in pdf[binary_col]:
-                parsed = _parse_wav(bytes(p)) if p is not None else None
-                hi = lo = None
-                if parsed is not None:
-                    sr, ch, sw, n, pcm = parsed
-                    dtype = _SAMPWIDTH_DTYPE.get(sw)
-                    if dtype is not None:
-                        try:
-                            x = np.frombuffer(pcm, dtype=dtype).astype(np.int64)
-                            if sw == 1:
-                                x -= 128
-                            x = x.reshape(-1, ch)[:, 0]
-                            L = len(x) // n_frames
-                            if L >= 1:
-                                e = (
-                                    np.abs(x[: L * n_frames])
-                                    .reshape(n_frames, L)
-                                    .sum(axis=1)
-                                )
-                                bits = (e[1:] > e[:-1]).astype(int)
-                                hi = lo = 0
-                                for b in bits[:32]:
-                                    hi = (hi << 1) | int(b)
-                                for b in bits[32:]:
-                                    lo = (lo << 1) | int(b)
-                        except Exception:
-                            hi = lo = None
-                his.append(hi)
-                los.append(lo)
-            out = pdf.copy()
-            out["fp_hi"] = pd.array(his, dtype="Int64")
-            out["fp_lo"] = pd.array(los, dtype="Int64")
-            yield out
-
-    return df.mapInPandas(kernel, out_schema)
 
 
 def audio_near_dups(
@@ -475,12 +429,14 @@ def audio_near_dups(
     )
 
 
-def _parse_wav(payload: bytes):
+def _parse_wav(payload: bytes | None):
     """stdlib RIFF/WAVE parse → (sample_rate, n_channels, sampwidth,
-    n_frames, pcm_bytes), or None for unparseable payloads."""
+    n_frames, pcm_bytes), or None for NULL or unparseable payloads."""
     import io
     import wave
 
+    if payload is None:
+        return None
     try:
         with wave.open(io.BytesIO(payload), "rb") as w:
             n = w.getnframes()
@@ -498,21 +454,61 @@ def _parse_wav(payload: bytes):
 _SAMPWIDTH_DTYPE = {1: "u1", 2: "<i2", 4: "<i4"}
 
 
+def _pcm_channel0(parsed):
+    """The one PCM decode: a :func:`_parse_wav` result → channel 0's
+    samples as int64 (8-bit PCM is unsigned per the WAV spec and is
+    centred), or None when there is nothing to decode (no parse, an
+    unsupported sample width, truncated or empty PCM)."""
+    import numpy as np
+
+    if parsed is None:
+        return None
+    _, ch, sw, _, pcm = parsed
+    dtype = _SAMPWIDTH_DTYPE.get(sw)
+    if dtype is None:
+        return None
+    try:
+        x = np.frombuffer(pcm, dtype=dtype).astype(np.int64)
+        if sw == 1:
+            x -= 128
+        x = x.reshape(-1, ch)[:, 0]
+    except ValueError:  # PCM bytes not a whole number of frames
+        return None
+    return x if len(x) else None
+
+
 def audio_features(df: DataFrame, binary_col: str = "payload") -> DataFrame:
     """WAV binary → signal features, with a REAL decode kernel:
     stdlib ``wave`` parses the RIFF container and the PCM frames are
     analyzed with numpy (no external codec deps). Output columns:
     sample_rate, n_channels, n_samples (frames), duration_ms, rms,
     peak (abs), zero_crossings — rms/peak/crossings over channel 0.
-    Unparseable payloads produce NULL features (a corrupt file must
-    not kill a 100 TB stage). 8/16/32-bit PCM supported; 8-bit is
-    unsigned-offset per the WAV spec and is centered before analysis.
+    Unparseable payloads produce NULL features; a payload whose header
+    parses but whose PCM does not keeps its header fields. 8/16/32-bit
+    PCM supported; 8-bit is unsigned-offset per the WAV spec and is
+    centered before analysis.
     """
     import numpy as np
 
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
+    def features(p):
+        parsed = _parse_wav(p)
+        if parsed is None:
+            return None
+        sr, ch, _, n, _ = parsed
+        header = (sr, ch, n, 1000.0 * n / sr if sr else None)
+        x = _pcm_channel0(parsed)
+        if x is None or not sr:  # header only: no PCM (or no rate) to analyze
+            return header + (None, None, None)
+        sign = x < 0
+        return header + (
+            float(np.sqrt(np.mean(x.astype(np.float64) ** 2))),
+            int(np.max(np.abs(x))),
+            int(np.count_nonzero(sign[1:] != sign[:-1])),
+        )
+
+    return map_rows(
+        df,
+        [
             T.StructField("sample_rate", T.IntegerType()),
             T.StructField("n_channels", T.IntegerType()),
             T.StructField("n_samples", T.LongType()),
@@ -520,45 +516,10 @@ def audio_features(df: DataFrame, binary_col: str = "payload") -> DataFrame:
             T.StructField("rms", T.DoubleType()),
             T.StructField("peak", T.LongType()),
             T.StructField("zero_crossings", T.LongType()),
-        ]
+        ],
+        features,
+        [binary_col],
     )
-    feature_cols = [f.name for f in out_schema.fields[len(df.schema.fields) :]]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            feats = []
-            for p in pdf[binary_col]:
-                parsed = _parse_wav(bytes(p)) if p is not None else None
-                if parsed is None:
-                    feats.append((None,) * 7)
-                    continue
-                sr, ch, sw, n, pcm = parsed
-                dtype = _SAMPWIDTH_DTYPE.get(sw)
-                if dtype is None or n == 0:
-                    feats.append((sr, ch, n, 1000.0 * n / sr if sr else None,
-                                  None, None, None))
-                    continue
-                try:
-                    x = np.frombuffer(pcm, dtype=dtype).astype(np.int64)
-                    if sw == 1:
-                        x -= 128  # WAV 8-bit PCM is unsigned
-                    x = x.reshape(-1, ch)[:, 0]  # analyze channel 0
-                    rms = float(np.sqrt(np.mean(x.astype(np.float64) ** 2)))
-                    peak = int(np.max(np.abs(x)))
-                    sign = x < 0
-                    crossings = int(np.count_nonzero(sign[1:] != sign[:-1]))
-                    feats.append((sr, ch, n, 1000.0 * n / sr, rms, peak, crossings))
-                except Exception:  # truncated PCM etc. → NULL features
-                    feats.append((sr, ch, n, 1000.0 * n / sr if sr else None,
-                                  None, None, None))
-            out = pdf.copy()
-            for i, c in enumerate(feature_cols):
-                out[c] = [f[i] for f in feats]
-            yield out
-
-    return df.mapInPandas(kernel, out_schema)
 
 
 def synthesize_wav_payloads(
@@ -581,37 +542,32 @@ def synthesize_wav_payloads(
     → rms = A exactly, peak = A, zero_crossings = b - 1,
     duration_ms = N * 1000 / sample_rate (sample_rate divides a power
     of two times 1000, so the double is exact)."""
+    import numpy as np
+
+    def square_wav(v):
+        i = int(v)
+        h, b, amp = i % 7 + 1, i % 50 + 10, (i % 30 + 1) * 1000
+        sign = np.where(np.arange(b) % 2 == 0, 1, -1)
+        return (_write_wav(np.repeat(sign * amp, h), sample_rate),)
+
+    return map_rows(
+        df, [T.StructField(payload_col, T.BinaryType())], square_wav, [id_col]
+    )
+
+
+def _write_wav(samples, sample_rate: int) -> bytes:
+    """Integer samples → mono 16-bit PCM RIFF/WAVE bytes (stdlib
+    ``wave``)."""
     import io
     import wave
 
-    import numpy as np
-
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(payload_col, T.BinaryType())]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            payloads = []
-            for v in pdf[id_col]:
-                i = int(v)
-                h, b, amp = i % 7 + 1, i % 50 + 10, (i % 30 + 1) * 1000
-                sign = np.where(np.arange(b) % 2 == 0, 1, -1)
-                x = np.repeat(sign * amp, h).astype("<i2")
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(sample_rate)
-                    w.writeframes(x.tobytes())
-                payloads.append(buf.getvalue())
-            out = pdf.copy()
-            out[payload_col] = payloads
-            yield out
-
-    return df.mapInPandas(kernel, out_schema)
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(sample_rate)
+        w.writeframes(samples.astype("<i2").tobytes())
+    return buf.getvalue()
 
 
 def _parse_bmp(payload: bytes):
@@ -669,7 +625,10 @@ def _parse_png(payload: bytes):
                 w, h, depth, ctype, _comp, _filt, interlace = struct.unpack(
                     ">IIBBBBB", data
                 )
-                if depth != 8 or ctype not in (2, 6) or interlace != 0:
+                if (
+                    depth != 8 or ctype not in (2, 6) or interlace != 0
+                    or w == 0 or h == 0  # the spec requires both ≥ 1
+                ):
                     return None
             elif typ == b"IDAT":
                 idat.append(data)
@@ -753,51 +712,30 @@ def image_stats(df: DataFrame, binary_col: str = "payload") -> DataFrame:
     with numpy, no external codecs; JPEG needs a DCT codec and stays
     on the stubbed :func:`image_features` path. Output columns:
     width, height, mean_r/g/b, mean_luma (Rec.601). Unparseable
-    payloads yield NULL stats — corrupt files must not kill a 100 TB
-    stage."""
+    payloads yield NULL stats."""
     import numpy as np
 
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
+    def stats(p):
+        parsed = _decode_rgb(p)
+        if parsed is None:
+            return None
+        w, h, rgb = parsed
+        r, g, b = (float(m) for m in rgb.reshape(-1, 3).mean(axis=0, dtype=np.float64))
+        return w, h, r, g, b, float(0.299 * r + 0.587 * g + 0.114 * b)
+
+    return map_rows(
+        df,
+        [
             T.StructField("width", T.IntegerType()),
             T.StructField("height", T.IntegerType()),
             T.StructField("mean_r", T.DoubleType()),
             T.StructField("mean_g", T.DoubleType()),
             T.StructField("mean_b", T.DoubleType()),
             T.StructField("mean_luma", T.DoubleType()),
-        ]
+        ],
+        stats,
+        [binary_col],
     )
-    stat_cols = [f.name for f in out_schema.fields[len(df.schema.fields) :]]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            stats = []
-            for p in pdf[binary_col]:
-                raw = bytes(p) if p is not None else None
-                parsed = None
-                if raw is not None:
-                    parsed = _parse_bmp(raw)
-                    if parsed is None:
-                        parsed = _parse_png(raw)
-                if parsed is None:
-                    stats.append((None,) * 6)
-                    continue
-                w, h, rgb = parsed
-                means = rgb.reshape(-1, 3).mean(axis=0, dtype=np.float64)
-                luma = float(
-                    0.299 * means[0] + 0.587 * means[1] + 0.114 * means[2]
-                )
-                stats.append((w, h, float(means[0]), float(means[1]),
-                              float(means[2]), luma))
-            out = pdf.copy()
-            for i, c in enumerate(stat_cols):
-                out[c] = [s[i] for s in stats]
-            yield out
-
-    return df.mapInPandas(kernel, out_schema)
 
 
 def synthesize_bmp_payloads(
@@ -813,23 +751,12 @@ def synthesize_bmp_payloads(
 
     so channel means are analytically computable in SQL (integer
     sums — exact in doubles)."""
-    import numpy as np
-
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(payload_col, T.BinaryType())]
+    return map_rows(
+        df,
+        [T.StructField(payload_col, T.BinaryType())],
+        lambda v: (_write_bmp(_gradient_rgb(int(v))),),
+        [id_col],
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = pdf.copy()
-            out[payload_col] = [
-                _write_bmp(_gradient_rgb(int(v))) for v in pdf[id_col]
-            ]
-            yield out
-
-    return df.mapInPandas(kernel, out_schema)
 
 
 def _gradient_rgb(i: int):
@@ -985,46 +912,23 @@ def synthesize_noise_wav_payloads(
     gain+1 ∈ 1..4 (|s| ≤ 4·8192 < 2¹⁵, no clipping): a loudness
     change that plants EXACT-fingerprint near-duplicates of the same
     seed, exercising the fingerprint's loudness invariance."""
-    import hashlib as _hl
-    import io
-    import wave
-
     import numpy as np
 
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(payload_col, T.BinaryType())]
-    )
-
-    def _noise_pcm(seed: int, gain: int) -> bytes:
+    def noise_wav(seed, gain=0):
+        seed, gain = int(seed), int(gain)
         us = np.empty(n_samples, dtype=np.int64)
         for blk in range((n_samples + 7) // 8):
-            d = _hl.md5(f"{seed}:{blk}".encode()).digest()
+            d = hashlib.md5(f"{seed}:{blk}".encode()).digest()
             for j in range(min(8, n_samples - blk * 8)):
                 us[blk * 8 + j] = d[2 * j] + 256 * d[2 * j + 1]
-        x = ((us // 4) - 8192) * gain
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(sample_rate)
-            w.writeframes(x.astype("<i2").tobytes())
-        return buf.getvalue()
+        return (_write_wav(((us // 4) - 8192) * (gain + 1), sample_rate),)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            gains = (
-                pdf[gain_col] if gain_col is not None else [0] * len(pdf)
-            )
-            out = pdf.copy()
-            out[payload_col] = [
-                _noise_pcm(int(s), int(g) + 1)
-                for s, g in zip(pdf[seed_col], gains)
-            ]
-            yield out
-
-    return df.mapInPandas(kernel, out_schema)
+    return map_rows(
+        df,
+        [T.StructField(payload_col, T.BinaryType())],
+        noise_wav,
+        [seed_col] + ([gain_col] if gain_col is not None else []),
+    )
 
 
 def synthesize_noise_png_payloads(
@@ -1046,39 +950,25 @@ def synthesize_noise_png_payloads(
     int) adds min(r + shift, 255) to the red channel: a global
     brightness perturbation that plants NEAR-duplicates (hamming ≈ 0
     to a few bits) of the same seed."""
-    import hashlib as _hl
+    import numpy as np
 
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(payload_col, T.BinaryType())]
-    )
-
-    def _noise_rgb(seed: int, shift: int):
-        import numpy as np
-
+    def noise_png(seed, shift=0):
+        seed, shift = int(seed), int(shift)
         px = np.empty((size, size, 3), dtype=np.uint8)
         for y in range(size):
             for x in range(size):
-                d = _hl.md5(f"{seed}:{x}:{y}".encode()).digest()
+                d = hashlib.md5(f"{seed}:{x}:{y}".encode()).digest()
                 px[y, x, 0] = min(d[0] + shift, 255)
                 px[y, x, 1] = d[1]
                 px[y, x, 2] = d[2]
-        return px
+        return (_write_png(px),)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            shifts = (
-                pdf[shift_col] if shift_col is not None else [0] * len(pdf)
-            )
-            out = pdf.copy()
-            out[payload_col] = [
-                _write_png(_noise_rgb(int(s), int(sh)))
-                for s, sh in zip(pdf[seed_col], shifts)
-            ]
-            yield out
-
-    return df.mapInPandas(kernel, out_schema)
+    return map_rows(
+        df,
+        [T.StructField(payload_col, T.BinaryType())],
+        noise_png,
+        [seed_col] + ([shift_col] if shift_col is not None else []),
+    )
 
 
 def synthesize_png_payloads(
@@ -1088,21 +978,12 @@ def synthesize_png_payloads(
     closed-form gradient written as a REAL zlib-compressed PNG, so
     the decode path through inflate + unfilter is exercised end-to-end
     against the same analytic oracle."""
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(payload_col, T.BinaryType())]
+    return map_rows(
+        df,
+        [T.StructField(payload_col, T.BinaryType())],
+        lambda v: (_write_png(_gradient_rgb(int(v))),),
+        [id_col],
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = pdf.copy()
-            out[payload_col] = [
-                _write_png(_gradient_rgb(int(v))) for v in pdf[id_col]
-            ]
-            yield out
-
-    return df.mapInPandas(kernel, out_schema)
 
 
 def audio_chunks(
@@ -1227,39 +1108,28 @@ def resize_images(
     truecolor PNG payloads: stdlib/numpy decode → nearest-neighbor
     resample → BMP re-encode (the standard thumbnail/normalize step
     before feature extraction). Other formats (JPEG needs a DCT
-    codec) pass through as NULL — corrupt files must not kill the
-    stage. ``fake=True`` keeps the legacy identity passthrough for
-    generic plumbing tests."""
+    codec) pass through as NULL. ``fake=True`` keeps the legacy
+    identity passthrough for generic plumbing tests."""
     import numpy as np
 
-    schema = df.schema
     tw, th = int(size[0]), int(size[1])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if fake:
-                yield pdf
-                continue
-            if pdf.empty:
-                continue
-            out = pdf.copy()
-            resized = []
-            for p in pdf[binary_col]:
-                raw = bytes(p) if p is not None else None
-                parsed = None
-                if raw is not None:
-                    parsed = _parse_bmp(raw) or _parse_png(raw)
-                if parsed is None:
-                    resized.append(None)
-                    continue
-                w, h, rgb = parsed
-                xi = (np.arange(tw) * w) // tw  # nearest-neighbor grid
-                yi = (np.arange(th) * h) // th
-                resized.append(_write_bmp(rgb[yi][:, xi]))
-            out[binary_col] = resized
-            yield out
+    def resize(p):
+        parsed = _decode_rgb(p)
+        if parsed is None:
+            return None
+        w, h, rgb = parsed
+        xi = (np.arange(tw) * w) // tw  # nearest-neighbor grid
+        yi = (np.arange(th) * h) // th
+        return (_write_bmp(rgb[yi][:, xi]),)
 
-    return df.mapInPandas(kernel, schema)
+    return map_rows(
+        df,
+        [df.schema[binary_col]],
+        (lambda p: (p,)) if fake else resize,
+        [binary_col],
+        keep=[c for c in df.columns if c != binary_col],
+    ).select(*df.columns)
 
 
 def sample_frames(

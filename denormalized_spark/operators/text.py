@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from denormalized_spark.operators._hashing import md5_unit
 from denormalized_spark.operators._memo import memo_column
+from denormalized_spark.operators._rows import map_rows
 
 #: Minimal English stopword list used by the quality / language-ID
 #: heuristics. Deliberately small and frozen: it is part of the
@@ -604,7 +605,9 @@ def _bpe_word_kernel(merges: list[tuple[str, str]], finish):
     :func:`bpe_encode_counts`' fold chain. A merge (a, b) can only fire
     when a+b is a substring of the word, so that O(len) prefilter skips
     almost all of a large table. Results are cached per distinct word
-    for the life of the returned function (one partition's batches)."""
+    for the life of the returned function: shipped inside a
+    :func:`~denormalized_spark.operators._rows.map_rows` row function,
+    that is one cache per task, kept across the task's batches."""
     merge_list = [(a, b, a + b) for a, b in merges]
     cache = {}
 
@@ -654,38 +657,29 @@ def bpe_encode_table(
 
     Words containing the \\x01/\\x02 sentinels are excluded, matching
     :func:`bpe_train`'s vocabulary contract."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    from pyspark.sql.types import IntegerType, StructField
 
-    out_schema = StructType(
+    word_tokens = _bpe_word_kernel(merges, len)
+
+    def encode(text):
+        words = _bpe_words(text)
+        return (
+            len(words),
+            sum(len(w) for w in words),
+            sum(word_tokens(w) for w in words),
+        )
+
+    return map_rows(
+        df,
         [
-            df.schema[id_col],
             StructField("n_words", IntegerType(), False),
             StructField("n_chars", IntegerType(), False),
             StructField("n_bpe_tokens", IntegerType(), False),
-        ]
+        ],
+        encode,
+        [text_col],
+        keep=[id_col],
     )
-    def _encode_batches(batches):
-        import pandas as pd
-
-        word_tokens = _bpe_word_kernel(merges, len)
-        for pdf in batches:
-            ids, n_words, n_chars, n_toks = [], [], [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                words = _bpe_words(text)
-                ids.append(i)
-                n_words.append(len(words))
-                n_chars.append(sum(len(w) for w in words))
-                n_toks.append(sum(word_tokens(w) for w in words))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "n_words": n_words,
-                    "n_chars": n_chars,
-                    "n_bpe_tokens": n_toks,
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(_encode_batches, out_schema)
 
 
 def corpus_alphabet(df: DataFrame, text_col: str = "text") -> list[str]:
@@ -772,42 +766,27 @@ def bpe_tokenize(
     :func:`bpe_train`'s vocabulary contract (reference parity: the
     reference has no tokenizer induction at all — this extends its
     text surface per the LLM-pipeline brief)."""
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import ArrayType, IntegerType, StructField
 
     vocab = bpe_vocab(merges, alphabet)
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("n_tokens", IntegerType(), False),
-            StructField("token_ids", ArrayType(IntegerType(), False), False),
-        ]
+    word_ids = _bpe_word_kernel(
+        merges, lambda pieces: tuple(vocab.get(s, unk_id) for s in pieces)
     )
 
-    def _tokenize_batches(batches):
-        import pandas as pd
+    def tokenize(text):
+        ids = [i for w in _bpe_words(text) for i in word_ids(w)]
+        return len(ids), ids
 
-        word_ids = _bpe_word_kernel(
-            merges, lambda pieces: tuple(vocab.get(s, unk_id) for s in pieces)
-        )
-        for pdf in batches:
-            out_ids, n_toks, doc_ids = [], [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                ids: list[int] = []
-                for w in _bpe_words(text):
-                    ids.extend(word_ids(w))
-                doc_ids.append(i)
-                n_toks.append(len(ids))
-                out_ids.append(ids)
-            yield pd.DataFrame(
-                {id_col: doc_ids, "n_tokens": n_toks, "token_ids": out_ids}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(_tokenize_batches, out_schema)
+    return map_rows(
+        df,
+        [
+            StructField("n_tokens", IntegerType(), False),
+            StructField("token_ids", ArrayType(IntegerType(), False), False),
+        ],
+        tokenize,
+        [text_col],
+        keep=[id_col],
+    )
 
 
 def pack_token_sequences(

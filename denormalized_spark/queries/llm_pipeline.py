@@ -3346,6 +3346,12 @@ def _bpe_pack_oracle(num_merges: int, max_vocab: int, seq_len: int) -> str:
     )
 
 
+def _trained_merges(d: DataFrame) -> list[tuple[str, str]]:
+    """The 6-merge table the BPE lanes train on ``d``, in rank order."""
+    rows = text.bpe_train(d, num_merges=6, max_vocab=2000).collect()
+    return [(r["sym_a"], r["sym_b"]) for r in sorted(rows, key=lambda r: r["rank"])]
+
+
 @q("text_bpe_pack_sequences", _bpe_pack_oracle(6, 2000, 128), eager=True)
 def text_bpe_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     """The shard MATERIALIZER (operators/text.pack_token_sequences):
@@ -3356,11 +3362,7 @@ def text_bpe_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     with pack_documents (offset report) and bpe_tokenize (ids) this
     completes train → tokenize → shard."""
     d = t(spark, sf, "documents")
-    merge_rows = text.bpe_train(d, num_merges=6, max_vocab=2000).collect()
-    merges = [
-        (r["sym_a"], r["sym_b"])
-        for r in sorted(merge_rows, key=lambda r: r["rank"])
-    ]
+    merges = _trained_merges(d)
     toks = text.bpe_tokenize(d, merges, text.corpus_alphabet(d))
     packed = text.pack_token_sequences(toks, 128)
     return packed.select(
@@ -3383,11 +3385,7 @@ def text_bpe_tokenize_ids(spark: SparkSession, sf: str) -> DataFrame:
     cache; the oracle replays id assignment and the greedy encode via
     the same unrolled-CTE machinery as text_bpe_encode."""
     d = t(spark, sf, "documents")
-    merge_rows = text.bpe_train(d, num_merges=6, max_vocab=2000).collect()
-    merges = [
-        (r["sym_a"], r["sym_b"])
-        for r in sorted(merge_rows, key=lambda r: r["rank"])
-    ]
+    merges = _trained_merges(d)
     alphabet = text.corpus_alphabet(d)
     out = text.bpe_tokenize(d, merges, alphabet)
     return out.select(
@@ -3408,8 +3406,7 @@ def text_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
     Training is the vocab-bounded loop of text_bpe_train; encoding is
     one scan, zero shuffles (the merge table is literals)."""
     d = t(spark, sf, "documents")
-    merge_rows = text.bpe_train(d, num_merges=6, max_vocab=2000).collect()
-    merges = [(r["sym_a"], r["sym_b"]) for r in sorted(merge_rows, key=lambda r: r["rank"])]
+    merges = _trained_merges(d)
     out = text.bpe_encode_counts(d, merges)
     return out.select(
         "doc_id",
@@ -3431,11 +3428,7 @@ def text_bpe_encode_full(spark: SparkSession, sf: str) -> DataFrame:
     kernel's bit-parity proof with the zero-Python chain; throughput
     at a ≥1k-merge table is measured in bench (bpe_encode_docs_per_sec)."""
     d = t(spark, sf, "documents")
-    merge_rows = text.bpe_train(d, num_merges=6, max_vocab=2000).collect()
-    merges = [
-        (r["sym_a"], r["sym_b"])
-        for r in sorted(merge_rows, key=lambda r: r["rank"])
-    ]
+    merges = _trained_merges(d)
     out = text.bpe_encode_table(d, merges)
     return out.select(
         "doc_id",
@@ -3845,6 +3838,15 @@ def _ivf_pq_oracle(
     )
 
 
+def _query_vector(e: DataFrame) -> list[float]:
+    """The embedding of ``vec_id == 0``, collected as the literal query
+    vector of the top-k and MMR lanes."""
+    return [
+        float(x)
+        for x in e.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
+    ]
+
+
 @q("sim_ivf_pq_topk", _ivf_pq_oracle(), eager=True)
 def sim_ivf_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     """The COMPOSED production retrieval path
@@ -3860,10 +3862,7 @@ def sim_ivf_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     assigned = similarity.assign_clusters(e, cent, "vec_id", "embedding")
     books = similarity.pq_codebooks_from_labels(e, m=4, dim=64)
     enc = similarity.pq_encode(assigned, books)
-    qvec = [
-        float(x)
-        for x in e.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    ]
+    qvec = _query_vector(e)
     return similarity.ivf_pq_topk(
         enc.filter(F.col("vec_id") != 0), cent, books, qvec, k=10, nprobe=3
     )
@@ -3884,10 +3883,7 @@ def sim_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     e = t(spark, sf, "embeddings")
     books = similarity.pq_codebooks_from_labels(e, m=4, dim=64)
     enc = similarity.pq_encode(e, books)
-    qvec = [
-        float(x)
-        for x in e.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    ]
+    qvec = _query_vector(e)
     return similarity.pq_topk(
         enc.filter(F.col("vec_id") != 0), books, qvec, k=10
     )
@@ -6264,8 +6260,7 @@ def sim_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
     from denormalized_spark.operators.similarity import mmr_select
 
     e = t(spark, sf, "embeddings")
-    qv = e.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    return mmr_select(e.filter(F.col("vec_id") != 0), list(qv), k=8)
+    return mmr_select(e.filter(F.col("vec_id") != 0), _query_vector(e), k=8)
 
 
 def _recall_curve_oracle(ks=(1, 5, 10, 20)) -> str:

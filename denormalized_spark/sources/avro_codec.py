@@ -32,7 +32,11 @@ from __future__ import annotations
 
 import json
 import struct
-from typing import Any, Iterator
+from typing import Any
+
+from pyspark.sql import types as T
+
+from denormalized_spark.operators._rows import map_rows
 
 _PRIMITIVES = {
     "null",
@@ -46,13 +50,13 @@ _PRIMITIVES = {
 }
 
 _SPARK_TYPES = {
-    "boolean": "boolean",
-    "int": "int",
-    "long": "long",
-    "float": "float",
-    "double": "double",
-    "bytes": "binary",
-    "string": "string",
+    "boolean": T.BooleanType(),
+    "int": T.IntegerType(),
+    "long": T.LongType(),
+    "float": T.FloatType(),
+    "double": T.DoubleType(),
+    "bytes": T.BinaryType(),
+    "string": T.StringType(),
 }
 
 
@@ -86,14 +90,6 @@ def parse_schema(avro_schema: str | dict) -> list[tuple[str, str, bool]]:
     return [
         (f["name"], *_field_type(f["type"])) for f in s["fields"]
     ]
-
-
-def spark_ddl(avro_schema: str | dict) -> str:
-    """The Spark DDL schema string for the decoded record."""
-    return ", ".join(
-        f"{name} {_SPARK_TYPES[prim]}"
-        for name, prim, _ in parse_schema(avro_schema)
-    )
 
 
 # -- binary primitives ------------------------------------------------
@@ -205,28 +201,27 @@ def decode_record(
 
 
 def decode_avro_python(raw, avro_schema: str, value_col: str = "value"):
-    """``(value binary)`` → typed columns via the pure-Python codec in
-    ``mapInPandas`` (Arrow batches, no per-row pickling). Corrupt
-    payloads yield a NULL row, not a task death — the 100 TB posture
-    used by the multimodal decoders. Column order/types mirror the
-    JVM ``from_avro`` path exactly (parity-tested)."""
-    import pandas as pd
-
+    """``(value binary)`` → typed columns via the pure-Python codec,
+    run per row by :func:`~denormalized_spark.operators._rows.map_rows`
+    (Arrow batches, no per-row pickling). A corrupt payload decodes to
+    ``None``, which ``map_rows`` turns into a NULL row — the same rule
+    as the multimodal decoders. Column order/types mirror the JVM
+    ``from_avro`` path exactly (parity-tested)."""
     fields = parse_schema(avro_schema)
-    names = [f[0] for f in fields]
-    ddl = spark_ddl(avro_schema)
 
-    def _decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for payload in pdf[value_col]:
-                try:
-                    rows.append(decode_record(fields, bytes(payload)))
-                except Exception:
-                    rows.append({n: None for n in names})
-            yield pd.DataFrame(rows, columns=names)
+    def decode(payload):
+        try:
+            return tuple(decode_record(fields, bytes(payload)).values())
+        except Exception:  # corrupt or NULL payload
+            return None
 
-    return raw.select(value_col).mapInPandas(_decode, ddl)
+    return map_rows(
+        raw,
+        [T.StructField(name, _SPARK_TYPES[prim]) for name, prim, _ in fields],
+        decode,
+        [value_col],
+        keep=[],
+    )
 
 
 def encode_avro_python(df, avro_schema: str):
@@ -237,12 +232,8 @@ def encode_avro_python(df, avro_schema: str):
     fields = parse_schema(avro_schema)
     names = [f[0] for f in fields]
 
-    def _encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            vals = [
-                encode_record(fields, {n: (None if pd.isna(r[n]) else r[n]) for n in names})
-                for r in pdf[names].to_dict("records")
-            ]
-            yield pd.DataFrame({"value": vals})
+    def encode(*values):
+        row = {n: None if pd.isna(v) else v for n, v in zip(names, values)}
+        return (encode_record(fields, row),)
 
-    return df.mapInPandas(_encode, "value binary")
+    return map_rows(df, [T.StructField("value", T.BinaryType())], encode, names, keep=[])

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from denormalized_spark.operators import multimodal
+from denormalized_spark.sources.avro_codec import decode_avro_python
 
 
 @pytest.fixture(scope="module")
@@ -843,3 +844,114 @@ class TestAudioNearGate:
         assert {r["clip_id"] for r in out.df.collect()} == {1, 3, 99}
         with pytest.raises(ValueError, match="event-time"):
             DataStream(clips).near_dedup_audio("clip_id")
+
+
+def _corrupt_payloads() -> dict:
+    """One of each way a media payload arrives broken."""
+    import io
+    import wave
+
+    import numpy as np
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(8000)
+        w.writeframes(np.arange(8, dtype="<i2").tobytes())
+    wav = buf.getvalue()  # 44-byte header, 8 frames of 16-bit PCM
+    return {
+        "null": None,
+        "empty": b"",
+        "junk": b"\x00junk\xffbytes" * 3,
+        "bmp_header": multimodal._write_bmp(multimodal._gradient_rgb(3))[:30],
+        "zero_width_png": multimodal._write_png(np.zeros((4, 0, 3), np.uint8)),
+        "wav_header": wav[:20],
+        "wav_pcm": wav[:47],  # header intact, PCM cut mid-sample
+    }
+
+
+_AVRO_SCHEMA = (
+    '{"type": "record", "name": "r", "fields": ['
+    '{"name": "a", "type": "long"}, {"name": "s", "type": "string"}]}'
+)
+
+#: op → (DataFrame → decoded DataFrame, the columns it derives)
+_DECODERS = {
+    "image_stats": (
+        multimodal.image_stats,
+        ["width", "height", "mean_r", "mean_g", "mean_b", "mean_luma"],
+    ),
+    "image_features": (multimodal.image_features, ["features"]),
+    "image_phash": (multimodal.image_phash, ["phash_hi", "phash_lo"]),
+    "resize_images": (lambda df: multimodal.resize_images(df, size=(4, 4)), ["payload"]),
+    "audio_features": (
+        multimodal.audio_features,
+        ["sample_rate", "n_channels", "n_samples", "duration_ms", "rms", "peak",
+         "zero_crossings"],
+    ),
+    "audio_fingerprint": (multimodal.audio_fingerprint, ["fp_hi", "fp_lo"]),
+    "audio_chunks_wav": (
+        lambda df: multimodal.audio_chunks(df, codec="wav"), ["chunk", "chunk_hash"]
+    ),
+    "decode_avro_python": (
+        lambda df: decode_avro_python(
+            df.select(F.col("payload").alias("value")), _AVRO_SCHEMA
+        ),
+        ["a", "s"],
+    ),
+}
+
+#: (op, payload) → the derived values that survive: a WAV whose header
+#: parses keeps its header fields, and the chunker slices PCM bytes
+#: without decoding samples, so a cut-short data chunk still chunks
+_SURVIVORS = {
+    ("audio_features", "wav_pcm"): {
+        "sample_rate": 8000, "n_channels": 1, "n_samples": 8, "duration_ms": 1.0,
+    },
+    ("audio_chunks_wav", "wav_pcm"): {
+        "chunk": b"\x00\x00\x01",
+        "chunk_hash": hashlib.md5(b"\x00\x00\x01").hexdigest(),
+    },
+}
+
+
+@pytest.mark.parametrize("op", sorted(_DECODERS))
+def test_corrupt_payloads_decode_to_null(spark, op):
+    """Every decoder turns every broken payload into NULL derived
+    columns; no task fails. (Avro decode returns only the decoded
+    fields, so its rows are checked without their payload names.)"""
+    payloads = _corrupt_payloads()
+    names = list(payloads)
+    df = spark.createDataFrame(
+        list(enumerate(payloads.values())), "doc_id long, payload binary"
+    )
+    build, derived = _DECODERS[op]
+    rows = [r.asDict() for r in build(df).collect()]
+    assert len(rows) == len(names)
+    for r in rows:
+        payload = names[r["doc_id"]] if "doc_id" in r else None
+        kept = _SURVIVORS.get((op, payload), {})
+        for c in derived:
+            assert r[c] == kept.get(c), (payload, c, r[c])
+
+
+def test_row_maps_share_one_scaffold():
+    """Every per-row Python map runs through operators._rows.map_rows;
+    only the two fan-out kernels call mapInPandas themselves."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(multimodal.__file__).resolve().parents[1]
+    sites = [
+        f"{path.relative_to(pkg).as_posix()}:{getattr(top, 'name', '<module>')}"
+        for path in sorted(pkg.rglob("*.py"))
+        for top in ast.parse(path.read_text()).body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Attribute) and node.attr == "mapInPandas"
+    ]
+    assert sites == [
+        "operators/_rows.py:map_rows",
+        "operators/multimodal.py:audio_chunks",
+        "operators/multimodal.py:sample_frames",
+    ], sites
