@@ -30,7 +30,9 @@ def _configure(spark: SparkSession) -> SparkSession:
     events.ts as TIMESTAMP_NTZ while the test suite sees TIMESTAMP.
     The shuffle/state partition count and the checkpoint file manager
     are derived from this session by the same function get_spark
-    uses."""
+    uses. Static confs are skipped, so a driver-built session keeps its
+    own codegen class-cache size (``spark.sql.codegen.cache.maxEntries``
+    in session._DEFAULTS)."""
     from denormalized_spark.session import RUNTIME_CONF, apply_session_defaults
 
     for k, v in RUNTIME_CONF.items():

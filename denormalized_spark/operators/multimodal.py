@@ -1005,10 +1005,12 @@ def audio_chunks(
     PCM; chunk boundaries come from ``sample_rate × bytes_per_sample
     × chunk_ms/1000``. ``codec="wav"``: REAL stdlib-``wave`` decode —
     each file's own geometry (rate/width/channels) drives its chunk
-    size and the chunks contain decoded PCM; unparseable payloads pass
-    through as a single NULL-hash chunk. Other codecs (mp3/ogg) need
-    ffmpeg and raise. Fan-out: rows × ceil(len/chunk_bytes); size
-    partitions for the POST-explode volume at scale."""
+    size and the chunks contain decoded PCM; unparseable payloads, and
+    PCM that is not a whole number of frames (undecodable for
+    :func:`audio_features` too), pass through as a single NULL-hash
+    chunk. Other codecs (mp3/ogg) need ffmpeg and raise. Fan-out:
+    rows × ceil(len/chunk_bytes); size partitions for the POST-explode
+    volume at scale."""
     import numpy as np
 
     out_schema = T.StructType(
@@ -1038,8 +1040,8 @@ def audio_chunks(
                 raw = bytes(p) if p is not None else b""
                 if codec == "wav":
                     parsed = _parse_wav(raw)
-                    if parsed is None:
-                        pcms.append(None)
+                    if parsed is None or len(parsed[4]) % (parsed[1] * parsed[2]):
+                        pcms.append(None)  # unparseable, or PCM cut mid-frame
                         chunk_sizes.append(1)
                         continue
                     sr, ch, sw, _, pcm = parsed

@@ -5985,7 +5985,13 @@ def _wordpiece_oracle(num_merges: int, max_vocab: int) -> str:
     round structure (pair-count CTE + argmax + sentinel-replace vocab
     rewrite) extended with the WordPiece unit-count CTE per round and
     the e12-quantized likelihood score ordering — the identical IEEE
-    double floor both engines compute."""
+    double floor both engines compute.
+
+    Every vocabulary CTE ``v{i}`` is ``MATERIALIZED``: round i reads it
+    three times (unit counts, pair counts, the next rewrite), and
+    DuckDB 1.0 inlines a plain CTE at each reference, so six rounds
+    re-evaluated ``v1`` hundreds of times (not done after 2 minutes at
+    sf0.001, against 0.2 s materialized)."""
     enc = (
         "list_aggregate(list_transform(syms, s -> chr(1)||s||chr(2)), "
         "'string_agg', '')"
@@ -5999,7 +6005,7 @@ def _wordpiece_oracle(num_merges: int, max_vocab: int) -> str:
       GROUP BY word
       ORDER BY wcount DESC, word ASC LIMIT {max_vocab}
     ),
-    v1 AS (SELECT word, wcount,
+    v1 AS MATERIALIZED (SELECT word, wcount,
                   [word[j] for j in range(1, length(word)+1)] AS syms
            FROM w)"""
     ]
@@ -6024,7 +6030,7 @@ def _wordpiece_oracle(num_merges: int, max_vocab: int) -> str:
       ORDER BY score_e12 DESC, a ASC, b ASC LIMIT 1)""")
         if i < num_merges:
             parts.append(f""",
-    v{i + 1} AS (
+    v{i + 1} AS MATERIALIZED (
       SELECT word, wcount,
         list_filter(list_transform(string_split(
             replace({enc},

@@ -36,6 +36,22 @@ cluster. These defaults are chosen so the same code runs on
     ``s3a``, ...) keeps Spark's default manager. One ``chmod`` child
     per created file remains: Hadoop sets local file permissions
     through a process when its native IO is missing.
+- ``spark.sql.codegen.cache.maxEntries`` is 1,000 (Spark's default is
+  100). Every plan's whole-stage and expression code is compiled by
+  Janino into a class, and Spark keeps compiled classes in one
+  JVM-wide cache keyed on the generated source. One pass over the 8
+  ``perfbench`` batch lanes uses ~130 distinct classes and one over
+  the 22 ``bench.py`` headline lanes 277, so at 100 the cache thrashes
+  and every warm pass recompiles most of them (~120 and ~285 classes
+  on 4 cores, at 1,000 none). A stream reuses its generated code
+  across micro-batches: once the README window pipeline has run
+  (~30 classes), the micro-batches after a drain's first compile
+  nothing, at either size.
+  1,000 holds the headline working set 3.6 times over and costs no
+  measurable metaspace (164 MB after 4 passes of the 22 lanes, 170 MB
+  at 100: evicted classes stay loaded until collected). The conf is
+  static: only the session that starts the JVM sets it, and
+  ``extra_conf`` overrides it.
 - UTC session timezone: parquet/DuckDB timestamps are UTC-naive;
   pinning the session TZ makes event-time arithmetic deterministic.
 - Arrow enabled: every Python-boundary crossing (pandas UDFs,
@@ -83,6 +99,9 @@ _DEFAULTS = {
     # cluster this is spark.executor.memory territory instead. Only
     # effective at JVM launch (first session build).
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    # Room for the registry's generated classes (module docstring).
+    # Static, so it cannot go in RUNTIME_CONF.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

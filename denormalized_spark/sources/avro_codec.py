@@ -34,6 +34,7 @@ import json
 import struct
 from typing import Any
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from denormalized_spark.operators._rows import map_rows
@@ -226,14 +227,21 @@ def decode_avro_python(raw, avro_schema: str, value_col: str = "value"):
 
 def encode_avro_python(df, avro_schema: str):
     """Typed columns → ``(value binary)`` rows with the pure-Python
-    encoder — the fallback twin of ``to_avro(struct(*))``."""
+    encoder — the fallback twin of ``to_avro(struct(*))``. Integral
+    fields reach Python as strings, which ``encode_value`` parses back
+    exactly: ``mapInPandas`` hands a long column holding a NULL over as
+    float64, which rounds longs above 2**53."""
     import pandas as pd
 
     fields = parse_schema(avro_schema)
     names = [f[0] for f in fields]
+    src = df.select(
+        *(F.col(n).cast("string").alias(n) if prim in ("int", "long") else F.col(n)
+          for n, prim, _ in fields)
+    )
 
     def encode(*values):
         row = {n: None if pd.isna(v) else v for n, v in zip(names, values)}
         return (encode_record(fields, row),)
 
-    return map_rows(df, [T.StructField("value", T.BinaryType())], encode, names, keep=[])
+    return map_rows(src, [T.StructField("value", T.BinaryType())], encode, names, keep=[])

@@ -28,6 +28,15 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def compiled_classes(spark):
+    """Callable: the number of classes Janino has compiled in this JVM
+    so far (Spark's ``CodegenMetrics`` compile counter; a codegen
+    cache hit does not count)."""
+    metrics = getattr(spark._jvm, "org.apache.spark.metrics.source.CodegenMetrics")
+    return metrics.METRIC_COMPILATION_TIME().getCount
+
+
+@pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
 

@@ -241,6 +241,23 @@ class TestAvroRoundTrip:
         got = sorted(map(tuple, decoded.collect()))
         assert got == [(1, "s1", 1.5), (2, "s2", None), (3, None, -2.25)]
 
+    def test_avro_python_round_trip_keeps_exact_longs(self, spark):
+        """A nullable long above 2**53 in a batch that also holds a
+        NULL survives encode → decode exactly (pandas would carry that
+        column as float64 and round 2**53 + 1 to 2**53)."""
+        from denormalized_spark.sources.avro_codec import (
+            decode_avro_python,
+            encode_avro_python,
+        )
+
+        avro_schema = json.dumps(
+            {"type": "record", "name": "r", "fields": [{"name": "b", "type": ["null", "long"]}]}
+        )
+        values = [2**53 + 1, None, -(2**63), 2**63 - 1]
+        df = spark.createDataFrame([(v,) for v in values], "b long").coalesce(1)
+        got = decode_avro_python(encode_avro_python(df, avro_schema), avro_schema)
+        assert sorted((r.b for r in got.collect()), key=str) == sorted(values, key=str)
+
     def test_avro_corrupt_payload_yields_null_row(self, spark):
         """A truncated payload must NULL-row, not kill the task — the
         multimodal decoders' 100 TB posture."""

@@ -903,15 +903,11 @@ _DECODERS = {
 }
 
 #: (op, payload) → the derived values that survive: a WAV whose header
-#: parses keeps its header fields, and the chunker slices PCM bytes
-#: without decoding samples, so a cut-short data chunk still chunks
+#: parses keeps its header fields (the chunker, like the decoders,
+#: gives a cut-short data chunk its NULL row)
 _SURVIVORS = {
     ("audio_features", "wav_pcm"): {
         "sample_rate": 8000, "n_channels": 1, "n_samples": 8, "duration_ms": 1.0,
-    },
-    ("audio_chunks_wav", "wav_pcm"): {
-        "chunk": b"\x00\x00\x01",
-        "chunk_hash": hashlib.md5(b"\x00\x00\x01").hexdigest(),
     },
 }
 

@@ -35,9 +35,11 @@ def test_every_query_has_an_oracle(entry):
 
 def test_every_oracle_plans_in_duckdb(entry, con):
     # Typos are caught by the BINDER, which runs before optimization —
-    # and the optimizer is ~95 % of EXPLAIN cost on the unrolled-CTE
-    # monsters (text_wordpiece_train alone: 474 s optimized, <10 s
-    # unoptimized; the whole sweep 610 s → ~35 s). Disabling every
+    # and the optimizer is most of EXPLAIN cost on the unrolled-CTE
+    # monsters (sim_mmr_rerank alone: 179 s optimized, 18 s
+    # unoptimized; the whole sweep 225 s → 39 s on 4 cores).
+    # text_wordpiece_train took 474 s optimized until its vocabulary
+    # CTEs were marked MATERIALIZED (now under 1 s). Disabling every
     # optimizer keeps full 315-oracle validation at unit-test speed.
     opts = ",".join(
         r[0] for r in con.execute("SELECT name FROM duckdb_optimizers()").fetchall()

@@ -252,6 +252,23 @@ def test_perfbench_lanes_build_without_jobs(spark, sf_dir):
     assert {k: v for k, v in ran.items() if v} == {}
 
 
+def test_perfbench_lanes_rerun_without_compiling(spark, sf_dir, compiled_classes):
+    """A second round of the 8 perfbench lanes finds every generated
+    class in Spark's codegen cache: the cache holds the lanes' ~130
+    classes (at Spark's default of 100 the second round recompiled
+    121)."""
+    from denormalized_spark.queries import QUERIES
+
+    def one_round() -> int:
+        before = compiled_classes()
+        for lane in _perfbench_lanes():
+            QUERIES[lane](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return compiled_classes() - before
+
+    one_round()
+    assert one_round() == 0
+
+
 @pytest.mark.slow
 def test_registry_builds_match_eager_marks(spark, sf_dir):
     """Every non-eager registry query builds without a Spark job once

@@ -119,8 +119,7 @@ def run_oracle_subprocess(name: str, sql: str, sf_dir: str) -> pd.DataFrame:
                 [sys.executable, runner, sf_dir, tmp.name],
                 input=sql.encode(),
                 capture_output=True,
-                # headroom above the heaviest oracle (text_wordpiece_train:
-                # ~570 s at 32 threads, idle box) under co-running load
+                # headroom above the heaviest oracle under co-running load
                 timeout=3000,
             )
             if proc.returncode == 0:
